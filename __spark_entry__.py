@@ -900,7 +900,8 @@ def q_chain_components(spark, sf_dir):
     """Distributed CC validated against a window oracle: edges chain
     consecutive doc_ids within (lang, source), so every (lang, source) group
     is one component whose id is its min doc_id.  Path graphs are the
-    worst case for label propagation — exercises the pointer-jumping path."""
+    worst case for round-based CC and for a union-find without path
+    compression."""
     from levsim.clustering import connected_components
 
     d = _docs(spark, sf_dir)

@@ -19,6 +19,8 @@ Scale analysis (the part that must survive 100 TB):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -112,8 +114,6 @@ def candidate_pairs(
     # Scale-adaptive: derives from the cluster's total cores; override
     # with LEVSIM_PAIR_PARTITIONS where pair volume demands byte-based
     # sizing instead.
-    import os
-
     n_part = int(os.environ.get("LEVSIM_PAIR_PARTITIONS", "0")) or (
         pairs.sparkSession.sparkContext.defaultParallelism * 2
     )

@@ -1,104 +1,94 @@
-"""Transitive closure: distributed connected components over matched pairs.
+"""Transitive closure over matched pairs, plus correlation-clustering
+alternatives and cluster diagnostics.
 
-Algorithm: iterative minimum-label propagation with pointer jumping (the
-DataFrame form of hash-to-min + path compression, cf. Kiveris et al.,
-"Connected Components in MapReduce and Beyond" — public).  Each round every
-node adopts the minimum label among itself and its neighbors:
+:func:`connected_components` is an exact union-find in ONE Spark task.  The
+edges are projected to ids only and exchanged to a single partition; there
+a ``mapInArrow`` function streams the Arrow batches through a union-find
+with path compression whose root is always the component minimum, then
+emits ``(doc_id, cluster_id)`` in Arrow batches.  That is one shuffle map
+stage plus one result stage per call, whatever the graph's diameter, where
+round-based DataFrame CC needs O(log diameter) or more rounds, each a
+join, a ``localCheckpoint`` and a ``collect`` (Kiveris et al., "Connected
+Components in MapReduce and Beyond", SoCC'14 — public).  ER
+match graphs are thresholded survivors, ids only: a few thousand edges per
+thousand pages, so the closure is a single-node problem (SparkER, EDBT
+2019, treats it the same way).  No iteration means no convergence test, no
+round cap and no partial result; losing the executor costs a recompute of
+the task from lineage.
 
-    comp <- min(comp, min over edges (comp of neighbor))
+Memory bound: the task holds one dict entry per distinct matched id (about
+100 bytes for a long id, 150-200 for a URL; edges stream through batch by
+batch), so the distinct ids of the match graph must fit in one Python
+worker — roughly 5-10M ids per GiB of worker memory.  Beyond that the task
+fails loudly (worker out of memory), never returns partial labels.
 
-(two equi-joins + one groupBy(min)), then labels are flattened one hop
-(comp <- comp[comp], a self-join).  Propagation alone needs O(diameter)
-rounds; with per-round compression convergence is O(log diameter), so even
-pathological chain-shaped match graphs finish in ~log2(n) rounds.  ER
-duplicate clusters are near-cliques — typically 2-3 rounds.
-
-Scale notes:
-- labels are repartitioned ONCE on node id; each round's joins reuse that
-  partitioning (no new exchange for the label side under AQE).
-- localCheckpoint() per round truncates the lineage so the plan doesn't
-  grow exponentially across iterations.
-- convergence test = sum(label) stable: labels only ever decrease, so an
-  unchanged sum proves a fixed point — one cheap aggregate per round, no
-  extra join.
-- skewed hub nodes (a label joined by millions of edges) are handled by
-  AQE skew-join splitting (enabled in session defaults); the blocking
-  layer's block-size cap bounds degree upstream.
+:func:`connected_components_star` is the distributed reference with the
+same contract: alternating large-star/small-star over DataFrames, for
+graphs whose ids do not fit one worker.  The tests hold both equal to a
+pure-Python BFS.
 """
 
 from __future__ import annotations
 
-import warnings
+from typing import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+# rows per emitted Arrow batch (Spark's own arrow.maxRecordsPerBatch default)
+_OUT_BATCH = 10_000
+
+
+def _union_find_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """(s, d) batches of one partition -> (doc_id, cluster_id) batches, with
+    cluster_id the minimum id of the component."""
+    parent: dict = {}
+    id_type = None
+
+    def find(x):
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for b in batches:
+        id_type = b.schema.field(0).type
+        for s, d in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
+            rs, rd = find(s), find(d)
+            if rs != rd:
+                # the smaller root wins, so every root is its tree's minimum
+                if rd < rs:
+                    rs, rd = rd, rs
+                parent[rd] = rs
+    ids = list(parent)
+    for i in range(0, len(ids), _OUT_BATCH):
+        chunk = ids[i:i + _OUT_BATCH]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(chunk, type=id_type), pa.array([find(x) for x in chunk], type=id_type)],
+            names=["doc_id", "cluster_id"],
+        )
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """edges(src, dst) -> (doc_id, cluster_id); singletons absent (callers
-    left-join and coalesce to self if needed).  cluster_id = min node id in
-    the component (deterministic, content-derived — stable across runs)."""
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).dropDuplicates(["s", "d"])
-    e = e.localCheckpoint()
-    # both-direction neighbor view, materialized ONCE (round 7): each round
-    # previously ran TWO label joins (s-side and d-side), i.e. two broadcast
-    # builds / two label shuffles per round; joining the pre-unioned (id,
-    # nbr) view needs one.  Ids-only rows (2|E|), eager so the per-round
-    # consumers read cache instead of racing a lazy materialization.
-    nbrs = e.select(F.col("s").alias("id"), F.col("d").alias("nbr")).union(
-        e.select(F.col("d").alias("id"), F.col("s").alias("nbr"))
-    ).localCheckpoint()
-    nodes = nbrs.select("id").distinct()
-    labels = nodes.withColumn("comp", F.col("id"))
-    labels = labels.repartition("id").localCheckpoint()
-    prev_sig = None
-    converged = False
-    for _ in range(max_iter):
-        # neighbor labels (both directions via the nbrs view)
-        m = nbrs.join(labels.withColumnRenamed("id", "nbr"), "nbr").select(
-            "id", "comp"
-        )
-        new_labels = (
-            labels.select("id", "comp")
-            .union(m)
-            .groupBy("id")
-            .agg(F.min("comp").alias("comp"))
-        )
-        # pointer jumping: comp <- label(comp) where comp is itself a node
-        jump = new_labels.select(F.col("id").alias("comp"), F.col("comp").alias("comp2"))
-        new_labels = (
-            new_labels.join(jump, "comp", "left")
-            .select("id", F.least(F.coalesce(F.col("comp2"), F.col("comp")), F.col("comp")).alias("comp"))
-        ).localCheckpoint()
-        # labels only ever decrease (min-propagation), so an unchanged
-        # label-multiset signature proves the fixed point; ids may be any
-        # orderable type (urls, longs) -> hash-based signature
-        sig = new_labels.agg(
-            F.sum(F.hash("id", "comp").cast("decimal(38,0)")).alias("h1"),
-            F.sum(F.xxhash64("id", "comp").cast("decimal(38,0)")).alias("h2"),
-        ).collect()[0]
-        labels = new_labels
-        if prev_sig is not None and sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    if not converged:
-        # an unconverged min-propagation returns labels that may still be
-        # mid-flight (a component split across labels) — surface it rather
-        # than silently returning wrong clusters
-        warnings.warn(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds; returned labels may split components. Raise max_iter "
-            "(rounds needed ~= log2(graph diameter)).",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels.select(F.col("id").alias("doc_id"), F.col("comp").alias("cluster_id"))
+    left-join and coalesce to self if needed), except a node seen only in
+    self-loops; an edge with a NULL endpoint is ignored.  cluster_id = min
+    node id in the component (deterministic, content-derived — stable
+    across runs).  Exact, one task: see the module docstring for the
+    memory bound."""
+    id_type = edges.schema[src].dataType
+    e = edges.select(F.col(src).alias("s"), F.col(dst).cast(id_type).alias("d"))
+    e = e.dropna().repartition(1)
+    schema = StructType([StructField("doc_id", id_type), StructField("cluster_id", id_type)])
+    return e.mapInArrow(_union_find_batches, schema)
 
 
 def connected_components_star(
@@ -111,11 +101,11 @@ def connected_components_star(
     al., "Connected Components in MapReduce and Beyond", SoCC'14 — public).
 
     Same contract as :func:`connected_components` (singletons absent,
-    cluster_id = component-minimum node id; equality property-tested).
-    Preferred at extreme scale / high-diameter graphs: both operations are
-    a single groupBy over node neighborhoods and the edge set converges to
-    stars rooted at the component minimum in O(log^2 n) rounds without the
-    label-side state of min-propagation.
+    cluster_id = component-minimum node id; equality property-tested) and
+    its distributed reference: no single task holds the graph.  Both
+    operations are a single groupBy over node neighborhoods and the edge
+    set converges to stars rooted at the component minimum in O(log^2 n)
+    rounds; ``max_iter`` rounds without convergence raise RuntimeError.
 
     large-star: every neighbor v > u links to min(N(u) ∪ {u})
     small-star: every neighbor v <= u (star-oriented) links to the same min
@@ -151,7 +141,6 @@ def connected_components_star(
 
     e = e0
     prev_sig = None
-    converged = False
     for _ in range(max_iter):
         e = small_star(large_star(e)).localCheckpoint()
         sig = e.agg(
@@ -159,19 +148,15 @@ def connected_components_star(
             F.sum(F.hash("s", "d").cast("decimal(38,0)")).alias("h1"),
             F.sum(F.xxhash64("s", "d").cast("decimal(38,0)")).alias("h2"),
         ).collect()[0]
-        if prev_sig is not None and sig == prev_sig:
-            converged = True
+        if sig == prev_sig:
             break
         prev_sig = sig
-    if not converged:
-        # the final min-over-neighbors labeling below is only correct on a
-        # converged star forest — warn instead of silently mislabeling
-        warnings.warn(
+    else:
+        # the min-over-neighbors labeling below is only correct on a
+        # converged star forest: fail rather than return split components
+        raise RuntimeError(
             f"connected_components_star did not converge within "
-            f"max_iter={max_iter} alternation rounds; returned labels may "
-            "split components. Raise max_iter (O(log^2 n) rounds suffice).",
-            RuntimeWarning,
-            stacklevel=2,
+            f"max_iter={max_iter} alternation rounds (O(log^2 n) rounds suffice)"
         )
     # converged edge set is a star forest rooted at component minima: every
     # node's label = min over (self ∪ both-direction neighbors)
@@ -240,6 +225,8 @@ def pivot_clustering(
     cluster_id NULL / assigned_round NULL — the bounded-unroll oracle
     surface (the bpe_merges replay pattern): both engines compare equal on
     the full state after K rounds whether or not the graph is done.
+    Without ``exact_rounds``, a peel still unfinished after ``max_rounds``
+    raises RuntimeError rather than return unassigned nodes.
     """
     from levsim.extras.dedup import md5_token_hash_col
 
@@ -341,12 +328,9 @@ def pivot_clustering(
              .join(active.select(F.col("id").alias("d")), "d", "left_semi")
         ).localCheckpoint()
     if exact_rounds is None and active.limit(1).count() > 0:
-        warnings.warn(
+        raise RuntimeError(
             f"pivot_clustering did not finish within max_rounds={max_rounds} "
-            "peeling rounds; remaining active nodes are returned unassigned "
-            "(cluster_id NULL). Raise max_rounds (O(log n) w.h.p.).",
-            RuntimeWarning,
-            stacklevel=2,
+            "peeling rounds (O(log n) w.h.p.)"
         )
     out = done_parts[0]
     for p in done_parts[1:]:

@@ -16,6 +16,7 @@ string wins") are deterministic regardless of shuffle order.
 
 from __future__ import annotations
 
+import os
 from typing import Optional
 
 import pandas as pd
@@ -164,8 +165,6 @@ def elect_representatives(
     # from AQE coalescing): 17s -> ~2.7s at the 4x holdout corpus,
     # neutral at sf0.1 (measured both).  Override with
     # LEVSIM_CONSENSUS_PARTITIONS.
-    import os
-
     n_part = int(os.environ.get("LEVSIM_CONSENSUS_PARTITIONS", "0")) or (
         clustered.sparkSession.sparkContext.defaultParallelism
     )

@@ -12,10 +12,13 @@ orchestration):
    (anti-join — cheap because the pair log is append-only) and appends the
    accepted matches.
 3. ``refresh_clusters`` re-runs connected components over the FULL match
-   log.  Matches are tiny relative to pages (the thresholded survivors),
-   and min-label CC is O(log d) rounds, so full closure per catch-up is
-   the scale-sane choice over incremental cluster surgery — merging two
-   clusters correctly requires global relabeling anyway.
+   log: one exchange of the ids-only accepted edges to a single partition
+   and one exact union-find task (two Spark jobs, see ``clustering``).
+   Matches are tiny relative to pages (the thresholded survivors), so the
+   full closure per catch-up costs well under a second here and needs no
+   incremental cluster surgery — merging two clusters correctly requires
+   global relabeling anyway.  The bound is the union-find's: the log's
+   distinct matched ids must fit in one Python worker.
 
 Equivalence guarantee (tested): after any sequence of catch-ups, clusters
 equal the batch pipeline's clusters on the union of all pages, because the

@@ -369,7 +369,7 @@ def greedy_one_to_one(
 
     Scale shape: the active edge set shrinks geometrically in practice;
     each round shuffles only (id, score)-width rows; localCheckpoint per
-    round truncates the growing plan exactly like connected_components.
+    round truncates the growing plan exactly like connected_components_star.
     """
     s = scored.select(
         F.col(id_a).alias("id_a"), F.col(id_b).alias("id_b"),

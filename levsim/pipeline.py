@@ -3,10 +3,13 @@ score -> cluster -> consensus, checkpoint-resumable per snapshot with
 metrics and lineage tables (the north rule's pipeline contract).
 
 Resume model: each stage's output snapshot id is a deterministic hash of
-(stage name, stage params, input snapshot ids) — ``tables.snapshot_id_for``.
-On rerun, a stage whose snapshot already exists (manifest committed) is
-skipped and its output read back; a killed run therefore resumes at the
-first incomplete stage with byte-identical results (SURVEY.md M5 gate).
+(stage name, stage params, input snapshot ids, levsim source) —
+``tables.snapshot_id_for``.  On rerun, a stage whose snapshot already exists
+(manifest committed) is skipped and its output read back; a killed run
+therefore resumes at the first incomplete stage with byte-identical results
+(SURVEY.md M5 gate).  The pages' id is the caller's, or else derived from
+the input files' paths, sizes and mtimes (``tables.input_snapshot_id``); an
+in-memory pages DataFrame gets a per-run id, so nothing resumes for it.
 
 Lineage: one row per executed/skipped stage (run id, stage, input snapshot
 ids, output snapshot id, row count, wall seconds, skipped flag).
@@ -19,6 +22,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass, field
 from typing import List, Optional
 
@@ -26,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import blocking, candidates, clustering, consensus, normalize, scoring
-from .tables import SnapshotTable, snapshot_id_for
+from .tables import SnapshotTable, input_snapshot_id, snapshot_id_for
 
 
 @dataclass
@@ -63,7 +67,6 @@ class ERConfig:
 
     def params(self) -> dict:
         return {
-            "cascade": True,  # scoring stage format marker (invalidates pre-cascade snapshots)
             "truncate_len": self.truncate_len,
             "tau": self.tau,
             "scorers": list(self.scorers),
@@ -162,8 +165,10 @@ class ERPipeline:
         m.write.mode("append").parquet(os.path.join(self.workdir, "metrics"))
 
     # ------------------------------------------------------------------
-    def run(self, pages: DataFrame, pages_snapshot_id: str = "input") -> ERRun:
+    def run(self, pages: DataFrame, pages_snapshot_id: Optional[str] = None) -> ERRun:
         cfg = self.cfg
+        if pages_snapshot_id is None:
+            pages_snapshot_id = input_snapshot_id(pages, f"{self.run_id}_{uuid.uuid4().hex}")
         stages: List[StageResult] = []
 
         def compute_norm():

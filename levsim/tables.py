@@ -18,9 +18,12 @@ url (the input_hint invariant).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
+import pathlib
+import re
 import tempfile
 import time
 from dataclasses import dataclass
@@ -367,15 +370,54 @@ class IcebergSnapshotTable:
         )
 
 
+@functools.lru_cache(maxsize=None)
+def code_fingerprint() -> str:
+    """Hash of the levsim package source (every ``.py`` and ``.c`` file).
+
+    The whole package rather than a hand-kept list of stage modules: a list
+    goes stale when a stage starts calling a new module, and an over-eager
+    invalidation costs one recompute, a stale snapshot a wrong answer."""
+    root = pathlib.Path(__file__).resolve().parent
+    h = hashlib.sha256()
+    for path in sorted(p for p in root.rglob("*") if p.suffix in (".py", ".c")):
+        h.update(path.relative_to(root).as_posix().encode())
+        h.update(path.read_bytes())
+    return h.hexdigest()[:16]
+
+
 def snapshot_id_for(stage: str, params: dict, inputs: List[str]) -> str:
-    """Deterministic content-derived snapshot id: resume can test existence
-    BEFORE computing anything."""
+    """Deterministic snapshot id from (stage, params, input ids, code):
+    resume can test existence BEFORE computing anything, and a snapshot
+    written by different levsim code never resumes."""
     h = hashlib.sha256()
     h.update(stage.encode())
     h.update(json.dumps(params, sort_keys=True, default=str).encode())
     for i in inputs:
         h.update(i.encode())
+    h.update(code_fingerprint().encode())
     return h.hexdigest()[:16]
+
+
+def input_snapshot_id(df: DataFrame, fallback: str) -> str:
+    """Content-derived id for a file-backed input DataFrame.
+
+    Hashes the analyzed plan (expression ids stripped, so a filter or limit
+    on the same files is a different input) and each input file's path,
+    size and modification time.  A DataFrame with no input files, or with
+    an in-memory leaf (``createDataFrame``), has no such id: ``fallback``
+    is returned, which callers make unique per run so nothing resumes."""
+    plan = df._jdf.queryExecution().analyzed().toString()
+    files = sorted(df.inputFiles())
+    if not files or "LocalRelation" in plan or "LogicalRDD" in plan:
+        return fallback
+    jvm = df.sparkSession._jvm
+    conf = df.sparkSession._jsc.hadoopConfiguration()
+    h = hashlib.sha256(re.sub(r"#\d+", "", plan).encode())
+    for f in files:
+        path = jvm.org.apache.hadoop.fs.Path(f)
+        st = path.getFileSystem(conf).getFileStatus(path)
+        h.update(f"{f}\0{st.getLen()}\0{st.getModificationTime()}\0".encode())
+    return f"files_{h.hexdigest()[:16]}"
 
 
 # ---------------------------------------------------------------------------

@@ -39,6 +39,10 @@ def test_pipeline_f1(spark, pages, tmp_path):
 
 
 def test_pipeline_resume(spark, pages, tmp_path):
+    # resume keys on the input files, so the pages come from a parquet copy
+    # (an in-memory DataFrame never resumes)
+    pages.write.parquet(str(tmp_path / "pages"))
+    pages = spark.read.parquet(str(tmp_path / "pages"))
     wd = str(tmp_path / "er2")
     pipe1 = ERPipeline(spark, wd, ERConfig(tau=0.87))
     run1 = pipe1.run(pages)
@@ -57,6 +61,41 @@ def test_pipeline_resume(spark, pages, tmp_path):
     pipe3 = ERPipeline(spark, wd, ERConfig(tau=0.95))
     run3 = pipe3.run(pages)
     assert any(not s.skipped for s in run3.stages)
+
+
+def test_pipeline_new_input_same_workdir_recomputes(spark, tmp_path):
+    # regression: a second run on DIFFERENT pages in the same workdir used
+    # to resume every stage and return the first run's clusters
+    wd = str(tmp_path / "er_two_inputs")
+    counts = []
+    for i, (n_entities, seed) in enumerate(((20, 1), (30, 2))):
+        path = str(tmp_path / f"pages{i}")
+        tables.generate_pages(spark, n_entities=n_entities, seed=seed).write.parquet(path)
+        pages_i = spark.read.parquet(path)
+        n_pages = pages_i.count()
+        run = ERPipeline(spark, wd, ERConfig(tau=0.87)).run(pages_i)
+        assert all(not s.skipped for s in run.stages), [(s.stage, s.skipped) for s in run.stages]
+        assert run.stages[0].rows == n_pages
+        assert run.clusters.count() == n_pages
+        counts.append(n_pages)
+    assert counts[0] != counts[1]
+
+
+def test_input_snapshot_id(spark, pages, tmp_path):
+    path = str(tmp_path / "pages")
+    pages.write.parquet(path)
+    files = spark.read.parquet(path)
+    sid = tables.input_snapshot_id(files, "fallback")
+    assert sid != "fallback"
+    assert tables.input_snapshot_id(spark.read.parquet(path), "fallback") == sid
+    # a different query over the same files is a different input
+    assert tables.input_snapshot_id(files.limit(5), "fallback") != sid
+    # in-memory pages have no id of their own, even beside input files
+    assert tables.input_snapshot_id(pages, "fallback") == "fallback"
+    assert tables.input_snapshot_id(files.union(pages), "fallback") == "fallback"
+    # rewritten files (new sizes / mtimes) are a different input
+    pages.limit(10).write.mode("overwrite").parquet(path)
+    assert tables.input_snapshot_id(spark.read.parquet(path), "fallback") != sid
 
 
 def test_snapshot_time_travel(spark, tmp_path):

@@ -10,6 +10,8 @@ import hashlib
 import random
 from collections import defaultdict
 
+import pytest
+
 from levsim.clustering import pivot_clustering
 
 
@@ -171,3 +173,11 @@ def test_pivot_beats_cc_on_bridge_graph(spark):
     assert cost_cc == 24
     # pivot respects the non-edges; on this graph it pays far less
     assert cost_pc < cost_cc
+
+
+def test_pivot_fails_loudly_when_not_finished(spark):
+    # one round leaves 36 of a 200-node path unassigned: raise, never
+    # return NULL cluster_ids
+    e = spark.createDataFrame([(i, i + 1) for i in range(200)], ["id_a", "id_b"])
+    with pytest.raises(RuntimeError, match="did not finish"):
+        pivot_clustering(e, max_rounds=1)
