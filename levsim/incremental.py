@@ -1,13 +1,15 @@
-"""Incremental entity resolution: the streaming on-ramp composed into a
-full catch-up ER round.
+"""Incremental entity resolution: the catch-up pair emitter composed into
+a full catch-up ER round.
 
 Flow per catch-up (all pieces exist elsewhere; this module is the
 orchestration):
 
-1. ``streaming.run_incremental_pairs`` ingests NEW page files, keys them
-   with the batch expressions, and appends exactly the candidate pairs the
-   new pages unlock (stateful, exactly-once — a pair is never emitted
-   twice, so the appended pair log IS the incremental work list).
+1. ``streaming.run_incremental_pairs`` keys the page files no committed
+   catch-up has read with the batch expressions, joins their block keys
+   against the persisted key table, and appends exactly the candidate
+   pairs the new pages unlock, one row per pair (a batch delta with a
+   commit log: a rerun replaces an uncommitted batch, so the appended pair
+   log IS the incremental work list).
 2. ``score_new_pairs`` scores only pairs not yet in the matches log
    (anti-join — cheap because the pair log is append-only) and appends the
    accepted matches.
@@ -22,7 +24,7 @@ orchestration):
 
 Equivalence guarantee (tested): after any sequence of catch-ups, clusters
 equal the batch pipeline's clusters on the union of all pages, because the
-streaming pair log equals the batch candidate set (test_streaming) and
+catch-up pair log equals the batch candidate set (test_streaming) and
 scoring/threshold/CC are the same code.
 """
 
@@ -31,7 +33,7 @@ from __future__ import annotations
 import os
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import scoring
@@ -65,11 +67,12 @@ def score_new_pairs(
         tau=tau, scorers=tuple(scorers),
     ).select("id_a", "id_b", *scorers).withColumn("scored", F.lit(True))
     # log EVERY scored pair (not only matches) so the anti-join never
-    # re-scores a rejected pair on the next catch-up
-    n_new = scored.count()
-    if n_new:
-        scored.write.mode("append").parquet(matches_path)
-    return n_new
+    # re-scores a rejected pair on the next catch-up; one write, counted
+    # by an observation instead of a second run of the plan
+    counted = Observation("score_new_pairs")
+    scored.observe(counted, F.count(F.lit(1)).alias("n")) \
+        .write.mode("append").parquet(matches_path)
+    return counted.get["n"]
 
 
 def refresh_clusters(

@@ -1,158 +1,203 @@
-"""Structured Streaming front-end: incremental pages ingest.
+"""Catch-up over landed page files: keyed rows and candidate pairs.
 
-The north rule's pipeline is batch with snapshot-level resume (SURVEY.md §2b
-"not applicable" note), but a web-scale deployment lands crawl data
-continuously.  This module provides the incremental on-ramp: a file-source
-stream over arriving pages, normalized and blocking-keyed EXACTLY like the
-batch path (same column expressions, same UDFs — keys are content hashes,
-so stream and batch agree byte-for-byte), appended to a keyed staging table
-that the batch pipeline snapshots from.
+A catch-up is a batch delta over the page files no committed catch-up has
+read, keyed with the batch path's expressions (content hashes, so catch-up
+and batch agree byte for byte).  ``run_incremental`` appends the keyed
+rows; ``run_incremental_pairs`` (and ``run_incremental_neardup``, over
+MinHash band keys) appends the candidate pairs the new pages unlock, a
+Catalyst join of their keys against the key table in ``checkpoint_dir``.
+A url is keyed once (its first landing wins); a new key row ranked below
+the ``max_state_ids`` cap pairs with the rows ranked below it, and each
+pair is written once.  Output files carry the batch number and a marker
+listing the input files commits each batch, so a rerun replaces an
+uncommitted batch.  docs/DESIGN.md §9 has the layout, the rules and the
+exactly-once argument; paths are local, like ``tables.SnapshotTable``.
 
-- exactly-once per file via the checkpointed file source;
-- watermarked dropDuplicates on url (late re-crawls within the watermark
-  are deduped; beyond it, the batch exact-dedup pass catches them);
-- trigger(availableNow=True) gives catch-up-then-stop semantics for
-  cron-style incremental runs — the streaming analog of snapshot resume.
+``streaming_sessions`` stays a Structured Streaming operator: its
+event-time session state outlives a catch-up.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+import json
+import os
+import shutil
+from typing import Callable, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import blocking, normalize
 from .tables import PAGES_SCHEMA
 
-
-def read_pages_stream(spark: SparkSession, input_dir: str,
-                      max_files_per_trigger: Optional[int] = None) -> DataFrame:
-    reader = spark.readStream.schema(PAGES_SCHEMA).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(input_dir)
+KEY_TABLE_SCHEMA = "doc_id string, block_key string, batch int, rank int"
 
 
-def keyed_pages_stream(pages: DataFrame, watermark: str = "1 hour",
-                       n_perm: int = 64, rows_per_band: int = 4,
-                       shingle_k: int = 3) -> DataFrame:
-    """pages stream -> (url, warc_ts, block_pass, block_key) stream, deduped
-    on url within the watermark."""
-    p = normalize.with_normalized(pages, text_col="text", url_col="url")
-    p = p.withWatermark("warc_ts", watermark).dropDuplicates(["url"])
-    keys = blocking.add_block_keys(
-        p, id_col="url", text_col="norm_text", host_col="host",
-        n_perm=n_perm, rows_per_band=rows_per_band, shingle_k=shingle_k,
-    )
-    # re-attach event time for downstream windowing (doc_id here is the url)
-    return keys.join(p.select(F.col("url").alias("doc_id"), "warc_ts"), "doc_id")
+def _batch_of(name: str) -> int:
+    """Batch number of a ``batch-<n>-*`` file, else -1."""
+    parts = name.split("-")
+    return int(parts[1]) if parts[0] == "batch" and parts[1:2] and parts[1].isdigit() else -1
+
+
+def _open_delta(spark: SparkSession, input_dir: str, output_dir: str,
+                checkpoint_dir: str) -> Tuple[int, List[str]]:
+    """(this catch-up's batch number, the input files no committed catch-up
+    has read), after deleting the files of uncommitted batches."""
+    if os.path.isdir(os.path.join(checkpoint_dir, "offsets")):
+        raise ValueError(f"{checkpoint_dir} is a Structured Streaming checkpoint; "
+                         "start catch-ups on a new checkpoint_dir and output_dir")
+    if os.path.isdir(os.path.join(output_dir, "_spark_metadata")):
+        raise ValueError(f"{output_dir} is a streaming file sink: its readers see only "
+                         "the files in its metadata log; use a new output_dir")
+    log = os.path.join(checkpoint_dir, "commits")
+    names = sorted(n for n in os.listdir(log) if n.endswith(".json")) \
+        if os.path.isdir(log) else []
+    if [int(n[:-5]) for n in names] != list(range(len(names))):
+        raise ValueError(f"{log}: commit markers {names} are not batches 0..n-1")
+    read = set()
+    for n in names:
+        with open(os.path.join(log, n)) as f:
+            read.update(json.load(f)["files"])
+    batch = len(names)
+    for d in (output_dir, os.path.join(checkpoint_dir, "keys")):
+        for n in os.listdir(d) if os.path.isdir(d) else ():
+            if _batch_of(n) >= batch:
+                p = os.path.join(d, n)
+                shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
+    landed = spark.read.schema(PAGES_SCHEMA).parquet(input_dir).inputFiles()
+    return batch, sorted(set(landed) - read)
+
+
+def _commit(checkpoint_dir: str, batch: int, files: List[str]) -> int:
+    log = os.path.join(checkpoint_dir, "commits")
+    os.makedirs(log, exist_ok=True)
+    tmp = os.path.join(log, f".{batch:06d}.json.tmp")
+    with open(tmp, "w") as f:
+        json.dump({"batch": batch, "files": files}, f)
+    os.replace(tmp, os.path.join(log, f"{batch:06d}.json"))
+    return batch
+
+
+def _publish(df: DataFrame, directory: str, batch: int) -> None:
+    """Write ``df`` as the ``batch-<batch>-part-*`` files of ``directory``."""
+    # hidden from readers; a rerun's write overwrites a crashed one's
+    stage = os.path.join(directory, f"_batch-{batch:06d}")
+    df.write.mode("overwrite").parquet(stage)
+    for n in sorted(os.listdir(stage)):
+        if n.startswith("part-"):
+            os.replace(os.path.join(stage, n),
+                       os.path.join(directory, f"batch-{batch:06d}-{n}"))
+    shutil.rmtree(stage)
+
+
+def _read_batches(spark: SparkSession, directory: str, schema: str) -> Optional[DataFrame]:
+    """The committed files of ``directory``, or None before the first (a
+    given schema spares the footer-reading job of schema inference)."""
+    if os.path.isdir(directory) and any(_batch_of(n) >= 0 for n in os.listdir(directory)):
+        return spark.read.schema(schema).parquet(directory)
+    return None
+
+
+def _first_landings(spark: SparkSession, files: List[str], id_col: str,
+                    keyed: Optional[DataFrame]) -> DataFrame:
+    """The pages of ``files``: one landing per id (earliest ``warc_ts``,
+    then smallest text), minus the ids already in ``keyed.doc_id``."""
+    first = Window.partitionBy(id_col).orderBy("warc_ts", "text")
+    pages = spark.read.schema(PAGES_SCHEMA).parquet(*files) \
+        .where(F.col(id_col).isNotNull()) \
+        .withColumn("_n", F.row_number().over(first)).where(F.col("_n") == 1).drop("_n")
+    if keyed is None:
+        return pages
+    return pages.join(keyed.select(F.col("doc_id").alias("_keyed")),
+                      F.col(id_col).cast("string") == F.col("_keyed"), "left_anti")
 
 
 def run_incremental(spark: SparkSession, input_dir: str, output_dir: str,
-                    checkpoint_dir: str, watermark: str = "1 hour"):
-    """Catch-up ingest: process all files not yet seen by the checkpoint,
-    append keyed rows to output_dir, then stop (availableNow)."""
-    pages = read_pages_stream(spark, input_dir)
-    keyed = keyed_pages_stream(pages, watermark=watermark)
-    q = (
-        keyed.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+                    checkpoint_dir: str) -> Optional[int]:
+    """Catch-up ingest: append the (doc_id, block_pass, block_key, warc_ts)
+    rows of the new pages to ``output_dir``.  Returns the committed batch
+    number, or None when no file is new."""
+    batch, files = _open_delta(spark, input_dir, output_dir, checkpoint_dir)
+    if not files:
+        return None
+    pages = normalize.with_normalized(
+        _first_landings(spark, files, "url", _read_batches(spark, output_dir, "doc_id string")))
+    keyed = blocking.add_block_keys(pages, id_col="url")
+    _publish(keyed.join(pages.select(F.col("url").alias("doc_id"), "warc_ts"), "doc_id"),
+             output_dir, batch)
+    return _commit(checkpoint_dir, batch, files)
 
 
-# ---------------------------------------------------------------------------
-# Custom stateful operator: incremental candidate-pair emission
-# (applyInPandasWithState — the streaming analog of candidates.candidate_pairs)
-# ---------------------------------------------------------------------------
+def _emit_pairs(spark: SparkSession, input_dir: str, output_dir: str,
+                checkpoint_dir: str, id_col: str,
+                block_keys: Callable[[DataFrame], DataFrame],
+                max_state_ids: int) -> Optional[int]:
+    """The pair catch-up of :func:`run_incremental_pairs` over any
+    ``block_keys(pages) -> (doc_id, block_key, ...)`` keying."""
+    batch, files = _open_delta(spark, input_dir, output_dir, checkpoint_dir)
+    if not files:
+        return None
+    key_dir = os.path.join(checkpoint_dir, "keys")
+    keyed = _read_batches(spark, key_dir, KEY_TABLE_SCHEMA)
+    # (doc_id, block_key) is unique: a pass yields one key per doc, and
+    # band keys carry their band index
+    rows = block_keys(_first_landings(spark, files, id_col, keyed)) \
+        .select("doc_id", "block_key", F.lit(batch).alias("batch"))
+    if keyed is not None:
+        rows = keyed.drop("rank").unionByName(rows)
+    by_arrival = Window.partitionBy("block_key").orderBy("batch", "doc_id")
+    rows = rows.withColumn("rank", (F.row_number().over(by_arrival) - 1).cast("int"))
+    _publish(rows.where(F.col("batch") == batch), key_dir, batch)
 
-
-def streaming_candidate_pairs(keyed: DataFrame, max_state_ids: int = 200) -> DataFrame:
-    """Streaming (doc_id, block_key) rows -> incremental candidate pairs
-    (id_a, id_b, block_key), emitted the moment the LATER member of a pair
-    arrives.
-
-    State per block_key: the sorted set of doc ids seen so far, capped at
-    ``max_state_ids``.  A key that exceeds the cap stops accumulating and
-    stops emitting (streaming stop-key semantics — the same mega-block
-    compromise as the batch path's salting/drop: near-useless keys like an
-    empty host discriminate nothing, and recall is carried by the content
-    passes).  State is therefore O(max_state_ids) per key regardless of
-    stream length, and each pair is emitted exactly once per key (the
-    checkpointed state dedups re-deliveries; cross-key duplicates are left
-    to the consumer's dropDuplicates, exactly like the batch union).
-
-    Union over all micro-batches == the batch candidate set whenever no
-    key exceeds the cap (asserted in tests/test_streaming.py)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField("id_a", StringType()),
-            StructField("id_b", StringType()),
-            StructField("block_key", StringType()),
-        ]
-    )
-    state_schema = StructType([StructField("ids", ArrayType(StringType()))])
-
-    def fn(key, pdfs, state):
-        block_key = key[0]
-        seen: list = list(state.get[0]) if state.exists else []
-        seen_set = set(seen)
-        incoming: list = []
-        for pdf in pdfs:
-            incoming.extend(pdf["doc_id"].tolist())
-        # deterministic order within the micro-batch; drop re-deliveries
-        new_ids = sorted({d for d in incoming if d is not None and d not in seen_set})
-        ida, idb = [], []
-        for nid in new_ids:
-            if len(seen) >= max_state_ids:
-                break  # stop-key: cap reached, emit nothing further
-            for old in seen:
-                lo, hi = (old, nid) if old < nid else (nid, old)
-                ida.append(lo)
-                idb.append(hi)
-            seen.append(nid)
-            seen_set.add(nid)
-        state.update((sorted(seen),))
-        if ida:
-            yield pd.DataFrame({"id_a": ida, "id_b": idb,
-                                "block_key": [block_key] * len(ida)})
-
-    return keyed.groupBy("block_key").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    admitted = spark.read.schema(KEY_TABLE_SCHEMA).parquet(key_dir) \
+        .where(F.col("rank") < max_state_ids)
+    n, s = admitted.where(F.col("batch") == batch).alias("n"), admitted.alias("s")
+    pairs = n.join(s, (F.col("n.block_key") == F.col("s.block_key"))
+                   & (F.col("s.rank") < F.col("n.rank")))
+    _publish(pairs.groupBy(F.least("n.doc_id", "s.doc_id").alias("id_a"),
+                           F.greatest("n.doc_id", "s.doc_id").alias("id_b"))
+             .agg(F.min("n.block_key").alias("block_key")), output_dir, batch)
+    return _commit(checkpoint_dir, batch, files)
 
 
 def run_incremental_pairs(spark: SparkSession, input_dir: str, output_dir: str,
-                          checkpoint_dir: str, watermark: str = "1 hour",
-                          max_state_ids: int = 200):
-    """Catch-up candidate-pair emission: ingest new page files, key them
-    with the SAME expressions as the batch path, and emit the new candidate
-    pairs each page unlocks (stateful, exactly-once per file)."""
-    pages = read_pages_stream(spark, input_dir)
-    keyed = keyed_pages_stream(pages, watermark=watermark)
-    pairs = streaming_candidate_pairs(
-        keyed.select("doc_id", "block_key"), max_state_ids=max_state_ids
+                          checkpoint_dir: str, max_state_ids: int = 200) -> Optional[int]:
+    """Append the (id_a, id_b, block_key) pairs the new page files unlock
+    to ``output_dir``.  Returns the committed batch number, or None when no
+    file is new."""
+    return _emit_pairs(
+        spark, input_dir, output_dir, checkpoint_dir, "url",
+        lambda pages: blocking.add_block_keys(normalize.with_normalized(pages), id_col="url"),
+        max_state_ids)
+
+
+def neardup_block_keys(pages: DataFrame, text_col: str = "text",
+                       id_col: str = "doc_id",
+                       n_perm: int = 64, rows_per_band: int = 4,
+                       shingle_k: int = 3) -> DataFrame:
+    """Each doc's MinHash LSH band keys (the batch dedup path's
+    blocking.minhash_band_udf), prefixed with the band index so bands
+    cannot alias: the catch-up analog of dedup.minhash_candidate_pairs."""
+    bands = blocking.minhash_band_udf(n_perm=n_perm,
+                                      rows_per_band=rows_per_band,
+                                      shingle_k=shingle_k)
+    return pages.select(
+        F.col(id_col).cast("string").alias("doc_id"),
+        F.posexplode(bands(F.col(text_col))).alias("band_i", "bkey"),
+    ).select(
+        "doc_id",
+        F.concat_ws(":", F.lit("mh"), F.col("band_i"), F.col("bkey")).alias("block_key"),
     )
-    q = (
-        pairs.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+
+
+def run_incremental_neardup(spark: SparkSession, input_dir: str,
+                            output_dir: str, checkpoint_dir: str,
+                            max_state_ids: int = 200, **band_kw) -> Optional[int]:
+    """:func:`run_incremental_pairs` over :func:`neardup_block_keys`; the
+    verify stage stays a batch pass over the pairs (it needs both texts)."""
+    return _emit_pairs(spark, input_dir, output_dir, checkpoint_dir,
+                       band_kw.get("id_col", "doc_id"),
+                       lambda pages: neardup_block_keys(pages, **band_kw), max_state_ids)
 
 
 # ---------------------------------------------------------------------------
@@ -262,55 +307,6 @@ def run_incremental_sessions(spark: SparkSession, input_dir: str, output_dir: st
                                   watermark=watermark)
     q = (
         sessions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def keyed_neardup_stream(pages: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id",
-                         n_perm: int = 64, rows_per_band: int = 4,
-                         shingle_k: int = 3) -> DataFrame:
-    """Streaming near-dup keying (round 5): each incoming doc fans out to
-    its MinHash LSH band keys — the SAME band expressions as the batch
-    dedup path (blocking.minhash_band_udf), prefixed with the band index
-    so cross-band collisions cannot alias.  Feeding this into
-    :func:`streaming_candidate_pairs` gives incremental NEAR-DUP candidate
-    pairs with O(cap) state per band bucket: the streaming analog of
-    dedup.minhash_candidate_pairs, by composition rather than a new
-    stateful operator (asserted stream == batch in tests)."""
-    from . import blocking
-
-    bands = blocking.minhash_band_udf(n_perm=n_perm,
-                                      rows_per_band=rows_per_band,
-                                      shingle_k=shingle_k)
-    return pages.select(
-        F.col(id_col).cast("string").alias("doc_id"),
-        F.posexplode(bands(F.col(text_col))).alias("band_i", "bkey"),
-    ).select(
-        "doc_id",
-        F.concat_ws(":", F.lit("mh"), F.col("band_i"), F.col("bkey")).alias("block_key"),
-    )
-
-
-def run_incremental_neardup(spark: SparkSession, input_dir: str,
-                            output_dir: str, checkpoint_dir: str,
-                            max_state_ids: int = 200, **band_kw):
-    """Catch-up near-dup candidate emission over a pages directory: new
-    files are banded and run through the stateful pair emitter; each
-    near-dup candidate pair appears exactly once per band bucket.  The
-    verify/threshold stage stays a batch pass over the emitted pairs
-    (scoring needs both texts — an id-keyed batch join, not stream state)."""
-    pages = read_pages_stream(spark, input_dir)
-    keyed = keyed_neardup_stream(pages, **band_kw)
-    pairs = streaming_candidate_pairs(keyed, max_state_ids=max_state_ids)
-    q = (
-        pairs.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")

@@ -1,5 +1,5 @@
-"""Incremental ER == batch ER: streaming stateful candidate pairs + anti-
-join scoring + full-closure clustering, across two catch-up rounds."""
+"""Incremental ER == batch ER: catch-up candidate pairs + anti-join
+scoring + full-closure clustering, across two catch-up rounds."""
 
 from __future__ import annotations
 

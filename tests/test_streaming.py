@@ -1,8 +1,12 @@
-"""Incremental (Structured Streaming) ingest: exactly-once per file,
-stream/batch key agreement, catch-up-then-stop resume semantics."""
+"""Catch-up ingest and pair emission over landed page files: exactly-once
+per file, catch-up/batch key agreement, the per-key cap, crash recovery;
+plus the Structured Streaming sessionizer."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -57,10 +61,10 @@ def test_stream_batch_key_agreement(staged_pages):
 
 
 def test_streaming_candidate_pairs_stateful(staged_pages):
-    """applyInPandasWithState incremental blocking: the union of pairs
-    emitted across two catch-up runs must equal the BATCH candidate set on
-    the full corpus (every pair emitted exactly once per key when the
-    later member arrives; state survives the restart via the checkpoint)."""
+    """Incremental blocking: the union of pairs emitted across two catch-up
+    runs must equal the BATCH candidate set on the full corpus, with one
+    row per distinct pair (emitted once, when the later member arrives;
+    the key table carries the earlier pages across runs)."""
     from levsim import candidates
 
     spark, in_dir, _, _, full_df, second = staged_pages
@@ -76,9 +80,8 @@ def test_streaming_candidate_pairs_stateful(staged_pages):
     streaming.run_incremental_pairs(spark, in_dir, out_dir, ckpt)
     got = spark.read.parquet(out_dir)
 
-    # per-key exactly-once: no (pair, key) row duplicated across restarts
-    dup = got.groupBy("id_a", "id_b", "block_key").count().where(F.col("count") > 1)
-    assert dup.count() == 0
+    # exactly-once: one row per distinct pair across both runs
+    assert got.count() == got.select("id_a", "id_b").distinct().count()
 
     # batch equivalence on the same keyed rows (cap never reached here)
     keyed_batch = blocking.add_block_keys(
@@ -92,6 +95,158 @@ def test_streaming_candidate_pairs_stateful(staged_pages):
     assert want.subtract(sgot).count() == 0
     # second run emitted strictly new pairs (the new docs' pairs)
     assert sgot.count() > n1
+
+
+def _keyed_rows(df):
+    """{block_key: {doc_id}} of pages keyed the batch way."""
+    rows = blocking.add_block_keys(
+        normalize.with_normalized(df, text_col="text", url_col="url"), id_col="url"
+    ).select("doc_id", "block_key").collect()
+    out = {}
+    for r in rows:
+        out.setdefault(r.block_key, set()).add(r.doc_id)
+    return out
+
+
+def _reference_pairs(deltas, cap):
+    """Pure-Python replay of the per-key stop-key rule, one dict per
+    catch-up: {(id_a, id_b): smallest key}.  Per key, the sorted new ids
+    are admitted while the key's seen count is below the cap, and each
+    admitted id pairs with every id seen before it."""
+    seen, out = {}, []
+    for delta in deltas:
+        emitted = {}
+        for key, ids in delta.items():
+            s = seen.setdefault(key, [])
+            for nid in sorted(ids):
+                if len(s) >= cap:
+                    break
+                for old in s:
+                    pair = (min(old, nid), max(old, nid))
+                    emitted[pair] = min(emitted.get(pair, key), key)
+                s.append(nid)
+        out.append(emitted)
+    return out
+
+
+def _batch_rows(out_dir, batch):
+    names = sorted(n for n in os.listdir(out_dir) if n.startswith(f"batch-{batch:06d}-"))
+    rows = []
+    for n in names:
+        t = pq.read_table(os.path.join(out_dir, n))
+        rows.extend(zip(t["id_a"].to_pylist(), t["id_b"].to_pylist(),
+                        t["block_key"].to_pylist()))
+    return rows
+
+
+def test_pair_cap_matches_reference(staged_pages):
+    """max_state_ids=3 binds on shared hosts and near-dup bands: each
+    catch-up's pairs equal the stateful emitter's per-key rule."""
+    spark, in_dir, _, _, full_df, second = staged_pages
+    out_dir, ckpt = in_dir + "_cap_out", in_dir + "_cap_ckpt"
+    first = full_df.subtract(second)
+    ref = _reference_pairs([_keyed_rows(first), _keyed_rows(second)], cap=3)
+
+    assert streaming.run_incremental_pairs(spark, in_dir, out_dir, ckpt,
+                                           max_state_ids=3) == 0
+    second.coalesce(1).write.mode("append").parquet(in_dir)
+    assert streaming.run_incremental_pairs(spark, in_dir, out_dir, ckpt,
+                                           max_state_ids=3) == 1
+    for batch, want in enumerate(ref):
+        got = _batch_rows(out_dir, batch)
+        assert len(got) == len({(a, b) for a, b, _ in got})  # one row per pair
+        assert {(a, b): k for a, b, k in got} == want
+    # the cap bound: without it the second catch-up emits more
+    n_capped = sum(len(r) for r in ref)
+    uncapped = _reference_pairs([_keyed_rows(first), _keyed_rows(second)], cap=10**6)
+    assert sum(len(r) for r in uncapped) > n_capped > 0
+
+
+def test_pair_catch_up_crash_recovery(staged_pages):
+    """A catch-up that dies before its commit marker is rerun in full: the
+    rerun replaces that batch's files, so the log is identical and holds
+    each pair once."""
+    spark, in_dir, _, _, full_df, second = staged_pages
+    out_dir, ckpt = in_dir + "_crash_out", in_dir + "_crash_ckpt"
+    streaming.run_incremental_pairs(spark, in_dir, out_dir, ckpt)
+    second.coalesce(1).write.mode("append").parquet(in_dir)
+    streaming.run_incremental_pairs(spark, in_dir, out_dir, ckpt)
+
+    def snapshot():
+        pairs = sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
+        keys = sorted(tuple(r) for r in spark.read.parquet(ckpt + "/keys").collect())
+        return pairs, keys
+
+    before = snapshot()
+    os.remove(os.path.join(ckpt, "commits", "000001.json"))
+    assert streaming.run_incremental_pairs(spark, in_dir, out_dir, ckpt) == 1
+    after = snapshot()
+    assert after == before
+    assert len(after[0]) == len({(a, b) for a, b, _ in after[0]})
+    assert sorted(os.listdir(os.path.join(ckpt, "commits"))) == ["000000.json", "000001.json"]
+    # nothing new landed: the next catch-up commits nothing
+    assert streaming.run_incremental_pairs(spark, in_dir, out_dir, ckpt) is None
+
+
+def test_pair_catch_up_rejects_streaming_dirs(staged_pages, tmp_path):
+    """A directory left by a Structured Streaming query raises: a file-sink
+    output's readers only see the files in its metadata log."""
+    spark, in_dir, _, _, _, _ = staged_pages
+    old_ckpt = tmp_path / "old_ckpt"
+    (old_ckpt / "offsets").mkdir(parents=True)
+    with pytest.raises(ValueError, match="Structured Streaming checkpoint"):
+        streaming.run_incremental_pairs(spark, in_dir, str(tmp_path / "o1"), str(old_ckpt))
+    old_out = tmp_path / "old_out"
+    (old_out / "_spark_metadata").mkdir(parents=True)
+    with pytest.raises(ValueError, match="streaming file sink"):
+        streaming.run_incremental_pairs(spark, in_dir, str(old_out), str(tmp_path / "c2"))
+    with pytest.raises(ValueError, match="streaming file sink"):
+        streaming.run_incremental(spark, in_dir, str(old_out), str(tmp_path / "c3"))
+
+
+def test_pair_catch_up_is_a_batch_job(staged_pages):
+    """One catch-up starts no streaming query and runs at most 15 Spark
+    jobs (the Structured Streaming emitter committed 36 state stores per
+    catch-up)."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Starts(StreamingQueryListener):
+        started: list = []
+
+        def onQueryStarted(self, event):
+            self.started.append(event.id)
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    spark, in_dir, _, _, _, second = staged_pages
+    out_dir, ckpt = in_dir + "_jobs_out", in_dir + "_jobs_ckpt"
+    sc = spark.sparkContext
+    listener = Starts()
+    spark.streams.addListener(listener)
+    try:
+        for k in range(2):
+            if k:
+                second.coalesce(1).write.mode("append").parquet(in_dir)
+            group = f"test_catch_up_jobs_{k}"
+            sc.setJobGroup(group, "one catch-up")
+            try:
+                assert streaming.run_incremental_pairs(spark, in_dir, out_dir, ckpt) == k
+                jobs = sc.statusTracker().getJobIdsForGroup(group)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            assert spark.streams.active == []
+            assert 1 <= len(jobs) <= 15, (k, len(jobs))
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.started == []
 
 
 def test_streaming_sessions_event_time_timeout(spark, tmp_path):
@@ -196,10 +351,9 @@ def test_streaming_textstats_and_pii(spark, tmp_path):
 
 
 def test_streaming_neardup_equals_batch_minhash(staged_pages):
-    """Round 5: streaming near-dup BY COMPOSITION — minhash band keys
-    (the batch path's own band UDF) feeding the stateful pair emitter must
-    reproduce the batch minhash candidate set across two catch-up runs,
-    with per-band-bucket exactly-once across the checkpoint restart."""
+    """Near-dup catch-up BY COMPOSITION — minhash band keys (the batch
+    path's own band UDF) feeding the pair emitter must reproduce the batch
+    minhash candidate set across two catch-up runs, each pair once."""
     from levsim.extras.dedup import minhash_candidate_pairs
 
     spark, in_dir, _, _, full_df, second = staged_pages
@@ -214,9 +368,8 @@ def test_streaming_neardup_equals_batch_minhash(staged_pages):
     second.coalesce(1).write.mode("append").parquet(in_dir)
     streaming.run_incremental_neardup(spark, in_dir, out_dir, ckpt, **kw)
     got = spark.read.parquet(out_dir)
-    # exactly-once per (pair, band bucket) across the restart
-    assert got.groupBy("id_a", "id_b", "block_key").count() \
-              .where(F.col("count") > 1).count() == 0
+    # exactly-once: one row per distinct pair across both runs
+    assert got.count() == got.select("id_a", "id_b").distinct().count()
     sgot = got.select("id_a", "id_b").distinct()
 
     want = minhash_candidate_pairs(
