@@ -22,6 +22,10 @@ orchestration):
    global relabeling anyway.  The bound is the union-find's: the log's
    distinct matched ids must fit in one Python worker.
 
+Both steps read the matches log with the schema from its first file's
+footer (``tables.read_parquet_log``), so neither runs a schema-inference
+job.
+
 Equivalence guarantee (tested): after any sequence of catch-ups, clusters
 equal the batch pipeline's clusters on the union of all pages, because the
 catch-up pair log equals the batch candidate set (test_streaming) and
@@ -38,6 +42,7 @@ from pyspark.sql import functions as F
 
 from . import scoring
 from .clustering import connected_components
+from .tables import read_parquet_log
 
 
 def score_new_pairs(
@@ -58,7 +63,7 @@ def score_new_pairs(
     identity, so re-running a catch-up is idempotent."""
     pairs = pairs.select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
     if os.path.exists(matches_path):
-        seen = spark.read.parquet(matches_path).select("id_a", "id_b", "scored")
+        seen = read_parquet_log(spark, matches_path).select("id_a", "id_b", "scored")
         todo = pairs.join(seen.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
     else:
         todo = pairs
@@ -82,6 +87,6 @@ def refresh_clusters(
     score_col: str = "ratio",
 ) -> DataFrame:
     """Connected components over the accepted matches in the log."""
-    log = spark.read.parquet(matches_path)
+    log = read_parquet_log(spark, matches_path)
     edges = log.where(F.col(score_col) >= tau).select("id_a", "id_b")
     return connected_components(edges)

@@ -11,10 +11,19 @@ therefore resumes at the first incomplete stage with byte-identical results
 the input files' paths, sizes and mtimes (``tables.input_snapshot_id``); an
 in-memory pages DataFrame gets a per-run id, so nothing resumes for it.
 
-Lineage: one row per executed/skipped stage (run id, stage, input snapshot
-ids, output snapshot id, row count, wall seconds, skipped flag).
-Metrics: per-stage row counts + per-partition row histograms via
-``spark_partition_id()``.
+Each executed stage is its compute plus one write job: the row count and
+the per-file counts come from the snapshot manifest (parquet footers, see
+``tables``), and the next stage reads the snapshot with its stored schema,
+so no bookkeeping job runs.  Every job a stage runs is tagged with the job
+group ``er_<stage>``; ``run`` restores the caller's job group on return.
+
+Lineage (``lineage.jsonl``): one row per executed/skipped stage (run id,
+stage, input snapshot ids, output snapshot id, row count from the manifest,
+wall seconds, skipped flag); the candidates row adds ``pairs_by_pass``,
+observed on the candidates write (``DataFrame.observe``).
+Metrics (``metrics/``, parquet): one row per (stage, write task) of every
+executed stage, columns (partition_id, rows, stage, run_id), written from
+the manifest's per-file counts in the driver.
 """
 
 from __future__ import annotations
@@ -26,11 +35,17 @@ import uuid
 from dataclasses import dataclass, field
 from typing import List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import blocking, candidates, clustering, consensus, normalize, scoring
 from .tables import SnapshotTable, input_snapshot_id, snapshot_id_for
+
+
+# the local properties setJobGroup sets, restored when run() returns
+_JOB_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
 
 @dataclass
@@ -120,19 +135,19 @@ class ERPipeline:
         # tag every Spark job this stage triggers so UI/REST stage metrics
         # (shuffle bytes, spill, GC) aggregate per pipeline stage — the
         # instrumentation behind scripts/profile_pipeline.py
-        try:
-            self.spark.sparkContext.setJobGroup(f"er_{name}", f"er stage {name}")
-        except Exception:
-            pass
+        self.spark.sparkContext.setJobGroup(f"er_{name}", f"er stage {name}")
         t0 = time.time()
-        if table.exists(sid):
-            df = table.read(self.spark, sid)
-            res = StageResult(name, sid, table.manifest(sid)["row_count"], 0.0, True)
+        skipped = table.exists(sid)
+        if skipped:
+            rows = table.manifest(sid)["row_count"]
         else:
-            df = compute()
-            table.write(df, sid, params=self.cfg.params(), parent=inputs[0] if inputs else None)
-            df = table.read(self.spark, sid)  # read back: downstream plans scan parquet
-            res = StageResult(name, sid, table.manifest(sid)["row_count"], time.time() - t0, False)
+            info = table.write(compute(), sid, params=self.cfg.params(),
+                               parent=inputs[0] if inputs else None)
+            rows = info.row_count
+            self._write_metrics(name, table.manifest(sid))
+        # downstream plans scan the snapshot (stored schema: no job)
+        df = table.read(self.spark, sid)
+        res = StageResult(name, sid, rows, 0.0 if skipped else time.time() - t0, skipped)
         self._lineage.append(
             {
                 "run_id": self.run_id,
@@ -154,18 +169,32 @@ class ERPipeline:
                 f.write(json.dumps(row) + "\n")
         self._lineage = []
 
-    def _write_metrics(self, df: DataFrame, stage: str):
-        """Per-partition row counts -> metrics table (north rule lineage/metrics)."""
-        m = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("run_id", F.lit(self.run_id))
-        )
-        m.write.mode("append").parquet(os.path.join(self.workdir, "metrics"))
+    def _write_metrics(self, stage: str, manifest: dict):
+        """Rows per write task of a stage -> metrics table, from the
+        manifest's per-file counts."""
+        rows: dict = {}
+        for f in manifest["files"]:
+            rows[f["task"]] = rows.get(f["task"], 0) + f["rows"]
+        out = os.path.join(self.workdir, "metrics")
+        os.makedirs(out, exist_ok=True)
+        pq.write_table(pa.table({
+            "partition_id": pa.array(list(rows), pa.int32()),
+            "rows": pa.array(list(rows.values()), pa.int64()),
+            "stage": pa.array([stage] * len(rows), pa.string()),
+            "run_id": pa.array([self.run_id] * len(rows), pa.string()),
+        }), os.path.join(out, f"{self.run_id}-{stage}.parquet"))
 
     # ------------------------------------------------------------------
     def run(self, pages: DataFrame, pages_snapshot_id: Optional[str] = None) -> ERRun:
+        sc = self.spark.sparkContext
+        saved = {k: sc.getLocalProperty(k) for k in _JOB_PROPS}
+        try:
+            return self._run(pages, pages_snapshot_id)
+        finally:
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
+
+    def _run(self, pages: DataFrame, pages_snapshot_id: Optional[str]) -> ERRun:
         cfg = self.cfg
         if pages_snapshot_id is None:
             pages_snapshot_id = input_snapshot_id(pages, f"{self.run_id}_{uuid.uuid4().hex}")
@@ -182,6 +211,8 @@ class ERPipeline:
         norm_df, r = self._stage("normalize", [pages_snapshot_id], compute_norm,
                                  self.tables["pages_norm"])
         stages.append(r)
+
+        by_pass = Observation("pairs_by_pass")
 
         def compute_pairs():
             blocks = blocking.add_block_keys(
@@ -210,18 +241,21 @@ class ERPipeline:
                     F.lit("snm").alias("block_pass"),
                     F.concat(F.lit("s:"), F.col("gap").cast("string")).alias("block_key"),
                 )
-            return candidates.candidate_pairs(blocks, max_block_size=cfg.max_block_size,
-                                              drop_block_size=cfg.drop_block_size,
-                                              extra_pairs=extra)
+            pairs = candidates.candidate_pairs(blocks, max_block_size=cfg.max_block_size,
+                                               drop_block_size=cfg.drop_block_size,
+                                               extra_pairs=extra)
+            # blocking observability: per-pass candidate counts, observed
+            # on the snapshot write
+            passes = [*cfg.blocking_passes, *(["snm"] if cfg.snm_window else [])]
+            return pairs.observe(by_pass, *[
+                F.count_if(F.col("block_pass") == p).alias(p) for p in passes])
 
         pairs_df, r = self._stage("candidates", [stages[-1].snapshot_id], compute_pairs,
                                   self.tables["pairs"])
         stages.append(r)
         if not r.skipped:
-            # blocking observability: per-pass candidate counts -> lineage
-            by_pass = {row.block_pass: row["count"]
-                       for row in pairs_df.groupBy("block_pass").count().collect()}
-            self._lineage[-1]["pairs_by_pass"] = by_pass
+            self._lineage[-1]["pairs_by_pass"] = {
+                p: n for p, n in by_pass.get.items() if n}
 
         def compute_scores():
             # widen the ids-only pair set BEFORE attaching texts: pair rows
@@ -274,7 +308,6 @@ class ERPipeline:
                                  self.tables["representatives"])
         stages.append(r)
 
-        self._write_metrics(clusters_df, "clusters")
         self._flush_lineage()
         return ERRun(clusters=clusters_df, representatives=reps_df, matched=matched,
                      stages=stages)

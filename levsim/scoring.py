@@ -4,7 +4,10 @@ Arrow-batched kernels.
 Plan shape (what .explain should show): two shuffled hash/sort-merge joins
 on doc_id to attach (text, length) to each side, a WholeStageCodegen
 prefilter on the length bound, then ONE ArrowEvalPython node computing all
-requested scores in a single Python round-trip.
+requested scores in a single Python round-trip.  The pipeline's cascade
+(``score_pairs_cascade``) is the same single crossing, gated: the UDF
+computes the banded ratio for every row and the secondary scorers only for
+rows whose ratio is >= tau, and the ``ratio >= tau`` filter follows it.
 
 One-side-cache affinity (reference CachedIndel/CachedLevenshtein,
 _levenshtein.hpp:488,600,666): sortWithinPartitions(id_a) groups equal
@@ -94,18 +97,19 @@ def score_pairs(
         df = df.repartition(repartition, "id_a")
     if sort_for_cache:
         df = df.sortWithinPartitions("id_a")
-    known = tuple(s for s in scorers if s in (
-        "ratio", "jaro_winkler", "jaro", "distance",
-        "osa", "affine_gap", "partial_ratio",
-    ))
+    known = tuple(s for s in scorers if s in udfs.SCORERS)
     if known:
         # one Arrow crossing for all scores (struct-returning UDF)
-        scored = udfs.multi_score_udf(known, ratio_cutoff=tau)("text_a", "text_b")
-        df = df.withColumn("_scores", scored)
-        for f in df.schema["_scores"].dataType.fieldNames():
-            df = df.withColumn(f, F.col("_scores")[f])
-        df = df.drop("_scores")
+        df = df.withColumn("_scores", udfs.multi_score_udf(known, ratio_cutoff=tau)(
+            "text_a", "text_b"))
+        df = _unpack_scores(df)
     return df
+
+
+def _unpack_scores(df: DataFrame) -> DataFrame:
+    """The ``_scores`` struct column -> one column per score."""
+    fields = df.schema["_scores"].dataType.fieldNames()
+    return df.withColumns({f: F.col("_scores")[f] for f in fields}).drop("_scores")
 
 
 def matched_pairs(scored: DataFrame, tau: float, score_col: str = "ratio") -> DataFrame:
@@ -118,28 +122,23 @@ def score_pairs_cascade(
     secondary: Sequence[str] = ("jaro_winkler",),
     repartition: Optional[int] = None,
 ) -> DataFrame:
-    """Cascade scoring: cheap-first.  The banded ratio kernel (with its
-    in-kernel cutoff) scores every candidate; expensive secondary scorers
-    (jaro-family is O(l1*l2) on long texts) run ONLY on pairs at or above
-    tau.  This is the reference's score_cutoff early-exit philosophy lifted
-    across scorers: at web scale the overwhelming majority of candidates
-    die at the ratio gate, so secondary-kernel cost tracks the (tiny)
-    match count instead of the candidate count."""
+    """Cascade scoring: cheap-first, in ONE Arrow crossing.  The banded
+    ratio kernel (with its in-kernel cutoff) scores every candidate that
+    passes the length bound; inside the same pandas UDF the expensive
+    secondary scorers (jaro-family is O(l1*l2) on long texts) run ONLY on
+    the rows whose ratio is at or above tau, and the ``ratio >= tau`` filter
+    comes after the UDF.  This is the reference's score_cutoff early-exit
+    philosophy lifted across scorers: at web scale the overwhelming
+    majority of candidates die at the ratio gate, so secondary-kernel cost
+    tracks the (tiny) match count instead of the candidate count, and each
+    scoring task holds one Python worker, not two chained ones."""
     df = pairs_with_text.where(
         prefilter.ratio_length_bound(F.col("len_a"), F.col("len_b"), tau)
     )
     if repartition:
         df = df.repartition(repartition, "id_a")
     df = df.sortWithinPartitions("id_a")
-    df = df.withColumn("ratio", udfs.lev_ratio_udf(score_cutoff=tau)("text_a", "text_b"))
-    df = df.where(F.col("ratio") >= F.lit(tau))
-    sec = tuple(s for s in secondary if s in (
-        "jaro_winkler", "jaro", "distance", "osa", "affine_gap", "partial_ratio",
-    ))
-    if sec:
-        scored = udfs.multi_score_udf(sec)("text_a", "text_b")
-        df = df.withColumn("_scores", scored)
-        for f in df.schema["_scores"].dataType.fieldNames():
-            df = df.withColumn(f, F.col("_scores")[f])
-        df = df.drop("_scores")
-    return df
+    sec = tuple(s for s in secondary if s in udfs.SCORERS and s != "ratio")
+    scored = udfs.multi_score_udf(("ratio", *sec), ratio_cutoff=tau, gate=tau)
+    df = df.withColumn("_scores", scored("text_a", "text_b"))
+    return _unpack_scores(df.where(F.col("_scores.ratio") >= F.lit(tau)))

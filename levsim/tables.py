@@ -8,6 +8,14 @@ snapshots, JSON manifests, atomic commit (rename-into-place), time travel,
 and validity checks for checkpoint-resume — behind an interface that a real
 Iceberg catalog can replace via config when the jar is present.
 
+A snapshot costs one Spark job: the write.  As in an Iceberg manifest, the
+JSON manifest records the data files with their record counts, taken from
+each part file's parquet footer in the driver, and the write task of each
+file, plus the table schema (``df.schema``).  ``row_count`` is the sum of
+the file counts, so nothing is read back, and ``read`` passes the stored
+schema to the reader, so no schema-inference job runs either.  A manifest
+written without a schema (older code) still reads, by inference.
+
 The synthetic corpus generator is fully deterministic (fixed seed,
 content-derived ids; FIXTURES.md F1): seeded entity clusters of
 near-duplicate pages with known ground truth, perturbation rates calibrated
@@ -31,6 +39,7 @@ from typing import List, Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 _WORDS = (
@@ -161,6 +170,33 @@ def extract_text_from_html(html_col):
 # ---------------------------------------------------------------------------
 
 
+def _parquet_files(path: str) -> List[str]:
+    """The data files under ``path``, sorted; hidden files (``_SUCCESS``,
+    ``.crc``) are skipped, as Spark's file index skips them."""
+    out = []
+    for d, subdirs, names in os.walk(path):
+        subdirs[:] = [s for s in subdirs if not s.startswith(("_", "."))]
+        out += [os.path.join(d, n) for n in names if not n.startswith(("_", "."))]
+    return sorted(out)
+
+
+# footer key under which Spark's parquet writer stores the Spark schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_parquet_log(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` for an append-only log that Spark wrote,
+    without a schema-inference job: the schema is the Spark schema in the
+    first data file's footer, read in the driver.  That is the footer Spark's
+    own inference reads; a log without one is read by inference."""
+    files = _parquet_files(path)
+    meta = pq.read_schema(files[0]).metadata if files else None
+    if not meta or _SPARK_SCHEMA_KEY not in meta:
+        return spark.read.parquet(path)
+    schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(path)
+
+
 @dataclass
 class SnapshotInfo:
     snapshot_id: str
@@ -219,7 +255,9 @@ class SnapshotTable:
     def write(self, df: DataFrame, snapshot_id: str, params: Optional[dict] = None,
               parent: Optional[str] = None,
               partition_by: Optional[List[str]] = None) -> SnapshotInfo:
-        """Write df as a new snapshot; atomic commit via rename-into-place.
+        """Write df as a new snapshot in one Spark job; atomic commit via
+        rename-into-place.  The manifest's row and file counts come from the
+        written footers, not from a read-back.
 
         ``partition_by``: hive-style partition columns (e.g. ["lang"]) —
         the Iceberg-partitioning analog; subsequent reads with a filter on
@@ -234,16 +272,25 @@ class SnapshotTable:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_dir)
-        count = df.sparkSession.read.parquet(data_dir).count()
+        # Spark names each data file part-<write task>-<uuid>...
+        files = [{"path": os.path.relpath(f, tmp), "rows": pq.read_metadata(f).num_rows,
+                  "task": int(re.match(r"part-(\d+)", os.path.basename(f)).group(1))}
+                 for f in _parquet_files(data_dir)]
+        # the schema a reader of the files sees: partition columns come last
+        pb = list(partition_by or [])
+        schema = StructType([f for f in df.schema if f.name not in pb]
+                            + [df.schema[c] for c in pb])
         manifest = {
             "snapshot_id": snapshot_id,
             "table": self.name,
-            "row_count": count,
+            "row_count": sum(f["rows"] for f in files),
             "created_at": time.time(),
             "parent": parent,
             "params": params or {},
             "format": "parquet",
-            "partition_by": list(partition_by or []),
+            "partition_by": pb,
+            "schema": schema.jsonValue(),
+            "files": files,
         }
         with open(os.path.join(tmp, "manifest.json"), "w") as f:
             json.dump(manifest, f, indent=1)
@@ -265,9 +312,13 @@ class SnapshotTable:
     def read(self, spark: SparkSession, snapshot_id: Optional[str] = None) -> DataFrame:
         """Read a snapshot (time travel with explicit id; current otherwise)."""
         sid = snapshot_id or self.current_id()
-        if sid is None or not self.exists(sid):
+        m = self.manifest(sid) if sid is not None else None
+        if m is None:
             raise FileNotFoundError(f"{self.name}: snapshot {sid!r} not found")
-        return spark.read.parquet(os.path.join(self._snap_dir(sid), "data"))
+        reader = spark.read
+        if "schema" in m:
+            reader = reader.schema(StructType.fromJson(m["schema"]))
+        return reader.parquet(os.path.join(self._snap_dir(sid), "data"))
 
     def _info(self, snapshot_id: str) -> SnapshotInfo:
         m = self.manifest(snapshot_id)

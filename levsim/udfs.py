@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from typing import Optional, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
@@ -102,66 +103,63 @@ def lev_hamming_udf(score_cutoff: Optional[int] = None):
     return _once(_udf)
 
 
+# scorer name -> (struct field, Spark type, pandas dtype, batch kernel), in
+# the struct's field order
+_SCORERS = {
+    "ratio": ("ratio", DoubleType(), "float64", batch.batch_ratio),
+    "jaro_winkler": ("jaro_winkler", DoubleType(), "float64", batch.batch_jaro_winkler),
+    "jaro": ("jaro", DoubleType(), "float64", batch.batch_jaro),
+    "distance": ("lev_distance", LongType(), "Int64", batch.batch_distance),
+    "osa": ("osa", LongType(), "Int64", batch.batch_osa),
+    "affine_gap": ("affine_gap", LongType(), "Int64", batch.batch_affine_gap),
+    "partial_ratio": ("partial_ratio", DoubleType(), "float64", batch.batch_partial_ratio),
+}
+SCORERS = tuple(_SCORERS)
+
+
 def multi_score_udf(scorers: Tuple[str, ...] = ("ratio", "jaro_winkler"),
-                    ratio_cutoff: Optional[float] = None):
+                    ratio_cutoff: Optional[float] = None,
+                    gate: Optional[float] = None):
     """All requested scores in ONE Arrow crossing, returned as a struct.
 
     Each extra scorer as a separate pandas UDF re-ships both text columns
     through Arrow; combining them halves (or better) the Python-boundary
     bandwidth of the scoring stage — the dominant non-kernel cost at high
-    core counts."""
-    fields = []
-    if "ratio" in scorers:
-        fields.append(StructField("ratio", DoubleType()))
-    if "jaro_winkler" in scorers:
-        fields.append(StructField("jaro_winkler", DoubleType()))
-    if "jaro" in scorers:
-        fields.append(StructField("jaro", DoubleType()))
-    if "distance" in scorers:
-        fields.append(StructField("lev_distance", LongType()))
-    if "osa" in scorers:
-        fields.append(StructField("osa", LongType()))
-    if "affine_gap" in scorers:
-        fields.append(StructField("affine_gap", LongType()))
-    if "partial_ratio" in scorers:
-        fields.append(StructField("partial_ratio", DoubleType()))
-    schema = StructType(fields)
+    core counts.
+
+    ``gate`` makes the crossing a cascade (``scoring.score_pairs_cascade``):
+    ``ratio`` (which must be requested) is computed for every row first, and
+    the other scorers run only on the rows whose ratio is >= ``gate``; on
+    the other rows they are NULL.  A row with a NULL text is NULL in every
+    field."""
+    names = [s for s in _SCORERS if s in scorers]
+    if gate is not None and "ratio" not in names:
+        raise ValueError("a gated multi_score_udf needs the ratio scorer")
+    schema = StructType([StructField(_SCORERS[s][0], _SCORERS[s][1]) for s in names])
 
     @pandas_udf(schema)
     def _udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
         al, bl = a.tolist(), b.tolist()
         out = {}
-        nulls = None
-        if "ratio" in scorers:
-            v, n = batch.batch_ratio(al, bl, score_cutoff=ratio_cutoff)
-            out["ratio"] = v
-            nulls = n
-        if "jaro_winkler" in scorers:
-            v, n = batch.batch_jaro_winkler(al, bl)
-            out["jaro_winkler"] = v
-            nulls = n if nulls is None else nulls
-        if "jaro" in scorers:
-            v, n = batch.batch_jaro(al, bl)
-            out["jaro"] = v
-            nulls = n if nulls is None else nulls
-        if "distance" in scorers:
-            v, n = batch.batch_distance(al, bl)
-            out["lev_distance"] = v
-            nulls = n if nulls is None else nulls
-        if "osa" in scorers:
-            v, n = batch.batch_osa(al, bl)
-            out["osa"] = v
-            nulls = n if nulls is None else nulls
-        if "affine_gap" in scorers:
-            v, n = batch.batch_affine_gap(al, bl)
-            out["affine_gap"] = v
-            nulls = n if nulls is None else nulls
-        if "partial_ratio" in scorers:
-            v, n = batch.batch_partial_ratio(al, bl)
-            out["partial_ratio"] = v
-            nulls = n if nulls is None else nulls
+        nulls = np.zeros(len(al), dtype=bool)
+        rows = None  # the rows the non-ratio scorers see; None = all
+        for s in names:
+            field, _, dtype, kernel = _SCORERS[s]
+            if s == "ratio":
+                v, n = kernel(al, bl, score_cutoff=ratio_cutoff)
+                if gate is not None:
+                    rows = np.flatnonzero(~n & (v >= gate))
+            elif rows is None:
+                v, n = kernel(al, bl)
+            else:  # gated: the rows at or above the gate, NULL elsewhere
+                col = pd.Series(pd.array([None] * len(al), dtype=dtype))
+                col.iloc[rows] = kernel([al[i] for i in rows], [bl[i] for i in rows])[0]
+                out[field] = col
+                continue
+            out[field] = pd.Series(v, dtype=dtype)
+            nulls |= n
         df = pd.DataFrame(out)
-        if nulls is not None and nulls.any():
+        if nulls.any():
             df.loc[nulls, :] = None
         return df
 

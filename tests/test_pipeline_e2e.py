@@ -81,6 +81,55 @@ def test_pipeline_new_input_same_workdir_recomputes(spark, tmp_path):
     assert counts[0] != counts[1]
 
 
+STAGES = ("normalize", "candidates", "scores", "clusters", "consensus")
+
+
+def test_pipeline_bookkeeping_runs_no_jobs(spark, pages, tmp_path):
+    """Each stage is its compute plus one write: no read-back count, no
+    schema-inference read, no pairs_by_pass collect, no metrics job (38 jobs
+    on this corpus before).  Lineage and metrics still come out right, and
+    run() hands the caller's job group back."""
+    import json
+    import os
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = {g: set(tracker.getJobIdsForGroup(f"er_{g}")) for g in STAGES}
+    sc.setJobGroup("test_caller_group", "the caller's jobs")
+    try:
+        wd = str(tmp_path / "er_jobs")
+        run = ERPipeline(spark, wd, ERConfig(tau=0.87)).run(pages)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "test_caller_group"
+        assert sc.getLocalProperty("spark.job.description") == "the caller's jobs"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = {g: set(tracker.getJobIdsForGroup(f"er_{g}")) - before[g] for g in STAGES}
+    assert sum(map(len, jobs.values())) <= 16, {g: len(j) for g, j in jobs.items()}
+    assert all(jobs.values()), jobs  # every stage ran its write under its group
+
+    with open(os.path.join(wd, "lineage.jsonl")) as f:
+        lineage = {r["stage"]: r for r in map(json.loads, f)}
+    pairs = ERPipeline(spark, wd).tables["pairs"].read(spark)
+    want = {r.block_pass: r["count"] for r in pairs.groupBy("block_pass").count().collect()}
+    assert lineage["candidates"]["pairs_by_pass"] == want
+
+    metrics = spark.read.parquet(os.path.join(wd, "metrics")).collect()
+    assert {r.stage for r in metrics} == set(STAGES)
+    assert {r.run_id for r in metrics} == {lineage["normalize"]["run_id"]}
+    for s in run.stages:
+        got = [r for r in metrics if r.stage == s.stage]
+        assert sum(r.rows for r in got) == s.rows == lineage[s.stage]["rows"], s.stage
+        assert len({r.partition_id for r in got}) == len(got), s.stage
+
+
+def test_pipeline_restores_unset_job_group(spark, pages, tmp_path):
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    ERPipeline(spark, str(tmp_path / "er_group"), ERConfig(tau=0.87)).run(pages)
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+
+
 def test_input_snapshot_id(spark, pages, tmp_path):
     path = str(tmp_path / "pages")
     pages.write.parquet(path)

@@ -172,3 +172,113 @@ def test_snapshot_contract_iceberg_backend(tmp_path):
             spark, IcebergSnapshotTable(spark, "contract_ice"))
     finally:
         spark.stop()
+
+
+def _jobs_in(spark, group, fn):
+    """fn() under a fresh job group -> (its result, the group's job ids)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_snapshot_row_count_from_footers(spark, tmp_path):
+    """row_count is the manifest's per-file footer counts, and it equals a
+    read-back count for a plain, an empty and a partitioned write; the read
+    schema is the one inference of the written files would give."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from levsim.tables import SnapshotTable
+
+    t = SnapshotTable(str(tmp_path), "counts")
+    rows = spark.range(0, 1000, numPartitions=5).select(
+        "id", (F.col("id") % 3).cast("string").alias("k"), F.lit("x").alias("v"))
+    cases = {
+        "plain": (rows, None),
+        "empty": (rows.where("id < 0"), None),
+        "parts": (rows, ["k"]),
+        "empty_parts": (rows.where("id < 0"), ["k"]),
+    }
+    for sid, (df, pb) in cases.items():
+        info, jobs = _jobs_in(spark, f"test_snapshot_write_{sid}",
+                              lambda: t.write(df, sid, partition_by=pb))
+        assert len(jobs) == 1, (sid, jobs)  # the write, nothing else
+        got = t.read(spark, sid)
+        assert info.row_count == got.count() == df.count(), sid
+        m = t.manifest(sid)
+        assert sum(f["rows"] for f in m["files"]) == m["row_count"] == info.row_count
+        assert got.columns == (["id", "v", "k"] if pb else ["id", "k", "v"])
+        assert {f.name: f.dataType for f in got.schema} == {
+            f.name: f.dataType for f in df.schema}, sid
+        if not pb:
+            inferred = spark.read.parquet(os.path.join(t.dir, f"snap_{sid}", "data"))
+            assert got.schema == inferred.schema, sid
+    # inference would read the partition values "0", "1", "2" as integers;
+    # the stored schema keeps the column's written type
+    assert str(t.read(spark, "parts").schema["k"].dataType) == "StringType()"
+
+
+def test_snapshot_read_runs_no_job(spark, tmp_path):
+    from levsim.tables import SnapshotTable, generate_pages
+
+    t = SnapshotTable(str(tmp_path), "nojob")
+    t.write(generate_pages(spark, n_entities=10, partitions=3), "s1", partition_by=["lang"])
+    schema, jobs = _jobs_in(spark, "test_snapshot_read_no_job",
+                            lambda: t.read(spark, "s1").schema)
+    assert jobs == [], jobs
+    assert schema.fieldNames() == ["url", "warc_ts", "html", "text", "entity_id", "lang"]
+
+
+def test_snapshot_old_manifest_reads_by_inference(spark, tmp_path):
+    """A manifest written without schema and file list (older code) still
+    reads: the reader falls back to schema inference."""
+    import json
+
+    from levsim.tables import SnapshotTable
+
+    t = SnapshotTable(str(tmp_path), "old")
+    df = spark.range(0, 17).selectExpr("id", "cast(id as string) AS s")
+    t.write(df, "legacy")
+    path = t._manifest_path("legacy")
+    with open(path) as f:
+        m = json.load(f)
+    want = t.read(spark, "legacy").schema
+    for k in ("schema", "files"):
+        del m[k]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    got = t.read(spark, "legacy")
+    assert got.schema == want
+    assert got.count() == 17 == t.write(df, "legacy").row_count
+
+
+def test_read_parquet_log_without_inference(spark, tmp_path):
+    """An append-only log Spark wrote reads with the schema of its first
+    file's footer and runs no job; a log without Spark's footer key (or an
+    empty directory's missing files) falls back to inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from levsim.tables import read_parquet_log
+
+    log = str(tmp_path / "log")
+    for k in range(2):
+        spark.range(k * 10, k * 10 + 10).selectExpr(
+            "id AS id_a", "id + 1 AS id_b", "cast(id AS double) / 20 AS ratio",
+            "true AS scored").write.mode("append").parquet(log)
+    df, jobs = _jobs_in(spark, "test_read_log_no_job",
+                        lambda: read_parquet_log(spark, log))
+    assert jobs == [], jobs
+    assert df.schema == spark.read.parquet(log).schema
+    assert df.count() == 20
+    plain = str(tmp_path / "plain")
+    (tmp_path / "plain").mkdir()
+    pq.write_table(pa.table({"x": [1, 2, 3]}), f"{plain}/part-0.parquet")
+    assert read_parquet_log(spark, plain).schema == spark.read.parquet(plain).schema

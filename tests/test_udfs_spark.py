@@ -125,3 +125,49 @@ def test_score_pairs_accepts_new_scorers(spark):
     casc = score_pairs_cascade(df, tau=0.5, secondary=("jaro_winkler", "osa")).collect()[0]
     assert casc.osa == K.osa_distance("lewenstein", "levenshtein")
     assert casc.ratio >= 0.5
+
+
+CASCADE_ROWS = [
+    ("lewenstein", "levenshtein"),  # above tau
+    ("kitten", "sitting"),  # below tau
+    ("abcdef", "abcdeg"),  # above
+    ("abcd", "wxyz"),  # below, same length
+    ("", ""),  # empty pair: ratio 1.0
+    ("", "abc"),
+    (None, "abc"),
+    ("abc", None),
+    ("ab ü日 cd", "ab ü日 ce"),
+]
+
+
+@pytest.mark.parametrize("scorer", [s for s in udfs.SCORERS if s != "ratio"])
+def test_cascade_fused_equals_two_step(spark, scorer):
+    """The one-crossing cascade returns the rows and values of the two-step
+    reference (ratio UDF, ratio >= tau, then the secondary UDF on the
+    survivors), and its plan has exactly one ArrowEvalPython."""
+    from levsim.scoring import score_pairs_cascade
+
+    tau = 0.7
+    rows = [(i, i + 1000, a, b) for i, (a, b) in enumerate(CASCADE_ROWS + ROWS)]
+    df = spark.createDataFrame(
+        rows, "id_a long, id_b long, text_a string, text_b string"
+    ).withColumn("len_a", F.length("text_a")).withColumn("len_b", F.length("text_b"))
+    fused = score_pairs_cascade(df, tau=tau, secondary=(scorer,))
+    plan = fused._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+    ref = df.withColumn("ratio", udfs.lev_ratio_udf(score_cutoff=tau)("text_a", "text_b"))
+    ref = ref.where(F.col("ratio") >= tau).localCheckpoint()
+    ref = ref.withColumn("_s", udfs.multi_score_udf((scorer,))("text_a", "text_b"))
+    field = ref.schema["_s"].dataType.fieldNames()[0]
+    ref = ref.select("id_a", "id_b", "ratio", F.col("_s")[field].alias(field))
+
+    got = {r.id_a: tuple(r) for r in fused.select(*ref.columns).collect()}
+    want = {r.id_a: tuple(r) for r in ref.collect()}
+    assert got == want
+    assert {0, 4} <= set(got) and not {1, 3, 6, 7} & set(got)
+
+
+def test_gated_multi_score_needs_ratio():
+    with pytest.raises(ValueError):
+        udfs.multi_score_udf(("jaro",), gate=0.5)
