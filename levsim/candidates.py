@@ -19,9 +19,7 @@ Scale analysis (the part that must survive 100 TB):
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -56,8 +54,6 @@ def candidate_pairs(
     # needs anyway — no aggregate round-trip, and crucially no broadcast:
     # at web scale the size map has ~10^10 distinct keys and can never be
     # broadcast (driver OOM); a window count stays fully distributed
-    from pyspark.sql import Window
-
     w = Window.partitionBy("block_key")
     b = blocks.withColumn("bsize", F.count("*").over(w)).where(F.col("bsize") > 1)
     if drop_block_size is not None:
@@ -111,12 +107,8 @@ def candidate_pairs(
     # AQE-coalesced tasks, 4.2s -> 2.7s with this exchange at 2x cores).
     # The explicit width is user-specified, so AQE leaves it alone; the
     # dedup groupBy reuses it partition-locally (still ONE exchange).
-    # Scale-adaptive: derives from the cluster's total cores; override
-    # with LEVSIM_PAIR_PARTITIONS where pair volume demands byte-based
-    # sizing instead.
-    n_part = int(os.environ.get("LEVSIM_PAIR_PARTITIONS", "0")) or (
-        pairs.sparkSession.sparkContext.defaultParallelism * 2
-    )
+    # Scale-adaptive: derives from the cluster's total cores.
+    n_part = pairs.sparkSession.sparkContext.defaultParallelism * 2
     pairs = pairs.repartition(n_part, "id_a", "id_b")
     if keep_pass_provenance:
         # keep one provenance row per pair: lexicographically first pass/key

@@ -16,7 +16,6 @@ string wins") are deterministic regardless of shuffle order.
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 import pandas as pd
@@ -163,11 +162,8 @@ def elect_representatives(
     # real load.  An explicit repartition on cluster_id at the cluster's
     # total cores feeds applyInPandas directly (one exchange, exempt
     # from AQE coalescing): 17s -> ~2.7s at the 4x holdout corpus,
-    # neutral at sf0.1 (measured both).  Override with
-    # LEVSIM_CONSENSUS_PARTITIONS.
-    n_part = int(os.environ.get("LEVSIM_CONSENSUS_PARTITIONS", "0")) or (
-        clustered.sparkSession.sparkContext.defaultParallelism
-    )
+    # neutral at sf0.1 (measured both).
+    n_part = clustered.sparkSession.sparkContext.defaultParallelism
     multi = (
         df.where(F.col("_n") > 1)
         .drop("_n")

@@ -1,10 +1,9 @@
 """Pure-Python/NumPy PNG codec (W3C PNG spec, second edition — public).
 
-Round-4 VERDICT #3: the one remaining ``decode_image`` format feasible
-without external codec libraries — DEFLATE lives in the Python stdlib
-(``zlib``) and everything else is chunk framing plus the five scanline
-filters.  Scope (like the T.81 JPEG codec in :mod:`levsim.extras.jpeg`,
-a real working subset, loudly rejecting the rest):
+DEFLATE lives in the Python stdlib (``zlib``) and everything else is
+chunk framing plus the five scanline filters, so no external codec
+library is needed.  Scope (a real working subset, loudly rejecting the
+rest):
 
 - bit depth 8 only; color types 0 (gray), 2 (RGB), 4 (gray+alpha) and
   6 (RGBA); no interlacing (Adam7 rejected, not silently mangled);
@@ -18,8 +17,8 @@ a real working subset, loudly rejecting the rest):
   spec directs.
 
 Reference parity note: the reference library (rapidfuzz/Levenshtein) has
-no media layer — this module serves the grafted multimodal pipeline
-(SURVEY §2 extras); the public contract mirrors ``jpeg.py``.
+no media layer; nothing on the ER path or in ``__spark_entry__.py``
+calls this module.
 """
 
 from __future__ import annotations
@@ -226,8 +225,7 @@ def decode_png(payload: bytes) -> np.ndarray:
 
 
 def decode_png_rgb(payload: bytes) -> np.ndarray:
-    """PNG bytes -> (H, W, 3) uint8 RGB: gray replicated, alpha dropped
-    (the ``decode_image`` feature contract, same as the JPEG decoder)."""
+    """PNG bytes -> (H, W, 3) uint8 RGB: gray replicated, alpha dropped."""
     px = decode_png(payload)
     ch = px.shape[2]
     if ch == 1:

@@ -1212,14 +1212,6 @@ def setmedian(strlist: Sequence[StrOrBytes], wlist=None) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _norm_indel(a: np.ndarray, b: np.ndarray) -> float:
-    lensum = len(a) + len(b)
-    if lensum == 0:
-        return 0.0
-    sa, sb = _strip_common(a, b)
-    return _dp_distance(sa, sb, 1, 1, 2) / lensum
-
-
 def seqratio(strlist1: Sequence[StrOrBytes], strlist2: Sequence[StrOrBytes]) -> float:
     """Similarity of two string *sequences* (reference seqratio,
     ``levenshtein_cpp.pyx:210-240`` + lev_edit_seq_distance

@@ -11,14 +11,14 @@ lengths are scan columns, pushes them into the join/scan):
 - equivalent distance form: indel_dist >= |l1-l2|, so
     |l1 - l2| > (1-tau)*(l1+l2)  ==>  prune.
 
-For Levenshtein with cutoff k: |l1 - l2| > k ==> prune (distance lower
-bound).  These are exact bounds — pruned pairs can never pass the final
+For OSA (as for Levenshtein) with cutoff k: |l1 - l2| > k ==> prune
+(distance lower bound, ``osa_length_bound``).  These are exact bounds — pruned pairs can never pass the final
 threshold, so recall is unaffected.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -28,11 +28,6 @@ def ratio_length_bound(len_a: Column, len_b: Column, tau: float) -> Column:
     return (lensum == 0) | (
         (2.0 * F.least(len_a, len_b) / lensum) >= F.lit(tau)
     )
-
-
-def distance_length_bound(len_a: Column, len_b: Column, cutoff: int) -> Column:
-    """TRUE iff the pair can still have distance <= cutoff."""
-    return F.abs(len_a - len_b) <= F.lit(cutoff)
 
 
 def jaro_winkler_length_bound(
@@ -61,24 +56,6 @@ def jaro_winkler_length_bound(
     jaro_ub = (minl / len_a + minl / len_b + 1.0) / 3.0
     jw_ub = jaro_ub + 4.0 * prefix_weight * (1.0 - jaro_ub)
     return both_empty | (~one_empty & (jw_ub >= F.lit(tau)))
-
-
-def apply_ratio_prefilter(
-    pairs: DataFrame, tau: float, len_a: str = "len_a", len_b: str = "len_b"
-) -> DataFrame:
-    return pairs.where(ratio_length_bound(F.col(len_a), F.col(len_b), tau))
-
-
-def token_sort_length_bound(sorted_len_a: Column, sorted_len_b: Column, tau: float) -> Column:
-    """TRUE iff the pair can still reach token_sort_ratio >= tau.
-
-    Exact and nothing more to derive: token_sort_ratio IS
-    ``ratio(token_sort_key(a), token_sort_key(b))``, so the indel length
-    bound applies verbatim — to the SORTED-KEY lengths, which differ from
-    the raw lengths only by whitespace collapsing (``norm_text``).  Callers
-    pass ``F.length(token_sort_key(...))`` columns, computed doc-side
-    before the pair join (pure-column key prep)."""
-    return ratio_length_bound(sorted_len_a, sorted_len_b, tau)
 
 
 def token_set_length_bound(

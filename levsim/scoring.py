@@ -112,10 +112,6 @@ def _unpack_scores(df: DataFrame) -> DataFrame:
     return df.withColumns({f: F.col("_scores")[f] for f in fields}).drop("_scores")
 
 
-def matched_pairs(scored: DataFrame, tau: float, score_col: str = "ratio") -> DataFrame:
-    return scored.where(F.col(score_col) >= F.lit(tau))
-
-
 def score_pairs_cascade(
     pairs_with_text: DataFrame,
     tau: float,

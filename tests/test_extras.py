@@ -1,12 +1,12 @@
-"""Tests for the training-data operators: dedup, simsearch, textstats,
-multimodal plumbing."""
+"""Tests for the training-data operators: dedup, simsearch, textstats and
+the web-curation extras."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from levsim.extras import dedup, multimodal, simsearch, textstats
+from levsim.extras import dedup, simsearch, textstats
 
 
 @pytest.fixture(scope="module")
@@ -264,38 +264,6 @@ def test_textstats(spark, docs):
     assert out[1].fingerprint != out[3].fingerprint
 
 
-def test_multimodal_features(spark):
-    media = multimodal.synthetic_media(spark, n=30)
-    feats = multimodal.extract_features(media, fake_decode=True)
-    rows = feats.collect()
-    assert len(rows) == 30
-    for r in rows:
-        assert len(r.feature) == multimodal.FEATURE_DIM
-        assert r.n_bytes > 0 and len(r.sha256) == 64
-    # determinism: same payload -> same feature
-    again = {r.media_id: r.feature for r in multimodal.extract_features(media, True).collect()}
-    for r in rows:
-        assert again[r.media_id] == r.feature
-
-
-def test_multimodal_decode_stub_raises():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"xxx", fake=False)
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_video(b"\x00" * 32, fake=False)
-
-
-def test_frame_sample_plan(spark):
-    media = multimodal.synthetic_media(spark, n=9)
-    durs = {r.media_id: r.duration_ms
-            for r in media.where(F.col("kind") == "video").collect()}
-    frames = multimodal.frame_sample_plan(media, every_ms=1000)
-    got = {r.media_id: r["count"] for r in frames.groupBy("media_id").count().collect()}
-    # one planned timestamp per 1000ms tick incl. t=0
-    assert got == {mid: d // 1000 + 1 for mid, d in durs.items()}
-    assert len(got) == 3  # every third row is video
-
-
 def test_simhash_sql_pairs_exact_set(spark, docs):
     """SQL-algebra simhash: banded join emits EXACTLY the hamming<=k set."""
     sigs = {
@@ -353,132 +321,6 @@ def test_word_shingles_edge_cases(spark):
     assert got[1] == ["a b", "b c"]
     assert got[2] == ["single"]
     assert got[3] == [] and got[4] == []
-
-
-def test_bmp_roundtrip():
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    for h, w in [(1, 1), (3, 5), (16, 16), (7, 9)]:  # odd widths force row padding
-        px = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-        back = multimodal.decode_bmp(multimodal.encode_bmp(px))
-        np.testing.assert_array_equal(back, px)
-
-
-def test_bmp_top_down_and_errors():
-    import struct
-
-    import numpy as np
-
-    px = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
-    payload = bytearray(multimodal.encode_bmp(px))
-    # flip to top-down: negate height and reverse data rows
-    struct.pack_into("<i", payload, 22, -2)
-    row_len = (3 * 3 + 3) & ~3
-    rows = bytes(payload[54:])
-    payload[54:] = rows[row_len:] + rows[:row_len]
-    np.testing.assert_array_equal(multimodal.decode_bmp(bytes(payload)), px)
-    with pytest.raises(ValueError):
-        multimodal.decode_bmp(b"PNG not a bmp" * 10)
-    with pytest.raises(ValueError):
-        multimodal.decode_bmp(multimodal.encode_bmp(px)[:30])  # truncated
-
-
-def test_real_bmp_feature_extraction(spark):
-    """Real decode path end to end — NO fake flag anywhere: BMP payloads
-    through mapInPandas produce deterministic pixel-derived features."""
-    import numpy as np
-
-    rng = np.random.RandomState(4)
-    rows = []
-    for i in range(12):
-        px = rng.randint(0, 256, size=(8 + i, 5 + i, 3), dtype=np.uint8)
-        rows.append((i, "image", multimodal.encode_bmp(px), "image/bmp",
-                     5 + i, 8 + i, None))
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    feats = {r.media_id: r.feature
-             for r in multimodal.extract_features(media, fake_decode=False).collect()}
-    assert len(feats) == 12
-    for i, _, payload, *_ in rows:
-        want = multimodal.decode_image(bytes(payload))
-        got = np.array(feats[i], dtype=np.float32)
-        np.testing.assert_array_equal(got, want)
-        assert np.isfinite(got).all() and (np.abs(got) <= 1.5).all()
-
-
-def test_wav_roundtrip_and_features():
-    import numpy as np
-
-    t = np.arange(1600) / 8000.0
-    x = np.sin(2 * np.pi * 440 * t) * 0.5
-    rate, back = multimodal.decode_wav(multimodal.encode_wav(x, 8000))
-    assert rate == 8000
-    np.testing.assert_allclose(back, x, atol=1.0 / 32767)
-    feats = multimodal.decode_audio(multimodal.encode_wav(x, 8000))
-    assert feats.shape == (multimodal.FEATURE_DIM,)
-    assert abs(feats[1] - 0.5 / np.sqrt(2)) < 0.01  # RMS of a 0.5 sine
-    with pytest.raises(ValueError):
-        multimodal.decode_wav(b"RIFFxxxxNOPE" + b"\0" * 40)
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_audio(b"\xff\xf1 not riff" * 8)
-
-
-def test_synthetic_media_real_decode(spark):
-    """Default fixture carries REAL payloads for ALL kinds (BMP, PCM WAV,
-    uncompressed AVI): every row decodes with fake_decode=False."""
-    media = multimodal.synthetic_media(spark, n=30)
-    rows = multimodal.extract_features(media, fake_decode=False).collect()
-    assert len(rows) == 30
-    for r in rows:
-        assert len(r.feature) == multimodal.FEATURE_DIM
-
-
-def test_avi_roundtrip_and_features():
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    frames = rng.randint(0, 256, size=(7, 10, 12, 3), dtype=np.uint8)
-    payload = multimodal.encode_avi(frames, fps=10)
-    fps, got = multimodal.decode_avi(payload)
-    assert fps == 10 and got.shape == frames.shape
-    assert (got == frames).all()                    # pixel-exact roundtrip
-    feat = multimodal.video_features(fps, got)
-    assert feat.shape == (multimodal.FEATURE_DIM,)
-    # motion feature responds to actual frame change
-    static = np.repeat(frames[:1], 7, axis=0)
-    assert multimodal.video_features(10, static)[4] == 0.0
-    assert feat[4] > 0.0
-    # odd-size frames exercise row padding; 1-frame video has no motion term
-    f1 = rng.randint(0, 256, size=(1, 5, 7, 3), dtype=np.uint8)
-    fps1, got1 = multimodal.decode_avi(multimodal.encode_avi(f1, fps=4))
-    assert fps1 == 4 and (got1 == f1).all()
-    with pytest.raises(ValueError):
-        multimodal.decode_avi(b"RIFF\x00\x00\x00\x00WAVE")
-
-
-def test_sample_frames_real_decode(spark):
-    import numpy as np
-
-    media = multimodal.synthetic_media(spark, n=9)
-    vids = {r.media_id: r for r in media.where(F.col("kind") == "video").collect()}
-    rows = multimodal.sample_frames(media, every_ms=500).collect()
-    assert {r.media_id for r in rows} == set(vids)
-    for r in rows:
-        assert len(r.feature) == multimodal.FEATURE_DIM
-        assert r.frame_ts_ms % 500 == 0
-    # per-video frame count: one row per 500ms tick incl. t=0, and frame
-    # features must equal a driver-side decode of the same payload
-    from collections import Counter
-
-    counts = Counter(r.media_id for r in rows)
-    for mid, v in vids.items():
-        fps, frames = multimodal.decode_avi(bytes(v.payload))
-        dur = int(len(frames) * 1000 / fps)
-        assert counts[mid] == dur // 500 + 1
-    r0 = min(rows, key=lambda r: (r.media_id, r.frame_ts_ms))
-    fps, frames = multimodal.decode_avi(bytes(vids[r0.media_id].payload))
-    want = multimodal.image_features(frames[0])
-    assert np.allclose(r0.feature, want, atol=1e-6)
 
 
 def test_char_ngrams_edge_cases(spark):

@@ -185,32 +185,6 @@ def test_band_keys_scalar_batch_identity(sig, rows_per_band):
     assert len(scalar) == 8 // rows_per_band
 
 
-@settings(max_examples=40, deadline=None)
-@given(st.integers(min_value=1, max_value=12), st.integers(min_value=1, max_value=12),
-       st.integers(min_value=0, max_value=2**32 - 1))
-def test_bmp_roundtrip_property(h, w, seed):
-    import numpy as np
-
-    from levsim.extras.multimodal import decode_bmp, encode_bmp
-
-    rng = np.random.RandomState(seed)
-    px = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-    assert (decode_bmp(encode_bmp(px)) == px).all()
-
-
-@settings(max_examples=40, deadline=None)
-@given(st.lists(st.floats(min_value=-1.0, max_value=1.0, allow_nan=False),
-                min_size=1, max_size=400))
-def test_wav_roundtrip_property(samples):
-    import numpy as np
-
-    from levsim.extras.multimodal import decode_wav, encode_wav
-
-    rate, back = decode_wav(encode_wav(samples, 8000))
-    assert rate == 8000
-    assert np.abs(back - np.asarray(samples)).max() <= 1.0 / 32767 + 1e-12
-
-
 def _osa_quadratic(a: str, b: str) -> int:
     """Textbook O(mn) OSA reference for the vectorized kernel."""
     la, lb = len(a), len(b)

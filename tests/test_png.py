@@ -1,6 +1,5 @@
 """PNG codec (levsim/extras/png.py): lossless roundtrips across color
-types and filter strategies, spec-conformance rejections, and the
-decode_image sniff integration."""
+types and filter strategies, and spec-conformance rejections."""
 
 from __future__ import annotations
 
@@ -143,12 +142,3 @@ def test_decode_png_rgb_contract():
     out2 = png.decode_png_rgb(png.encode_png(ga))
     assert (out2 == np.repeat(ga[:, :, :1], 3, axis=2)).all()
 
-
-def test_decode_image_sniffs_png():
-    from levsim.extras.multimodal import FEATURE_DIM, decode_image, image_features
-
-    rng = np.random.RandomState(9)
-    px = rng.randint(0, 256, size=(10, 8, 3), dtype=np.uint8)
-    feats = decode_image(png.encode_png(px))
-    assert feats.shape == (FEATURE_DIM,)
-    assert np.allclose(feats, image_features(px))

@@ -1,6 +1,6 @@
-"""Catch-up ingest and pair emission over landed page files: exactly-once
-per file, catch-up/batch key agreement, the per-key cap, crash recovery;
-plus the Structured Streaming sessionizer."""
+"""Catch-up pair emission over landed page files: exactly-once per file,
+catch-up/batch key agreement, the per-key cap, crash recovery; plus the
+stateless curation extras under Structured Streaming."""
 
 from __future__ import annotations
 
@@ -25,39 +25,27 @@ def staged_pages(spark, tmp_path):
     return spark, str(in_dir), str(tmp_path / "out"), str(tmp_path / "ckpt"), df, second
 
 
-def test_incremental_ingest_and_resume(staged_pages):
-    spark, in_dir, out_dir, ckpt, full_df, second = staged_pages
-    streaming.run_incremental(spark, in_dir, out_dir, ckpt)
-    got1 = spark.read.parquet(out_dir)
-    n1 = got1.select("doc_id").distinct().count()
-    assert n1 > 0
-
-    # second batch of files arrives; catch-up processes ONLY the new ones
-    second.coalesce(1).write.mode("append").parquet(in_dir)
-    streaming.run_incremental(spark, in_dir, out_dir, ckpt)
-    got2 = spark.read.parquet(out_dir)
-    n2 = got2.select("doc_id").distinct().count()
-    assert n2 == full_df.select("url").distinct().count()
-    # no duplicated work for the first batch (exactly-once per file)
-    per_doc_1 = got1.groupBy("doc_id", "block_pass", "block_key").count()
-    assert per_doc_1.where(F.col("count") > 1).count() == 0
-
-
 def test_stream_batch_key_agreement(staged_pages):
+    """The key table a catch-up writes under ``<checkpoint>/keys`` holds
+    exactly the batch path's (doc_id, block_key) rows of the landed pages,
+    after each catch-up (content-hash keys: catch-up and batch agree)."""
     spark, in_dir, out_dir, ckpt, full_df, second = staged_pages
-    streaming.run_incremental(spark, in_dir, out_dir, ckpt)
-    streamed = spark.read.parquet(out_dir).select("doc_id", "block_pass", "block_key")
-    batch_keys = blocking.add_block_keys(
-        normalize.with_normalized(
-            full_df.join(streamed.select("doc_id").distinct(),
-                         full_df.url == F.col("doc_id")).drop("doc_id"),
-            text_col="text", url_col="url",
-        ),
-        id_col="url",
-    ).select("doc_id", "block_pass", "block_key")
-    # content-hash keys: stream and batch must agree exactly
-    assert streamed.subtract(batch_keys).count() == 0
-    assert batch_keys.subtract(streamed).count() == 0
+
+    def batch_keys(pages):
+        return blocking.add_block_keys(
+            normalize.with_normalized(pages, text_col="text", url_col="url"),
+            id_col="url",
+        ).select("doc_id", "block_key")
+
+    for k, landed in enumerate((full_df.subtract(second), full_df)):
+        if k:
+            second.coalesce(1).write.mode("append").parquet(in_dir)
+        streaming.run_incremental_pairs(spark, in_dir, out_dir, ckpt)
+        keys = spark.read.parquet(os.path.join(ckpt, "keys")).select("doc_id", "block_key")
+        want = batch_keys(landed)
+        assert keys.count() > 0
+        assert keys.subtract(want).count() == 0
+        assert want.subtract(keys).count() == 0
 
 
 def test_streaming_candidate_pairs_stateful(staged_pages):
@@ -200,8 +188,6 @@ def test_pair_catch_up_rejects_streaming_dirs(staged_pages, tmp_path):
     (old_out / "_spark_metadata").mkdir(parents=True)
     with pytest.raises(ValueError, match="streaming file sink"):
         streaming.run_incremental_pairs(spark, in_dir, str(old_out), str(tmp_path / "c2"))
-    with pytest.raises(ValueError, match="streaming file sink"):
-        streaming.run_incremental(spark, in_dir, str(old_out), str(tmp_path / "c3"))
 
 
 def test_pair_catch_up_is_a_batch_job(staged_pages):
@@ -249,64 +235,6 @@ def test_pair_catch_up_is_a_batch_job(staged_pages):
     assert listener.started == []
 
 
-def test_streaming_sessions_event_time_timeout(spark, tmp_path):
-    """Event-time sessionization (applyInPandasWithState, EventTimeTimeout):
-    sessions close either when a same-user event arrives past the gap or
-    when the watermark passes session_end + gap; state survives a restart
-    via the checkpoint.  Deterministic file-per-micro-batch script."""
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType, TimestampType
-
-    schema = StructType([
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-    ])
-    in_dir, out_dir, ckpt = str(tmp_path / "ev"), str(tmp_path / "out"), str(tmp_path / "ck")
-
-    B = 100000  # base offset: an event at exactly the initial watermark (0)
-                # is dropped as late, so keep every timestamp past it
-
-    def write_file(name, rows):
-        pdf = pd.DataFrame(
-            [(i, pd.Timestamp(B + t, unit="s"), u) for i, (t, u) in enumerate(rows)],
-            columns=["event_id", "ts", "user_id"],
-        )
-        spark.createDataFrame(pdf, schema).coalesce(1).write.mode("append").parquet(
-            in_dir + "/" + name)
-
-    # micro-batch 1: user1 opens a session (2 events), user2 one event
-    write_file("f1", [(0, 1), (600, 1), (100, 2)])
-    # micro-batch 2: user1 event past the 1800s gap -> session 1 closes
-    # intra-stream, session 2 opens
-    write_file("f2", [(5000, 1)])
-    # micro-batch 3: far-future event advances the watermark past user2's
-    # timeout (1900s) -> user2's session fires on this batch
-    write_file("f3", [(200000, 99)])
-
-    streaming.run_incremental_sessions(
-        spark, in_dir + "/*", out_dir, ckpt, schema)
-    got1 = {(r.user_id, r.session_start, r.session_end, r.n_events)
-            for r in spark.read.parquet(out_dir).collect()}
-    # user2's timeout (B+1900) and user1's second-session timeout (B+6800)
-    # both fire within run 1: the final no-data batch evaluates timeouts
-    # against the f3-advanced watermark (B+200000)
-    assert got1 == {(1, B + 0, B + 600, 2), (2, B + 100, B + 100, 1),
-                    (1, B + 5000, B + 5000, 1)}
-
-    # restart: f4 advances the watermark past user99's timeout (B+201800);
-    # state and watermark are reloaded from the checkpoint
-    write_file("f4", [(300000, 98)])
-    write_file("f5", [(400000, 97)])
-    streaming.run_incremental_sessions(
-        spark, in_dir + "/*", out_dir, ckpt, schema)
-    got2 = {(r.user_id, r.session_start, r.session_end, r.n_events)
-            for r in spark.read.parquet(out_dir).collect()}
-    assert got2 == got1 | {(99, B + 200000, B + 200000, 1),
-                           (98, B + 300000, B + 300000, 1)}  # f5's no-data
-    # batch fires 98's timeout too; only user97 stays open in state
-
-
 def test_streaming_textstats_and_pii(spark, tmp_path):
     """The stateless curation extras (textstats projection, PII redaction,
     repetition counts) compose directly with Structured Streaming —
@@ -348,35 +276,3 @@ def test_streaming_textstats_and_pii(spark, tmp_path):
         assert got[i].asDict() == want[i].asDict(), i
     assert got[1].pii.n_emails == 1 and "<EMAIL>" in got[1].redacted
     assert got[2].rep.top_count == 3  # 'x y' bigram repeats
-
-
-def test_streaming_neardup_equals_batch_minhash(staged_pages):
-    """Near-dup catch-up BY COMPOSITION — minhash band keys (the batch
-    path's own band UDF) feeding the pair emitter must reproduce the batch
-    minhash candidate set across two catch-up runs, each pair once."""
-    from levsim.extras.dedup import minhash_candidate_pairs
-
-    spark, in_dir, _, _, full_df, second = staged_pages
-    out_dir = in_dir + "_nd_out"
-    ckpt = in_dir + "_nd_ckpt"
-
-    kw = dict(id_col="url", text_col="text", n_perm=32, rows_per_band=4,
-              shingle_k=3)
-    streaming.run_incremental_neardup(spark, in_dir, out_dir, ckpt, **kw)
-    n1 = spark.read.parquet(out_dir).select("id_a", "id_b").distinct().count()
-
-    second.coalesce(1).write.mode("append").parquet(in_dir)
-    streaming.run_incremental_neardup(spark, in_dir, out_dir, ckpt, **kw)
-    got = spark.read.parquet(out_dir)
-    # exactly-once: one row per distinct pair across both runs
-    assert got.count() == got.select("id_a", "id_b").distinct().count()
-    sgot = got.select("id_a", "id_b").distinct()
-
-    want = minhash_candidate_pairs(
-        full_df, id_col="url", text_col="text", n_perm=32, rows_per_band=4,
-        shingle_k=3, max_block_size=10**6,
-    ).select(F.col("id_a").cast("string").alias("id_a"),
-             F.col("id_b").cast("string").alias("id_b")).distinct()
-    assert sgot.subtract(want).count() == 0
-    assert want.subtract(sgot).count() == 0
-    assert sgot.count() >= n1 > 0

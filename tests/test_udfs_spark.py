@@ -65,6 +65,27 @@ def test_editops_udf(pairs_df):
         assert [(x.op, x.spos, x.dpos) for x in r.e] == exp
 
 
+def test_opcodes_udf(spark):
+    """The opcodes UDF equals kernels.opcodes on the golden strings, empty
+    strings included; a NULL side gives NULL."""
+    golden = [("spam", "park"), ("dog kennels", "mattresses"),
+              ("spam and eggs", "foo and bar"), ("man", "scotsman"),
+              ("Levnhtein", "Leveshein"), ("Lenshtein", "Lvenstein"),
+              ("lewenstein", "levenshtein"), ("", ""), ("abc", ""), ("", "abc")]
+    rows = golden + [("abc", None), (None, "abc"), (None, None)]
+    df = spark.createDataFrame(list(enumerate(rows)), "i int, ab struct<a: string, b: string>")
+    got = {r.i: r.o for r in df.select(
+        "i", udfs.lev_opcodes_udf()("ab.a", "ab.b").alias("o")).collect()}
+    assert len(got) == len(rows)
+    for i, (a, b) in enumerate(rows):
+        if a is None or b is None:
+            assert got[i] is None, (a, b)
+        else:
+            assert [(x.op, x.i1, x.i2, x.j1, x.j2) for x in got[i]] == K.opcodes(a, b), (a, b)
+    assert [tuple(x) for x in got[0]] == [("delete", 0, 1, 0, 0), ("equal", 1, 3, 0, 2),
+                                          ("insert", 3, 3, 2, 3), ("replace", 3, 4, 3, 4)]
+
+
 def test_seqratio_setratio_udf(spark):
     rows = [
         (["newspaper", "litter bin", "tinny", "antelope"], ["caribou", "sausage", "gorn", "woody"]),
