@@ -1,25 +1,29 @@
-"""Candidate-pair generation: block self-join with skew capping and
+"""Candidate-pair generation: grouped blocks with skew capping and
 multi-pass dedup.
 
 Scale analysis (the part that must survive 100 TB):
-- A block of size s contributes s*(s-1)/2 pairs — quadratic.  Before the
-  self-join we compute block sizes (one cheap aggregate) and SALT oversized
-  blocks: a block of size s > cap is split into ceil(s/cap) salt groups by a
-  deterministic content hash, so each salted sub-block joins only within
-  itself.  This bounds per-task join fan-out regardless of key skew (the
-  north rule's "salted skew keys"); AQE skew-join splitting handles the
-  residual imbalance.  Trade-off: salting drops cross-salt-group pairs
-  inside mega-blocks — exactly the standard ER compromise (mega-blocks are
-  near-useless keys like empty host; recall is recovered by the other
-  blocking passes).
-- Pairs from different passes are deduped with ONE dropDuplicates on
+- A block is one row of grouped ids, not a self-join (the SparkER shape,
+  EDBT 2019): ``groupBy(block_key)`` gives each block its size and ids, and
+  the ``id_a < id_b`` pairs come out of a sorted id array through JVM
+  higher-order functions.  Every step has one consumer, so nothing is
+  materialised to be shared and a lost executor costs a recompute.
+- A block of size s contributes s*(s-1)/2 pairs — quadratic.  Oversized
+  blocks are SALTED: a block of size s > cap is split into ceil(s/cap)
+  salt groups by a deterministic content hash (``xxhash64(doc_id)``), and
+  pairs are emitted only within a salt group.  This bounds the per-group
+  array and its fan-out regardless of key skew.  Trade-off: salting drops
+  cross-salt-group pairs inside mega-blocks — exactly the standard ER
+  compromise (mega-blocks are near-useless keys like empty host; recall is
+  recovered by the other blocking passes).  The salt regroup keeps
+  ``block_key`` in its key, so it reuses the first exchange.
+- Pairs from different passes are deduped with ONE groupBy on
   (id_a, id_b) — partial aggregation (map-side combine) keeps the shuffle
   proportional to distinct pairs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -28,7 +32,6 @@ def candidate_pairs(
     max_block_size: int = 200,
     keep_pass_provenance: bool = True,
     drop_block_size: int | None = None,
-    share_blocks: bool = True,
     extra_pairs: DataFrame | None = None,
 ) -> DataFrame:
     """blocks(doc_id, block_pass, block_key) -> pairs(id_a, id_b[, block_key, block_pass]).
@@ -50,45 +53,36 @@ def candidate_pairs(
     (minhash bands, tokensort).  Salting (``max_block_size``) remains the
     bound for merely-large-but-useful keys below the drop threshold.
     """
-    # block sizes via a window over the SAME block_key shuffle the join
-    # needs anyway — no aggregate round-trip, and crucially no broadcast:
-    # at web scale the size map has ~10^10 distinct keys and can never be
-    # broadcast (driver OOM); a window count stays fully distributed
-    w = Window.partitionBy("block_key")
-    b = blocks.withColumn("bsize", F.count("*").over(w)).where(F.col("bsize") > 1)
+    # one groupBy per block: its size, its pass (keys are pass-namespaced,
+    # so min() is the only pass) and its ids.  Never broadcast: at web
+    # scale there are ~10^10 distinct keys.
+    b = blocks.groupBy("block_key").agg(
+        F.count("*").alias("bsize"),
+        F.min("block_pass").alias("block_pass"),
+        F.collect_list("doc_id").alias("ids"),
+    ).where(F.col("bsize") > 1)
     if drop_block_size is not None:
         b = b.where(F.col("bsize") <= drop_block_size)
     # deterministic salt: content hash of doc_id, bucketed by how many salt
-    # groups this block needs.  n_salt=1 for normal blocks (no-op).
-    b = b.withColumn(
-        "n_salt", F.ceil(F.col("bsize") / F.lit(max_block_size)).cast("int")
-    ).withColumn(
-        "salt", F.pmod(F.xxhash64(F.col("doc_id")), F.col("n_salt")).cast("int")
-    ).withColumn(
-        "join_key", F.concat_ws("#", F.col("block_key"), F.col("salt"))
+    # groups this block needs.  n_salt=1 for normal blocks (no-op).  The
+    # second groupBy keeps block_key in its key, so the block_key hash
+    # partitioning above already satisfies it: no second exchange.
+    n_salt = F.ceil(F.col("bsize") / F.lit(max_block_size)).cast("int")
+    groups = (
+        b.select("block_key", "block_pass", n_salt.alias("n_salt"),
+                 F.explode("ids").alias("doc_id"))
+        .withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.col("n_salt")).cast("int"))
+        .groupBy("block_key", "block_pass", "salt")
+        .agg(F.array_sort(F.collect_set("doc_id")).alias("ids"))
+        .where(F.size("ids") > 1)
     )
-    if share_blocks:
-        # one materialization of the keyed/salted table for BOTH self-join
-        # branches: in the broadcast regime the two sides otherwise
-        # recompute the band-key UDF and the size window independently
-        # (ReuseExchange only dedups identical shuffled-join exchanges —
-        # verified via executedPlan ArrowEval/Window counts).  Rows are
-        # ids + key strings only, never text, so the footprint is the same
-        # data the join shuffle would spill anyway.  Set share_blocks=False
-        # on a real cluster to keep full lineage-based fault recovery and
-        # let exchange reuse do the deduplication in the SMJ regime.
-        b = b.localCheckpoint(eager=False)
-    left = b.select(
-        F.col("join_key"),
-        F.col("doc_id").alias("id_a"),
-        F.col("block_key"),
-        F.col("block_pass"),
-    )
-    right = b.select(F.col("join_key"), F.col("doc_id").alias("id_b"))
-    pairs = (
-        left.join(right, "join_key")
-        .where(F.col("id_a") < F.col("id_b"))
-        .drop("join_key")
+    # every id_a < id_b pair of a sorted, distinct id array, JVM-side
+    pairs = groups.select(
+        "block_key", "block_pass",
+        F.inline(F.expr(
+            "flatten(transform(sequence(0, size(ids) - 2), i -> "
+            "transform(slice(ids, i + 2, size(ids)), "
+            "y -> named_struct('id_a', ids[i], 'id_b', y))))")),
     )
     if extra_pairs is not None:
         ep = extra_pairs.select(

@@ -1,10 +1,17 @@
-"""Cluster representative election — the median family as a grouped-map op.
+"""Cluster representative election — the median family in one sorted
+Arrow pass.
 
-``groupBy(cluster_id).applyInPandas`` runs one consensus election per
-cluster: ``setmedian`` (medoid; default — always a real member),
-``quickmedian`` (positional voting, the reference's documented scale
-choice, levenshtein_cpp.pyx:93-96), ``median`` (greedy generalized
-median) or ``median_improve`` refinement.
+``elect_representatives`` makes one hash exchange on ``cluster_id``, sorts
+each partition by (cluster_id, doc id) and runs one ``mapInArrow`` that
+walks the runs of equal ``cluster_id``: ``setmedian`` (medoid; default —
+always a real member), ``quickmedian`` (positional voting, the reference's
+documented scale choice, levenshtein_cpp.pyx:93-96), ``median`` (greedy
+generalized median) or ``median_improve`` refinement.  A singleton passes
+straight through; the kernels run only for multi-member runs.  The sort
+order also gives the ``max_members`` cap its deterministic sample (the
+lowest doc ids), and a megacluster streams through one task holding at
+most ``max_members`` texts.  No step is shared by two consumers, so
+nothing is checkpointed and a lost executor costs a recompute.
 
 The reference's weights-as-multiplicities rewrite
 (_levenshtein.hpp:137-139: "considerably more efficient to give a string
@@ -16,10 +23,12 @@ string wins") are deterministic regardless of shuffle order.
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Iterator, Optional
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from . import kernels
@@ -33,15 +42,67 @@ CONSENSUS_SCHEMA = StructType(
 )
 
 
-def _consensus_fn(method: str, improve_rounds: int, text_col: str, id_col: str):
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, kind="mergesort")
-        texts = pdf[text_col].dropna().tolist()
-        cid = str(pdf["cluster_id"].iloc[0])
+def _runs(batches: Iterator[pa.RecordBatch], n_keys: int, cap: Optional[int]):
+    """Runs of equal key in key-sorted Arrow batches: yields (key, texts)
+    with the key the first ``n_keys`` columns and the texts the next one,
+    at most the first ``cap`` texts of each run.  A run may span batches."""
+    key, texts = None, []  # keys are tuples, never None
+    for rb in batches:
+        cols = [rb.column(i).to_pylist() for i in range(n_keys + 1)]
+        for row in zip(*cols):
+            k = row[:n_keys]
+            if k != key:
+                if texts:
+                    yield key, texts
+                key, texts = k, []
+            if cap is None or len(texts) < cap:
+                texts.append(row[n_keys])
+    if texts:
+        yield key, texts
+
+
+def _sorted_runs(df: DataFrame, keys: list, order_col: str, text_col: str,
+                 cap: Optional[int], elect, schema: StructType) -> DataFrame:
+    """One exchange on ``keys``, a sort by (keys, order_col) within each
+    partition, and one ``mapInArrow`` that walks the runs of equal key:
+    ``elect(texts)`` (texts in ``order_col`` order, NULLs kept) gives the
+    output columns after the key for each run.  A group streams through
+    one task and holds at most ``cap`` texts."""
+    n_part = df.sparkSession.sparkContext.defaultParallelism
+    names = schema.fieldNames()
+    types = [to_arrow_type(f.dataType) for f in schema.fields]
+
+    def batch(cols: list) -> pa.RecordBatch:
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, t) for c, t in zip(cols, types)], names=names)
+
+    def fn(batches):
+        out = [[] for _ in names]
+        for key, texts in _runs(batches, len(keys), cap):
+            for col, v in zip(out, (*key, *elect(texts))):
+                col.append(v)
+            if len(out[0]) >= 10_000:
+                yield batch(out)
+                out = [[] for _ in names]
+        if out[0]:
+            yield batch(out)
+
+    return (
+        df.select(*keys, order_col, text_col)
+        .repartition(n_part, *keys)
+        .sortWithinPartitions(*keys, order_col)
+        .select(*keys, text_col)
+        .mapInArrow(fn, schema)
+    )
+
+
+def _weighted_election(method: str, improve_rounds: int):
+    def elect(texts: list) -> tuple:
+        if len(texts) == 1:  # every median variant of one string is itself
+            return 1, texts[0]
+        texts = [t for t in texts if t is not None]
         if not texts:
-            return pd.DataFrame(
-                {"cluster_id": [cid], "n_members": [0], "representative": [None]}
-            )
+            return 0, None
         # weights-as-multiplicities rewrite: dedupe, first occurrence order
         seen: dict = {}
         for t in texts:
@@ -58,11 +119,9 @@ def _consensus_fn(method: str, improve_rounds: int, text_col: str, id_col: str):
                 rep = kernels.median_improve(rep, uniq, w)
         else:
             raise ValueError(f"unknown consensus method {method!r}")
-        return pd.DataFrame(
-            {"cluster_id": [cid], "n_members": [len(texts)], "representative": [rep]}
-        )
+        return len(texts), rep
 
-    return fn
+    return elect
 
 
 def group_median_table(
@@ -77,35 +136,30 @@ def group_median_table(
     the reference's list semantics exactly: members are passed in
     ``order_col`` order (ties -> first in list, matching the reference's
     strict-< argmin), weights all 1, duplicates kept as-is."""
-    from pyspark.sql import functions as F
-
+    if method not in ("setmedian", "quickmedian", "median", "median_improve"):
+        raise ValueError(method)
     schema = StructType(
         [StructField(c, df.schema[c].dataType) for c in group_cols]
         + [StructField(out_col, StringType())]
     )
 
-    def fn(keys, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
-        texts = pdf[text_col].dropna().tolist()
+    def elect(texts: list) -> tuple:
+        texts = [t for t in texts if t is not None]
+        if not texts:
+            return (None,)
         if method == "setmedian":
-            rep = kernels.setmedian(texts) if texts else None
-        elif method == "quickmedian":
-            rep = kernels.quickmedian(texts) if texts else None
-        elif method == "median":
-            rep = kernels.median(texts) if texts else None
-        elif method == "median_improve":
-            # one hill-climbing pass from a deliberately BAD fixed seed
-            # ('~' sorts above every corpus char), so the pass itself must
-            # do the work — the driver query's single-char oracle checks
-            # the climb, not the seed
-            rep = kernels.median_improve("~", texts) if texts else None
-        else:
-            raise ValueError(method)
-        row = {c: [k] for c, k in zip(group_cols, keys)}
-        row[out_col] = [rep]
-        return pd.DataFrame(row)
+            return (kernels.setmedian(texts),)
+        if method == "quickmedian":
+            return (kernels.quickmedian(texts),)
+        if method == "median":
+            return (kernels.median(texts),)
+        # one hill-climbing pass from a deliberately BAD fixed seed ('~'
+        # sorts above every corpus char), so the pass itself must do the
+        # work — the median_improve_chars query's single-char oracle checks
+        # the climb, not the seed
+        return (kernels.median_improve("~", texts),)
 
-    return df.groupBy(*group_cols).applyInPandas(fn, schema)
+    return _sorted_runs(df, list(group_cols), order_col, text_col, None, elect, schema)
 
 
 def elect_representatives(
@@ -117,156 +171,18 @@ def elect_representatives(
     max_members: Optional[int] = 1000,
 ) -> DataFrame:
     """clustered(doc_id, cluster_id, <text_col>) -> one representative per
-    cluster.  ``max_members`` caps the per-group kernel cost for megaclusters
-    (deterministic sample: lowest doc ids)."""
-    from pyspark.sql import functions as F
-
-    from pyspark.sql import Window
-
+    cluster: (cluster_id, n_members, representative).  ``max_members`` caps
+    the per-cluster kernel cost for megaclusters (deterministic sample:
+    lowest doc ids).  A singleton keeps its text; a larger cluster elects
+    over its non-NULL texts, and one whose texts are all NULL gives
+    (cluster_id, 0, NULL)."""
     df = clustered.select(
         F.col("cluster_id").cast("string").alias("cluster_id"),
         F.col(id_col).cast("string").alias(id_col),
         F.col(text_col).alias(text_col),
     )
-    # ONE hash exchange on cluster_id serves everything below: the cap
-    # window, the size window (replaces the old groupBy+join round-trip),
-    # and applyInPandas' required clustering all share it (verified: a
-    # single Exchange in the executed plan).  Megacluster caveat: the cap
-    # window still sorts each cluster in one task — use
-    # elect_representatives_hierarchical when clusters can exceed task
-    # memory.
-    if max_members is not None:
-        wnd = Window.partitionBy("cluster_id").orderBy(id_col)
-        df = df.withColumn("_rn", F.row_number().over(wnd)).where(
-            F.col("_rn") <= max_members
-        ).drop("_rn")
-    df = df.withColumn("_n", F.count("*").over(Window.partitionBy("cluster_id")))
-    # one materialization for BOTH union branches below (Spark does not CSE
-    # a shared subtree across union arms — without this the exchange and
-    # windows execute twice, once per branch)
-    df = df.localCheckpoint(eager=False)
-    # singleton fast path: in web dedup most clusters have one member, and
-    # every median variant of a single string is that string — keep those
-    # rows entirely JVM-side and run Python only on multi-member clusters
-    singles = df.where(F.col("_n") == 1).select(
-        "cluster_id",
-        F.lit(1).cast("long").alias("n_members"),
-        F.col(text_col).alias("representative"),
-    )
-    # Width the consensus exchange by COMPUTE capacity (round 7): the
-    # localCheckpoint above erases the window's partitioning info
-    # (LogicalRDD reports UnknownPartitioning), so applyInPandas inserts
-    # a fresh exchange that AQE then sizes by BYTES — at 20k docs / 5k
-    # multi-member clusters the election stage ran in ~5 tasks, 12.5s
-    # nearly serial, while per-cluster kernel cost (not bytes) is the
-    # real load.  An explicit repartition on cluster_id at the cluster's
-    # total cores feeds applyInPandas directly (one exchange, exempt
-    # from AQE coalescing): 17s -> ~2.7s at the 4x holdout corpus,
-    # neutral at sf0.1 (measured both).
-    n_part = clustered.sparkSession.sparkContext.defaultParallelism
-    multi = (
-        df.where(F.col("_n") > 1)
-        .drop("_n")
-        .repartition(n_part, "cluster_id")
-        .groupBy("cluster_id")
-        .applyInPandas(_consensus_fn(method, improve_rounds, text_col, id_col),
-                       CONSENSUS_SCHEMA)
-    )
-    return singles.unionByName(multi)
-
-
-_LEVEL1_SCHEMA = StructType(
-    [
-        StructField("cluster_id", StringType()),
-        StructField("_salt", LongType()),
-        StructField("rep", StringType()),
-        StructField("weight", LongType()),
-    ]
-)
-
-
-def elect_representatives_hierarchical(
-    clustered: DataFrame,
-    method: str = "quickmedian",
-    text_col: str = "norm_text",
-    id_col: str = "doc_id",
-    fanout: int = 64,
-    direct_threshold: int = 1000,
-) -> DataFrame:
-    """Two-level consensus for megaclusters (median of per-subgroup medians
-    — the docs/DESIGN.md §6 upgrade path).
-
-    Clusters larger than ``direct_threshold`` are split into ``fanout``
-    deterministic subgroups (id-hash salt); each subgroup elects a local
-    representative, then a weighted consensus over the local reps (weight =
-    subgroup size, the reference's weights-as-multiplicities semantics)
-    produces the final string.  Per-task kernel cost is bounded by the
-    subgroup size regardless of cluster size; no single task ever holds a
-    whole megacluster.  Sub-threshold clusters keep ONE subgroup, where the
-    two-level result reduces exactly to the flat election (consensus of a
-    single representative is itself — equality asserted in tests)."""
-    from pyspark.sql import functions as F
-
-    df = clustered.select(
-        F.col("cluster_id").cast("string").alias("cluster_id"),
-        F.col(id_col).cast("string").alias(id_col),
-        F.col(text_col).alias(text_col),
-    )
-    sizes = df.groupBy("cluster_id").agg(F.count("*").alias("_n"))
-    df = df.join(sizes, "cluster_id")
-    df = df.withColumn(
-        "_salt",
-        F.when(F.col("_n") > direct_threshold,
-               F.pmod(F.xxhash64(F.col(id_col)), F.lit(fanout)).cast("long"))
-        .otherwise(F.lit(0).cast("long")),
-    )
-
-    def _level1(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, kind="mergesort")
-        texts = pdf[text_col].dropna().tolist()
-        cid = str(pdf["cluster_id"].iloc[0])
-        salt = int(pdf["_salt"].iloc[0])
-        if not texts:
-            return pd.DataFrame({"cluster_id": [cid], "_salt": [salt],
-                                 "rep": [None], "weight": [0]})
-        seen: dict = {}
-        for t in texts:
-            seen[t] = seen.get(t, 0) + 1
-        rep = _elect(method, list(seen.keys()), [float(c) for c in seen.values()])
-        return pd.DataFrame({"cluster_id": [cid], "_salt": [salt],
-                             "rep": [rep], "weight": [len(texts)]})
-
-    level1 = df.groupBy("cluster_id", "_salt").applyInPandas(_level1, _LEVEL1_SCHEMA)
-
-    def _level2(pdf: pd.DataFrame) -> pd.DataFrame:
-        # deterministic member order: by salt (subgroup index)
-        pdf = pdf.sort_values("_salt", kind="mergesort")
-        cid = str(pdf["cluster_id"].iloc[0])  # BEFORE the notna filter —
-        # a cluster whose members are all null-text must keep its id
-        pdf = pdf[pdf["rep"].notna()]
-        if not len(pdf):
-            return pd.DataFrame({"cluster_id": [cid], "n_members": [0],
-                                 "representative": [None]})
-        reps = pdf["rep"].tolist()
-        ws = [float(w) for w in pdf["weight"].tolist()]
-        rep = _elect(method, reps, ws)
-        return pd.DataFrame({
-            "cluster_id": [cid],
-            "n_members": [int(sum(pdf["weight"]))],
-            "representative": [rep],
-        })
-
-    return level1.groupBy("cluster_id").applyInPandas(_level2, CONSENSUS_SCHEMA)
-
-
-def _elect(method: str, texts: list, weights: list) -> str:
-    if method == "setmedian":
-        return kernels.setmedian(texts, weights)
-    if method == "quickmedian":
-        return kernels.quickmedian(texts, weights)
-    if method == "median":
-        return kernels.median(texts, weights)
-    raise ValueError(f"unknown consensus method {method!r}")
+    return _sorted_runs(df, ["cluster_id"], id_col, text_col, max_members,
+                        _weighted_election(method, improve_rounds), CONSENSUS_SCHEMA)
 
 
 def select_canonical(
@@ -298,8 +214,6 @@ def select_canonical(
     ``metric``-policy cluster whose metrics are all NULL still yields a
     row (min-id fallback, NULL metric) rather than being dropped.
     """
-    from pyspark.sql import functions as F
-
     if policy == "longest":
         metric = F.length(F.col(text_col)).cast("long")
     elif policy == "shortest":

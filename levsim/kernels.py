@@ -10,7 +10,7 @@ Wagner-Fischer DP, Jaro(-Winkler), greedy/quick/set median (Kruskal-style
 greedy consensus), Munkres-Blackman assignment.
 
 These are the *scalar* reference kernels used for golden tests and as the
-per-group engine inside ``applyInPandas`` consensus.  The vectorized batch
+per-cluster engine inside the ``mapInArrow`` consensus.  The vectorized batch
 scorers used by the Spark pandas UDFs live in ``levsim.batch`` and are tested
 for equality against these.
 
@@ -76,7 +76,7 @@ def _apply_processor(processor, s1, s2):
 
 
 def _from_codes(codes: Iterable[int]) -> str:
-    return "".join(chr(int(c)) for c in codes)
+    return np.asarray(codes, np.uint32).tobytes().decode("utf-32-le")
 
 
 # ---------------------------------------------------------------------------
@@ -1186,8 +1186,12 @@ def setmedian(strlist: Sequence[StrOrBytes], wlist=None) -> str:
     sum of Levenshtein distances to all others; first index wins ties.
     Returned as ``str`` regardless of input type (pyx:173)."""
     weights = _extract_weights(strlist, wlist)
-    strings = [_codes(s) for s in strlist]
-    n = len(strings)
+    if not all(isinstance(s, (str, bytes)) for s in strlist):
+        raise TypeError("Expected string or bytes")
+    # the inputs as str (bytes are code points 0-255: latin-1); the winner
+    # is returned as is, without a code-point round trip
+    sa = [s.decode("latin-1") if isinstance(s, bytes) else str(s) for s in strlist]
+    n = len(sa)
     if n == 0:
         raise ValueError("strlist is empty")
     # full symmetric distance matrix (early-abandon in the reference only
@@ -1198,13 +1202,12 @@ def setmedian(strlist: Sequence[StrOrBytes], wlist=None) -> str:
     if len(ii):
         from . import batch as _batch
 
-        sa = [_from_codes(strings[i]) for i in range(n)]
         vals, _ = _batch.batch_distance([sa[i] for i in ii], [sa[j] for j in jj])
         dist[ii, jj] = vals
         dist[jj, ii] = vals
     sums = dist @ weights  # sum_j w_j * d(i, j); self term is 0
     minidx = int(np.argmin(sums))  # np.argmin returns first minimum
-    return _from_codes(strings[minidx])
+    return sa[minidx]
 
 
 # ---------------------------------------------------------------------------

@@ -59,10 +59,6 @@ class ERConfig:
     max_block_size: int = 200
     drop_block_size: int | None = None  # stop-key removal threshold (see candidates.py)
     consensus_method: str = "setmedian"
-    # clusters larger than this use the two-level (median-of-subgroup-
-    # medians) election so no task ever holds a whole megacluster; None
-    # keeps the flat per-cluster election with its max_members sample cap
-    hierarchical_consensus_threshold: int | None = None
     blocking_passes: tuple = ("host", "minhash", "tokensort")
     # sorted-neighborhood pass: window size (None disables).  Catches
     # near-misses whose sort keys are CLOSE but unequal — typos in the
@@ -94,7 +90,6 @@ class ERConfig:
             "snm_window": self.snm_window,
             "snm_key_len": self.snm_key_len,
             "consensus": self.consensus_method,
-            "hier_consensus": self.hierarchical_consensus_threshold,
             "passes": list(self.blocking_passes),
         }
 
@@ -293,12 +288,6 @@ class ERPipeline:
         stages.append(r)
 
         def compute_reps():
-            if cfg.hierarchical_consensus_threshold is not None:
-                return consensus.elect_representatives_hierarchical(
-                    clusters_df, method=cfg.consensus_method,
-                    text_col="norm_text", id_col=cfg.id_col,
-                    direct_threshold=cfg.hierarchical_consensus_threshold,
-                )
             return consensus.elect_representatives(
                 clusters_df, method=cfg.consensus_method,
                 text_col="norm_text", id_col=cfg.id_col,

@@ -43,40 +43,73 @@ def test_block_keys_passes(spark):
     assert {"u1", "u2"} in keys.values()
 
 
+def _salted_pairs(spark, rows, max_block_size, drop_block_size=None):
+    """The candidate rule in Python: blocks of 2..drop_block_size rows split
+    into ceil(size / max_block_size) salt groups by pmod(xxhash64(doc_id)),
+    every id_a < id_b pair within a salt group, one row per pair with the
+    least (block_pass, block_key).  Salts come from Spark's xxhash64."""
+    ids = sorted({r[0] for r in rows})
+    h = dict(spark.createDataFrame([(i,) for i in ids], "d string")
+             .select("d", F.xxhash64("d")).collect())
+    blocks = {}
+    for doc, bpass, key in rows:
+        blocks.setdefault(key, []).append((doc, bpass))
+    prov = {}
+    for key, members in blocks.items():
+        size = len(members)
+        if size <= 1 or (drop_block_size is not None and size > drop_block_size):
+            continue
+        n_salt = -(-size // max_block_size)
+        for da, pa_ in members:
+            for db, _ in members:
+                if da < db and h[da] % n_salt == h[db] % n_salt:
+                    p = (da, db)
+                    prov[p] = min(prov.get(p, (pa_, key)), (pa_, key))
+    return {(a, b, bp, bk) for (a, b), (bp, bk) in prov.items()}
+
+
+def _pair_set(pairs):
+    return {(r.id_a, r.id_b, r.block_pass, r.block_key) for r in pairs.collect()}
+
+
 def test_candidate_salting_bounds_block_size(spark):
     # one mega-block of 100 docs with cap 10: salted sub-blocks only
     rows = [(f"d{i:03d}", "p1", "megablock") for i in range(100)]
     blocks = spark.createDataFrame(rows, ["doc_id", "block_pass", "block_key"])
     pairs = candidates.candidate_pairs(blocks, max_block_size=10)
-    n = pairs.count()
+    got = _pair_set(pairs)
     full = 100 * 99 // 2
-    assert 0 < n < full  # salting dropped cross-salt pairs by design
-    # all pairs canonical and unique
-    got = pairs.select("id_a", "id_b").collect()
-    assert all(r.id_a < r.id_b for r in got)
-    assert len(got) == len({(r.id_a, r.id_b) for r in got})
+    assert 0 < len(got) < full  # salting dropped cross-salt pairs by design
+    assert all(a < b for a, b, _, _ in got)
+    assert pairs.count() == len(got)  # one row per pair
+    assert got == _salted_pairs(spark, rows, max_block_size=10)
 
 
 def test_candidate_stop_key_drop(spark):
     rows = ([(f"d{i:03d}", "host", "h:mega") for i in range(50)]
+            + [(f"d{i:03d}", "minhash", "m:big") for i in range(25)]
             + [("a", "host", "h:ok"), ("b", "host", "h:ok")])
     blocks = spark.createDataFrame(rows, ["doc_id", "block_pass", "block_key"])
     pairs = candidates.candidate_pairs(blocks, max_block_size=10, drop_block_size=40)
-    got = pairs.collect()
-    # mega block (50 > 40) dropped entirely; normal block survives
-    assert len(got) == 1 and got[0].id_a == "a" and got[0].id_b == "b"
+    got = _pair_set(pairs)
+    # mega block (50 > 40) dropped entirely; the salted and normal blocks survive
+    assert ("a", "b", "host", "h:ok") in got
+    assert not any(k == "h:mega" for *_, k in got)
+    assert got == _salted_pairs(spark, rows, max_block_size=10, drop_block_size=40)
 
 
 def test_candidate_multi_pass_dedup(spark):
     rows = [
         ("a", "host", "h:x"), ("b", "host", "h:x"),
-        ("a", "minhash", "m:1"), ("b", "minhash", "m:1"),
+        ("a", "minhash", "m:1"), ("b", "minhash", "m:1"), ("c", "minhash", "m:1"),
+        ("a", "tokensort", "t:1"), ("c", "tokensort", "t:1"),
     ]
     blocks = spark.createDataFrame(rows, ["doc_id", "block_pass", "block_key"])
     pairs = candidates.candidate_pairs(blocks, max_block_size=10)
-    got = pairs.collect()
-    assert len(got) == 1  # deduped across passes
-    assert got[0].block_pass == "host"  # lexicographically first provenance
+    got = _pair_set(pairs)
+    assert pairs.count() == 3  # deduped across passes
+    assert ("a", "b", "host", "h:x") in got  # lexicographically first provenance
+    assert got == _salted_pairs(spark, rows, max_block_size=10)
 
 
 def test_prefilter_bound_is_exact():

@@ -1,4 +1,4 @@
-"""Consensus method variants through the applyInPandas surface."""
+"""Consensus method variants through the sorted mapInArrow surface."""
 
 from __future__ import annotations
 
@@ -16,8 +16,10 @@ def clustered(spark):
         ("c1", "d7", "Levenhtin"), ("c1", "d8", "evenshtei"),
         ("c2", "d9", "solo text"),
         ("c3", "da", "dup"), ("c3", "db", "dup"), ("c3", "dc", "dup variant"),
+        ("c4", "dd", None), ("c4", "de", None),   # every text NULL
+        ("c5", "df", None),                       # NULL-text singleton
     ]
-    return spark.createDataFrame(rows, ["cluster_id", "doc_id", "norm_text"])
+    return spark.createDataFrame(rows, "cluster_id string, doc_id string, norm_text string")
 
 
 @pytest.mark.parametrize("method,expected_c1", [
@@ -30,6 +32,8 @@ def test_methods(spark, clustered, method, expected_c1):
             consensus.elect_representatives(clustered, method=method).collect()}
     assert reps["c2"].representative == "solo text" and reps["c2"].n_members == 1
     assert reps["c1"].n_members == 8
+    assert (reps["c4"].n_members, reps["c4"].representative) == (0, None)
+    assert (reps["c5"].n_members, reps["c5"].representative) == (1, None)
     if expected_c1:
         assert reps["c1"].representative == expected_c1
     else:
@@ -54,32 +58,10 @@ def test_median_improve_rounds(spark, clustered):
     assert got <= base
 
 
-def test_hierarchical_reduces_to_flat_below_threshold(spark):
-    from levsim.consensus import elect_representatives, elect_representatives_hierarchical
-
-    rows = []
-    for cid, members in [("a", ["spam", "spa", "spams", "spam"]),
-                         ("b", ["x"]),
-                         ("c", ["kitten", "sitten", "mitten"])]:
-        for i, t in enumerate(members):
-            rows.append((f"{cid}{i}", cid, t))
-    df = spark.createDataFrame(rows, ["doc_id", "cluster_id", "norm_text"])
-    for method in ("setmedian", "quickmedian", "median"):
-        flat = {r.cluster_id: (r.representative, r.n_members)
-                for r in elect_representatives(df, method=method,
-                                               max_members=None).collect()}
-        hier = {r.cluster_id: (r.representative, r.n_members)
-                for r in elect_representatives_hierarchical(df, method=method).collect()}
-        assert flat == hier, method
-
-
-def test_hierarchical_megacluster_bounded_and_majority(spark):
-    """A 20k-member cluster never lands in one task: fanout subgroups elect
-    locally, the weighted second level recovers the dominant variant."""
-    from pyspark.sql import functions as F
-
-    from levsim.consensus import elect_representatives_hierarchical
-
+def test_megacluster_capped_and_majority(spark):
+    """A 20k-member cluster streams through one task: the sorted pass keeps
+    the max_members lowest ids and elects the dominant variant among them,
+    whatever the input partitioning."""
     n = 20000
     base = spark.range(n).select(
         F.concat(F.lit("d"), F.col("id")).alias("doc_id"),
@@ -87,23 +69,13 @@ def test_hierarchical_megacluster_bounded_and_majority(spark):
         F.when(F.col("id") % 10 < 8, F.lit("the canonical boilerplate page"))
         .otherwise(F.lit("the canonical boilerplate pag3")).alias("norm_text"),
     )
-    out = elect_representatives_hierarchical(
-        base, method="setmedian", fanout=32, direct_threshold=1000).collect()
+    out = consensus.elect_representatives(base, method="setmedian").collect()
     assert len(out) == 1
-    assert out[0].n_members == n
+    assert out[0].n_members == 1000  # the max_members sample
     assert out[0].representative == "the canonical boilerplate page"
-    # determinism under different physical partitioning
-    out2 = elect_representatives_hierarchical(
-        base.repartition(17), method="setmedian", fanout=32,
-        direct_threshold=1000).collect()
-    assert out2[0].representative == out[0].representative
-
-
-def test_hierarchical_all_null_cluster_keeps_id(spark):
-    from levsim.consensus import elect_representatives_hierarchical
-
-    rows = [("d1", "c1", None), ("d2", "c1", None), ("d3", "c2", "ok text")]
-    df = spark.createDataFrame(rows, ["doc_id", "cluster_id", "norm_text"])
-    got = {r.cluster_id: r.representative
-           for r in elect_representatives_hierarchical(df).collect()}
-    assert got == {"c1": None, "c2": "ok text"}
+    out2 = consensus.elect_representatives(base.repartition(17), method="setmedian").collect()
+    assert out2 == out
+    # uncapped, every member votes
+    full = consensus.elect_representatives(base, max_members=None).collect()
+    assert [(r.n_members, r.representative) for r in full] == [
+        (n, "the canonical boilerplate page")]

@@ -127,6 +127,17 @@ def test_median_improve_never_worse(strs, seed):
 def test_setmedian_is_member(strs):
     m = K.setmedian(strs)
     assert m in strs
+    # bytes members elect the same winner, returned as str (pyx:173)
+    mb = K.setmedian([x.encode("latin-1") for x in strs])
+    assert mb == m and type(mb) is str
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.text(alphabet=st.characters(blacklist_categories=("Cs",)), max_size=40))
+def test_from_codes_is_the_chr_join(s):
+    codes = K._codes(s)
+    assert K._from_codes(codes) == "".join(chr(int(c)) for c in codes) == s
+    assert K._from_codes(codes.tolist()) == s
 
 
 @settings(max_examples=100, deadline=None)

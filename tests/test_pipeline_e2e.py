@@ -319,3 +319,33 @@ def test_adjusted_rand_identical_and_degenerate(spark):
     row = evaluate.rand_components(x, y).collect()[0]
     assert row["ari_ppm"] == 0
     assert evaluate.adjusted_rand(x, y)["ari"] < 0
+
+
+def test_candidates_and_consensus_plans_are_lineage_safe(spark, pages, tmp_path, monkeypatch):
+    """Neither stage scans a checkpointed RDD (its blocks die with an
+    executor), and neither needs a Window.  Candidates groups blocks instead
+    of self-joining them and runs the MinHash UDF once; consensus is one
+    sorted Arrow pass, not a singleton/multi-member union."""
+    import re
+
+    plans = {}
+    write = tables.SnapshotTable.write
+
+    def recording_write(self, df, *a, **kw):
+        plans[self.name] = df._jdf.queryExecution().executedPlan().toString()
+        return write(self, df, *a, **kw)
+
+    monkeypatch.setattr(tables.SnapshotTable, "write", recording_write)
+    ERPipeline(spark, str(tmp_path / "er_plans"), ERConfig(tau=0.87)).run(pages)
+
+    def count(plan, op):
+        return len(re.findall(op, plan))
+
+    for table in ("pairs", "representatives"):
+        plan = plans[table]
+        assert not count(plan, r"ExistingRDD|LogicalRDD"), plan
+        assert not count(plan, r"\bWindow\b"), plan
+    assert not count(plans["pairs"], r"Join\b|CartesianProduct"), plans["pairs"]
+    assert count(plans["pairs"], r"\bArrowEvalPython\b") == 1, plans["pairs"]
+    assert not count(plans["representatives"], r"\bUnion\b"), plans["representatives"]
+    assert count(plans["representatives"], r"\bMapInArrow\b") == 1, plans["representatives"]
