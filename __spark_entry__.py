@@ -3779,7 +3779,7 @@ def _minhash_pairs_oracle_sql(n_perm: int = 64, rows_per_band: int = 2,
     """Recompute minhash_candidate_pairs' band keys (blocking.py word hash ->
     shingle combination -> affine lanes -> band fold -> splitmix finalizer)
     and emit the exact candidate set.  Valid while no block exceeds
-    max_block_size=500 (true at sf<=0.01: salting is the identity there)."""
+    max_block_size=500 (true at sf<=0.01: the cap is the identity there)."""
     from levsim.blocking import _SHINGLE_C, _perm_params
 
     assert shingle_k == 2, "oracle SQL is specialized to shingle_k=2"

@@ -84,14 +84,6 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str,
     )
 
 
-def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Keep exactly one row (min id) per distinct text value."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(F.xxhash64(text_col)).orderBy(id_col)
-    return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
-
-
 # ---------------------------------------------------------------------------
 # minhash near-dup
 # ---------------------------------------------------------------------------
@@ -426,17 +418,6 @@ def char_ngrams_col(text_col, n: int = 3) -> F.Column:
     )
 
 
-def char_ngram_jaccard_col(text_a, text_b, n: int = 3) -> F.Column:
-    """Jaccard similarity of distinct character-n-gram sets — the
-    shingle-level near-dup metric (token Jaccard misses reorder-free edits
-    inside words); fully SQL-expressible, so DuckDB-oracle-able."""
-    ga = char_ngrams_col(text_a, n)
-    gb = char_ngrams_col(text_b, n)
-    inter = F.size(F.array_intersect(ga, gb))
-    union = F.size(F.array_union(ga, gb))
-    return F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0))
-
-
 def winnow_fingerprints(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -645,22 +626,6 @@ def remove_duplicate_spans(
         )
     )
     return out
-
-
-def jaccard_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
-                        block_col: str, tau: float = 0.8) -> DataFrame:
-    """Within-block token-Jaccard near-dup pairs (SQL-expressible end to end)."""
-    a = df.select(F.col(block_col).alias("bk"), F.col(id_col).alias("id_a"),
-                  F.col(text_col).alias("text_a"))
-    b = df.select(F.col(block_col).alias("bk"), F.col(id_col).alias("id_b"),
-                  F.col(text_col).alias("text_b"))
-    return (
-        a.join(b, "bk")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("jaccard", F.round(token_jaccard_col(F.col("text_a"), F.col("text_b")), 6))
-        .where(F.col("jaccard") >= tau)
-        .select("id_a", "id_b", "jaccard")
-    )
 
 
 def _dense_bitset_jaccard_pairs(

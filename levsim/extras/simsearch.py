@@ -455,46 +455,3 @@ def embedding_neardup_pairs(
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    n_planes: int = 16,
-    bands: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """Approximate top-k: hyperplane-signature band join, cosine re-rank
-    inside buckets.  Recall measured against brute_force_topk in tests."""
-    from pyspark.sql import Window
-
-    sig = hyperplane_sig_udf(n_planes, dim)
-    rows = n_planes // bands
-    mask = (1 << rows) - 1
-
-    def banded(df, idc, vc, out_id, out_vec):
-        s = df.select(F.col(idc).alias(out_id), F.col(vc).alias(out_vec),
-                      sig(F.col(vc)).alias("sig"))
-        return s.select(
-            out_id, out_vec,
-            F.explode(F.array(*[
-                F.concat(F.lit(f"{i}:"),
-                         F.shiftright(F.col("sig"), i * rows).bitwiseAND(F.lit(mask)).cast("string"))
-                for i in range(bands)
-            ])).alias("bucket"),
-        )
-
-    c = banded(corpus, id_col, vec_col, "neighbor_id", "cvec")
-    q = banded(queries, query_id_col, vec_col, "query_id", "qvec")
-    cand = c.join(q, "bucket").dropDuplicates(["query_id", "neighbor_id"])
-    scored = cand.withColumn("cosine", F.round(cosine_col(F.col("cvec"), F.col("qvec")), 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )

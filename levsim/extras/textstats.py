@@ -52,10 +52,6 @@ def bpe_ish_tokens(col) -> Column:
     return F.regexp_extract_all(c, F.lit(BPE_ISH_PATTERN), 0)
 
 
-def bpe_ish_token_count(col) -> Column:
-    return F.size(bpe_ish_tokens(col))
-
-
 def char_count(col) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.length(c)

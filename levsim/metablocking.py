@@ -69,15 +69,13 @@ def comparison_edges(
     top of it (HashPartitioning(_bk) satisfies both distributions); the
     old groupBy(sizes)+join round-trip recomputed the distinct twice and
     added two more exchanges.  ``share_blocks`` then materializes the
-    table once (lazy localCheckpoint) for BOTH self-join branches — the
-    same fix as ``candidates.candidate_pairs``: in the broadcast regime
-    the two sides otherwise recompute union+dedup+window independently
-    (measured 16.4s -> 2.2s on the round-7 q10 bench, identical edges).
+    table once (lazy localCheckpoint) for BOTH self-join branches: in the
+    broadcast regime the two sides otherwise recompute union+dedup+window
+    independently (measured 16.4s -> 2.2s on the round-7 q10 bench,
+    identical edges).
     Set ``share_blocks=False`` on a real cluster to keep lineage-based
     fault recovery and let ReuseExchange dedup the SMJ-regime plan.
     """
-    from pyspark.sql import Window
-
     b = (
         blocks.select(F.col(key_col).alias("_bk"), F.col(id_col).alias("_id"))
         .repartition("_bk")

@@ -40,8 +40,18 @@ def token_sort_key(col) -> Column:
     return F.array_join(F.array_sort(F.split(norm_text(c), " ")), " ")
 
 
+# cap on the normalized text every stage keys and scores: real crawl pages
+# can be 100 KB+, and Jaro-family kernels are superlinear in length.
+# Prefix truncation keeps ratio a lower bound for near-identical long
+# docs, and exact dedup upstream catches byte-identical ones regardless.
+MAX_NORM_CHARS = 4096
+
+
 def with_normalized(df: DataFrame, text_col: str = "text", url_col: str = "url") -> DataFrame:
-    out = df.withColumn("norm_text", norm_text(text_col))
+    """``df`` plus ``norm_text`` (its first ``MAX_NORM_CHARS`` normalized
+    characters) and, when ``url_col`` exists, ``host``; the stored text
+    column stays intact."""
+    out = df.withColumn("norm_text", F.substring(norm_text(text_col), 1, MAX_NORM_CHARS))
     if url_col in df.columns:
         out = out.withColumn("host", url_host(url_col))
     return out

@@ -51,46 +51,20 @@ _JOB_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interrupt
 @dataclass
 class ERConfig:
     tau: float = 0.87
-    scorers: tuple = ("ratio", "jaro_winkler")
-    score_col: str = "ratio"
-    n_perm: int = 64
-    rows_per_band: int = 4
-    shingle_k: int = 3
-    max_block_size: int = 200
-    drop_block_size: int | None = None  # stop-key removal threshold (see candidates.py)
+    max_block_size: int = candidates.MAX_BLOCK_SIZE
     consensus_method: str = "setmedian"
-    blocking_passes: tuple = ("host", "minhash", "tokensort")
     # sorted-neighborhood pass: window size (None disables).  Catches
     # near-misses whose sort keys are CLOSE but unequal — typos in the
     # leading chars — which no equality pass can pair; pairs union into
     # the candidate set with block_pass='snm'.
     snm_window: int | None = None
-    snm_key_len: int = 24
-    id_col: str = "url"
-    text_col: str = "text"
-    # cap normalized text length fed to the scorers: real crawl pages can be
-    # 100 KB+, and Jaro-family kernels are superlinear in length.  Standard
-    # ER practice; None disables.  Affects scoring input only (the stored
-    # text column stays intact); prefix-truncation keeps ratio a lower bound
-    # for near-identical long docs, and exact dedup upstream catches
-    # byte-identical ones regardless.
-    truncate_len: int | None = 4096
 
     def params(self) -> dict:
         return {
-            "truncate_len": self.truncate_len,
             "tau": self.tau,
-            "scorers": list(self.scorers),
-            "score_col": self.score_col,
-            "n_perm": self.n_perm,
-            "rows_per_band": self.rows_per_band,
-            "shingle_k": self.shingle_k,
             "max_block_size": self.max_block_size,
-            "drop_block_size": self.drop_block_size,
             "snm_window": self.snm_window,
-            "snm_key_len": self.snm_key_len,
             "consensus": self.consensus_method,
-            "passes": list(self.blocking_passes),
         }
 
 
@@ -195,38 +169,21 @@ class ERPipeline:
             pages_snapshot_id = input_snapshot_id(pages, f"{self.run_id}_{uuid.uuid4().hex}")
         stages: List[StageResult] = []
 
-        def compute_norm():
-            out = normalize.with_normalized(pages, text_col=cfg.text_col, url_col=cfg.id_col)
-            if cfg.truncate_len:
-                out = out.withColumn(
-                    "norm_text", F.substring("norm_text", 1, cfg.truncate_len)
-                )
-            return out
-
-        norm_df, r = self._stage("normalize", [pages_snapshot_id], compute_norm,
+        norm_df, r = self._stage("normalize", [pages_snapshot_id],
+                                 lambda: normalize.with_normalized(pages),
                                  self.tables["pages_norm"])
         stages.append(r)
 
         by_pass = Observation("pairs_by_pass")
 
         def compute_pairs():
-            blocks = blocking.add_block_keys(
-                norm_df,
-                id_col=cfg.id_col,
-                text_col="norm_text",
-                host_col="host",
-                n_perm=cfg.n_perm,
-                rows_per_band=cfg.rows_per_band,
-                shingle_k=cfg.shingle_k,
-                passes=cfg.blocking_passes,
-            )
+            # the catch-up's keys (streaming.run_incremental_pairs)
+            blocks = blocking.add_block_keys(norm_df)
             extra = None
             if cfg.snm_window:
                 snm_src = norm_df.select(
-                    F.col(cfg.id_col).alias("doc_id"),
-                    F.substring(
-                        normalize.token_sort_key(F.col("norm_text")), 1, cfg.snm_key_len
-                    ).alias("sk"),
+                    F.col("url").alias("doc_id"),
+                    F.substring(normalize.token_sort_key(F.col("norm_text")), 1, 24).alias("sk"),
                 )
                 extra = blocking.sorted_neighborhood_pairs(
                     snm_src, "doc_id", "sk", window=cfg.snm_window
@@ -237,11 +194,10 @@ class ERPipeline:
                     F.concat(F.lit("s:"), F.col("gap").cast("string")).alias("block_key"),
                 )
             pairs = candidates.candidate_pairs(blocks, max_block_size=cfg.max_block_size,
-                                               drop_block_size=cfg.drop_block_size,
                                                extra_pairs=extra)
             # blocking observability: per-pass candidate counts, observed
             # on the snapshot write
-            passes = [*cfg.blocking_passes, *(["snm"] if cfg.snm_window else [])]
+            passes = ["host", "minhash", "tokensort", *(["snm"] if cfg.snm_window else [])]
             return pairs.observe(by_pass, *[
                 F.count_if(F.col("block_pass") == p).alias(p) for p in passes])
 
@@ -258,29 +214,27 @@ class ERPipeline:
             # read of a small parquet may come back as 1 partition
             par = self.spark.sparkContext.defaultParallelism * 2
             wide_pairs = pairs_df.repartition(par, "id_a")
-            with_text = scoring.attach_texts(wide_pairs, norm_df, id_col=cfg.id_col,
+            with_text = scoring.attach_texts(wide_pairs, norm_df, id_col="url",
                                              text_col="norm_text")
             # cascade: the cheap banded ratio kernel gates the candidates;
-            # expensive secondary scorers run only on pairs >= tau
-            secondary = tuple(s for s in cfg.scorers if s != "ratio")
+            # jaro_winkler runs only on pairs >= tau
             scored = scoring.score_pairs_cascade(with_text, tau=cfg.tau,
-                                                 secondary=secondary)
-            keep = [c for c in ("ratio", "jaro_winkler", "jaro", "lev_distance")
-                    if c in scored.columns]
-            return scored.select("id_a", "id_b", "block_pass", "block_key", *keep)
+                                                 secondary=("jaro_winkler",))
+            return scored.select("id_a", "id_b", "block_pass", "block_key",
+                                 "ratio", "jaro_winkler")
 
         scores_df, r = self._stage("scores", [stages[-1].snapshot_id], compute_scores,
                                    self.tables["scores"])
         stages.append(r)
 
-        matched = scores_df.where(F.col(cfg.score_col) >= F.lit(cfg.tau))
+        matched = scores_df.where(F.col("ratio") >= F.lit(cfg.tau))
 
         def compute_clusters():
             comps = clustering.connected_components(matched)
             return clustering.attach_clusters(
-                norm_df.select(cfg.id_col, "norm_text"),
-                comps.withColumnRenamed("doc_id", cfg.id_col),
-                id_col=cfg.id_col,
+                norm_df.select("url", "norm_text"),
+                comps.withColumnRenamed("doc_id", "url"),
+                id_col="url",
             )
 
         clusters_df, r = self._stage("clusters", [stages[-1].snapshot_id], compute_clusters,
@@ -290,7 +244,7 @@ class ERPipeline:
         def compute_reps():
             return consensus.elect_representatives(
                 clusters_df, method=cfg.consensus_method,
-                text_col="norm_text", id_col=cfg.id_col,
+                text_col="norm_text", id_col="url",
             )
 
         reps_df, r = self._stage("consensus", [stages[-1].snapshot_id], compute_reps,

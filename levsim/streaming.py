@@ -1,12 +1,15 @@
 """Catch-up over landed page files: the candidate pairs new pages unlock.
 
 A catch-up is a batch delta over the page files no committed catch-up has
-read, keyed with the batch path's expressions (content hashes, so catch-up
-and batch agree byte for byte).  ``run_incremental_pairs`` appends the
-candidate pairs the new pages unlock, a Catalyst join of their keys
-against the key table in ``checkpoint_dir``.  A url is keyed once (its
-first landing wins); a new key row ranked below the ``max_state_ids`` cap
-pairs with the rows ranked below it, and each pair is written once.
+read, normalized and keyed with the batch path's expressions (content
+hashes, so catch-up and batch agree byte for byte).  ``run_incremental_pairs``
+appends the candidate pairs the new pages unlock, a Catalyst join of their
+keys against the key table in ``checkpoint_dir``.  A url is keyed once (its
+first landing wins); a key's rows are ranked by (batch, doc_id), a new row
+ranked below the ``max_state_ids`` cap pairs with the rows ranked below it,
+and each pair is written once.  This is ``candidates.candidate_pairs``' cap
+rule, which ranks every row in batch 0, so over one landing the two emit
+the same pairs.
 Output files carry the batch number and a marker listing the input files
 commits each batch, so a rerun replaces an uncommitted batch.
 docs/DESIGN.md §9 has the layout, the rules and the exactly-once
@@ -23,7 +26,7 @@ from typing import List, Optional, Tuple
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from . import blocking, normalize
+from . import blocking, candidates, normalize
 from .tables import PAGES_SCHEMA
 
 KEY_TABLE_SCHEMA = "doc_id string, block_key string, batch int, rank int"
@@ -109,7 +112,8 @@ def _first_landings(spark: SparkSession, files: List[str],
 
 
 def run_incremental_pairs(spark: SparkSession, input_dir: str, output_dir: str,
-                          checkpoint_dir: str, max_state_ids: int = 200) -> Optional[int]:
+                          checkpoint_dir: str,
+                          max_state_ids: int = candidates.MAX_BLOCK_SIZE) -> Optional[int]:
     """Append the (id_a, id_b, block_key) pairs the new page files unlock
     to ``output_dir``.  Returns the committed batch number, or None when no
     file is new."""

@@ -469,35 +469,3 @@ def input_snapshot_id(df: DataFrame, fallback: str) -> str:
         st = path.getFileSystem(conf).getFileStatus(path)
         h.update(f"{f}\0{st.getLen()}\0{st.getModificationTime()}\0".encode())
     return f"files_{h.hexdigest()[:16]}"
-
-
-# ---------------------------------------------------------------------------
-# Bucketed tables: shuffle-free co-located joins (the 100 TB join lever)
-# ---------------------------------------------------------------------------
-
-
-def write_bucketed(df, name: str, path: str, bucket_cols, n_buckets: int = 64,
-                   sort_cols=None, mode: str = "overwrite"):
-    """Persist ``df`` as a bucketed (+optionally sorted) parquet table.
-
-    Bucketing pre-shuffles ONCE at write time: every later equi-join or
-    aggregation on ``bucket_cols`` between tables bucketed the same way
-    runs with ZERO exchanges (asserted in test_tables) — at 100 TB this is
-    the difference between re-shuffling the 20 TB docs table per pipeline
-    run and never shuffling it again.  Natural uses here: docs bucketed by
-    doc_id (scoring's attach-texts joins), band tables by block_key.
-
-    Spark requires saveAsTable for bucket metadata; with an explicit path
-    the table is external — dropping it later removes metadata only."""
-    bc = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
-    w = df.write.format("parquet").bucketBy(n_buckets, *bc)
-    if sort_cols:
-        sc = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
-        w = w.sortBy(*sc)
-    w.option("path", path).mode(mode).saveAsTable(name)
-
-
-def read_bucketed(spark: SparkSession, name: str) -> DataFrame:
-    """Read a bucketed table WITH its bucket spec (a plain
-    spark.read.parquet(path) would discard it and re-shuffle on join)."""
-    return spark.table(name)

@@ -1,4 +1,4 @@
-"""Unit tests for blocking, candidates (salting), prefilter exactness,
+"""Unit tests for blocking, candidates (the rank cap), prefilter exactness,
 normalization, and the StringMatcher shim."""
 
 from __future__ import annotations
@@ -43,28 +43,20 @@ def test_block_keys_passes(spark):
     assert {"u1", "u2"} in keys.values()
 
 
-def _salted_pairs(spark, rows, max_block_size, drop_block_size=None):
-    """The candidate rule in Python: blocks of 2..drop_block_size rows split
-    into ceil(size / max_block_size) salt groups by pmod(xxhash64(doc_id)),
-    every id_a < id_b pair within a salt group, one row per pair with the
-    least (block_pass, block_key).  Salts come from Spark's xxhash64."""
-    ids = sorted({r[0] for r in rows})
-    h = dict(spark.createDataFrame([(i,) for i in ids], "d string")
-             .select("d", F.xxhash64("d")).collect())
+def _capped_pairs(rows, cap):
+    """The candidate rule in Python: per key, every id_a < id_b pair of its
+    ``cap`` lowest distinct ids, one row per pair with the least
+    (block_pass, block_key)."""
     blocks = {}
     for doc, bpass, key in rows:
-        blocks.setdefault(key, []).append((doc, bpass))
+        blocks.setdefault(key, set()).add((doc, bpass))
     prov = {}
     for key, members in blocks.items():
-        size = len(members)
-        if size <= 1 or (drop_block_size is not None and size > drop_block_size):
-            continue
-        n_salt = -(-size // max_block_size)
-        for da, pa_ in members:
-            for db, _ in members:
-                if da < db and h[da] % n_salt == h[db] % n_salt:
-                    p = (da, db)
-                    prov[p] = min(prov.get(p, (pa_, key)), (pa_, key))
+        ids = sorted({d for d, _ in members})[:cap]
+        bpass = min(p for _, p in members)
+        for i, da in enumerate(ids):
+            for db in ids[i + 1:]:
+                prov[da, db] = min(prov.get((da, db), (bpass, key)), (bpass, key))
     return {(a, b, bp, bk) for (a, b), (bp, bk) in prov.items()}
 
 
@@ -72,30 +64,24 @@ def _pair_set(pairs):
     return {(r.id_a, r.id_b, r.block_pass, r.block_key) for r in pairs.collect()}
 
 
-def test_candidate_salting_bounds_block_size(spark):
-    # one mega-block of 100 docs with cap 10: salted sub-blocks only
-    rows = [(f"d{i:03d}", "p1", "megablock") for i in range(100)]
+def test_candidate_cap_bounds_block_size(spark):
+    # a mega-block of 100 docs with cap 10 pairs its 10 lowest ids only;
+    # keys of 2, 25 (duplicate rows included) and 1 distinct id ride along
+    rows = ([(f"d{i:03d}", "p1", "megablock") for i in range(100)]
+            + [(f"e{i % 25:03d}", "minhash", "m:big") for i in range(30)]
+            + [("a", "host", "h:ok"), ("b", "host", "h:ok"), ("b", "host", "h:ok")]
+            + [("c", "host", "h:one"), ("c", "host", "h:one")])
     blocks = spark.createDataFrame(rows, ["doc_id", "block_pass", "block_key"])
     pairs = candidates.candidate_pairs(blocks, max_block_size=10)
     got = _pair_set(pairs)
-    full = 100 * 99 // 2
-    assert 0 < len(got) < full  # salting dropped cross-salt pairs by design
+    mega = {(a, b) for a, b, _, k in got if k == "megablock"}
+    assert mega == {(f"d{i:03d}", f"d{j:03d}") for i in range(10) for j in range(i + 1, 10)}
+    assert len(mega) == 45
+    assert ("a", "b", "host", "h:ok") in got
+    assert not any(k == "h:one" for *_, k in got)
     assert all(a < b for a, b, _, _ in got)
     assert pairs.count() == len(got)  # one row per pair
-    assert got == _salted_pairs(spark, rows, max_block_size=10)
-
-
-def test_candidate_stop_key_drop(spark):
-    rows = ([(f"d{i:03d}", "host", "h:mega") for i in range(50)]
-            + [(f"d{i:03d}", "minhash", "m:big") for i in range(25)]
-            + [("a", "host", "h:ok"), ("b", "host", "h:ok")])
-    blocks = spark.createDataFrame(rows, ["doc_id", "block_pass", "block_key"])
-    pairs = candidates.candidate_pairs(blocks, max_block_size=10, drop_block_size=40)
-    got = _pair_set(pairs)
-    # mega block (50 > 40) dropped entirely; the salted and normal blocks survive
-    assert ("a", "b", "host", "h:ok") in got
-    assert not any(k == "h:mega" for *_, k in got)
-    assert got == _salted_pairs(spark, rows, max_block_size=10, drop_block_size=40)
+    assert got == _capped_pairs(rows, cap=10)
 
 
 def test_candidate_multi_pass_dedup(spark):
@@ -109,7 +95,7 @@ def test_candidate_multi_pass_dedup(spark):
     got = _pair_set(pairs)
     assert pairs.count() == 3  # deduped across passes
     assert ("a", "b", "host", "h:x") in got  # lexicographically first provenance
-    assert got == _salted_pairs(spark, rows, max_block_size=10)
+    assert got == _capped_pairs(rows, cap=10)
 
 
 def test_prefilter_bound_is_exact():
@@ -151,43 +137,6 @@ def test_minhash_jaccard_sensitivity():
     sf_ = set(band_keys(minhash_signature(far, 64, 3, 1), 4))
     assert len(sb & sn) > 0       # near dup shares bands
     assert len(sb & sf_) == 0     # unrelated text shares none
-
-
-def test_jw_prefilter_bound_is_exact(spark):
-    """jaro_winkler_length_bound must never prune a pair that can reach tau:
-    checked against the exact kernel over length-skewed random pairs, with
-    the bound evaluated by Spark itself (column-algebra parity)."""
-    from levsim.prefilter import jaro_winkler_length_bound
-
-    rng = random.Random(9)
-    rows = []
-    for i in range(400):
-        a = "".join(rng.choice("abcde") for _ in range(rng.randint(0, 40)))
-        b = a[: rng.randint(0, len(a))] + "".join(
-            rng.choice("abcde") for _ in range(rng.randint(0, 60)))
-        rows.append((i, a, b, K.jaro_winkler(a, b)))
-    df = spark.createDataFrame(rows, ["i", "a", "b", "jw"])
-    tau = 0.8
-    kept = df.where(jaro_winkler_length_bound(F.length("a"), F.length("b"), tau))
-    kept_ids = {r.i for r in kept.collect()}
-    for i, a, b, jw in rows:
-        if jw >= tau:
-            assert i in kept_ids, (a, b, jw)  # exact bound: no false prune
-    # and it actually prunes something on skewed pairs
-    assert len(kept_ids) < len(rows)
-    # raised prefix_weight (ADVICE round 2): bound must widen with the
-    # scorer's weight — still exact at w=0.25 against the w=0.25 kernel
-    w = 0.25
-    rows25 = [(i, a, b, K.jaro_winkler(a, b, prefix_weight=w))
-              for i, a, b, _ in rows]
-    kept25 = {r.i for r in df.where(jaro_winkler_length_bound(
-        F.length("a"), F.length("b"), tau, prefix_weight=w)).collect()}
-    for i, a, b, jw in rows25:
-        if jw >= tau:
-            assert i in kept25, (a, b, jw)
-    with pytest.raises(ValueError):
-        jaro_winkler_length_bound(F.length("a"), F.length("b"), tau,
-                                  prefix_weight=0.3)
 
 
 def test_sorted_neighborhood_matches_naive_window(spark):
@@ -333,12 +282,12 @@ def test_phonetic_blocking_pass(spark):
 
 
 def test_osa_affine_prefilter_bounds_are_exact(spark):
-    """The length bounds never prune a pair the scorer could keep, and the
-    affine bound is achieved by pure-run pairs (tightness)."""
+    """The OSA length bound never prunes a pair the scorer could keep, and
+    the affine-gap cost of a pure run is open + extend per char."""
     import random
 
     from levsim import kernels as K
-    from levsim.prefilter import affine_gap_length_bound, osa_length_bound
+    from levsim.prefilter import osa_length_bound
 
     rng = random.Random(11)
     rows = []
@@ -349,11 +298,8 @@ def test_osa_affine_prefilter_bounds_are_exact(spark):
     df = spark.createDataFrame(rows, "i long, a string, b string, la int, lb int")
     for cutoff in (0, 2, 5):
         kept_osa = {r.i for r in df.where(osa_length_bound(F.col("la"), F.col("lb"), cutoff)).collect()}
-        kept_aff = {r.i for r in df.where(affine_gap_length_bound(F.col("la"), F.col("lb"), cutoff)).collect()}
         for i, a, b, _, _ in rows:
             if K.osa_distance(a, b) <= cutoff:
                 assert i in kept_osa, (a, b, cutoff)
-            if K.affine_gap_distance(a, b) <= cutoff:
-                assert i in kept_aff, (a, b, cutoff)
     # tightness: 'abc' vs 'abcxx' costs exactly open + 2*extend
     assert K.affine_gap_distance("abc", "abcxx") == 2 + 2

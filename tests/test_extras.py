@@ -26,9 +26,6 @@ def test_exact_dedup(spark, docs):
     groups = dedup.exact_duplicates(docs, "doc_id", "text").collect()
     assert len(groups) == 1
     assert groups[0].keep_id == 1 and groups[0].dup_ids == [1, 2]
-    kept = dedup.dedup_exact(docs, "doc_id", "text")
-    assert kept.count() == 5
-    assert kept.where(F.col("doc_id") == 2).count() == 0
 
 
 def test_minhash_candidates(spark, docs):
@@ -105,15 +102,6 @@ def test_simhash_recall_contract(spark):
         assert got == want, f"max_hamming={k}: missing {want - got}"
 
 
-def test_jaccard_dedup(spark, docs):
-    d = docs.withColumn("bk", F.col("lang"))
-    pairs = dedup.jaccard_dedup_pairs(d, "doc_id", "text", "bk", tau=0.5)
-    got = {(r.id_a, r.id_b): r.jaccard for r in pairs.collect()}
-    assert got[(1, 2)] == 1.0
-    assert (1, 3) in got and got[(1, 3)] >= 0.5
-    assert (1, 4) not in got
-
-
 def test_brute_force_topk(spark):
     rows = [(i, [float(i == j) for j in range(8)]) for i in range(8)]
     corpus = spark.createDataFrame(rows, ["vec_id", "embedding"])
@@ -151,27 +139,6 @@ def test_brute_force_topk_blocked_parity(spark):
     with pytest.raises(ValueError):
         simsearch.brute_force_topk_blocked(
             corpus, queries.where("query_id < 0"), k=2).collect()
-
-
-def test_lsh_topk_recall(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(3)
-    base = rng.randn(40, 64)
-    corpus = spark.createDataFrame(
-        [(i, base[i].tolist()) for i in range(40)], ["vec_id", "embedding"]
-    )
-    queries = spark.createDataFrame(
-        [(i, (base[i] + rng.randn(64) * 0.05).tolist()) for i in range(5)],
-        ["query_id", "embedding"],
-    )
-    exact = simsearch.brute_force_topk(corpus, queries, k=1).collect()
-    approx = simsearch.lsh_topk(corpus, queries, k=1, n_planes=16, bands=8).collect()
-    exact_map = {r.query_id: r.neighbor_id for r in exact}
-    approx_map = {r.query_id: r.neighbor_id for r in approx}
-    # near-identical vectors collide in most bands; recall@1 should be high
-    hits = sum(1 for q, n in exact_map.items() if approx_map.get(q) == n)
-    assert hits >= 4, (exact_map, approx_map)
 
 
 def test_ivf_topk_recall(spark):
@@ -333,10 +300,6 @@ def test_char_ngrams_edge_cases(spark):
     assert got[2] == []            # shorter than n (sequence-descend guard)
     assert got[3] == []
     assert got[4] == ["aaa"]       # distinct
-    j = df.where(F.col("doc_id") == 1).select(
-        dedup.char_ngram_jaccard_col(F.lit("abcd"), F.lit("abcde"), 3).alias("j")
-    ).collect()[0].j
-    assert abs(j - 2.0 / 3.0) < 1e-12
 
 
 def test_embedding_neardup_pairs(spark):
@@ -427,8 +390,6 @@ def test_bpe_ish_tokens(spark):
     assert got[2] == []
     assert got[3] == [" a", " b"]          # extra whitespace never merges tokens
     assert got[4] == ["abc", "123", "!?", "x"]
-    n = df.select(textstats.bpe_ish_token_count(F.col("text")).alias("n")).collect()
-    assert [r.n for r in n] == [9, 0, 2, 4]
 
 
 def _brute_jaccard_pairs(texts, threshold, shingle_k):

@@ -1,5 +1,6 @@
 """Incremental ER == batch ER: catch-up candidate pairs + anti-join
-scoring + full-closure clustering, across two catch-up rounds."""
+scoring + full-closure clustering, across two catch-up rounds, against a
+hand-built batch path and against ``ERPipeline.run``."""
 
 from __future__ import annotations
 
@@ -7,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from levsim import blocking, candidates, clustering, incremental, normalize, scoring, streaming, tables
+from levsim.pipeline import ERConfig, ERPipeline
 
 
 def _clusters_as_partition(rows):
@@ -62,3 +64,9 @@ def test_incremental_er_equals_batch(spark, tmp_path):
     inc = _clusters_as_partition(comps3.collect())
     bat = _clusters_as_partition(batch_comps.collect())
     assert inc == bat
+
+    # and the product path: the multi-member clusters of ERPipeline.run
+    run = ERPipeline(spark, str(tmp_path / "er"), ERConfig(tau=tau)).run(full)
+    er = _clusters_as_partition(
+        run.clusters.select(F.col("url").alias("doc_id"), "cluster_id").collect())
+    assert inc == {c for c in er if len(c) > 1}

@@ -5,6 +5,7 @@ stateless curation extras under Structured Streaming."""
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 import pyarrow.parquet as pq
 import pytest
@@ -148,6 +149,60 @@ def test_pair_cap_matches_reference(staged_pages):
     n_capped = sum(len(r) for r in ref)
     uncapped = _reference_pairs([_keyed_rows(first), _keyed_rows(second)], cap=10**6)
     assert sum(len(r) for r in uncapped) > n_capped > 0
+
+
+def _long_pages(n_words=2500, seed=3):
+    """Two near-duplicate pages whose normalized text is far longer than
+    ``normalize.MAX_NORM_CHARS``, with edits on both sides of the cut."""
+    import random
+
+    import pandas as pd
+
+    rng = random.Random(seed)
+    words = ["".join(rng.choice("abcdefghij") for _ in range(rng.randint(3, 8)))
+             for _ in range(n_words)]
+    text_a = " ".join(words)
+    for i in rng.sample(range(n_words), 25):
+        words[i] = words[i][::-1]
+    text_b = " ".join(words)
+    ts = pd.Timestamp(1_800_000_000, unit="s", tz="UTC")
+    return pd.DataFrame([
+        {"url": f"http://long.example.com/p/{k}", "warc_ts": ts, "html": t.encode(),
+         "text": t, "lang": "en"} for k, t in (("a", text_a), ("b", text_b))])
+
+
+def test_catch_up_equals_pipeline_run(staged_pages, tmp_path):
+    """Batch and catch-up follow one blocking rule set: over pages landed
+    as one file, a catch-up with ``max_state_ids=3`` emits exactly the
+    candidate pairs of ``ERPipeline(ERConfig(max_block_size=3)).run`` (the
+    cap binds on shared hosts and bands), and its key table is
+    ``add_block_keys`` over the pipeline's ``pages_norm`` snapshot (pages
+    longer than ``MAX_NORM_CHARS`` included)."""
+    from levsim.pipeline import ERConfig, ERPipeline
+
+    spark, _, _, _, full_df, _ = staged_pages
+    long_pdf = _long_pages()
+    assert min(map(len, long_pdf.text)) > 3 * normalize.MAX_NORM_CHARS
+    long_df = spark.createDataFrame(long_pdf, schema=full_df.schema)
+    in_dir, out_dir, ckpt = (str(tmp_path / n) for n in ("one_file", "eq_out", "eq_ckpt"))
+    full_df.unionByName(long_df).coalesce(1).write.parquet(in_dir)
+    assert streaming.run_incremental_pairs(spark, in_dir, out_dir, ckpt, max_state_ids=3) == 0
+    got_pairs = {(r.id_a, r.id_b) for r in spark.read.parquet(out_dir).collect()}
+    got_keys = {(r.doc_id, r.block_key) for r in spark.read.parquet(ckpt + "/keys").collect()}
+
+    pipe = ERPipeline(spark, str(tmp_path / "eq_er"), ERConfig(max_block_size=3))
+    run = pipe.run(spark.read.parquet(in_dir))
+    sid = {s.stage: s.snapshot_id for s in run.stages}
+    want_pairs = {(r.id_a, r.id_b) for r in
+                  pipe.tables["pairs"].read(spark, sid["candidates"]).collect()}
+    norm = pipe.tables["pages_norm"].read(spark, sid["normalize"])
+    want_keys = {(r.doc_id, r.block_key) for r in blocking.add_block_keys(norm).collect()}
+
+    # the cap binds: some key holds more than 3 pages
+    assert Counter(k for _, k in want_keys).most_common(1)[0][1] > 3
+    assert any(a.startswith("http://long.") for a, _ in want_pairs)
+    assert got_pairs == want_pairs, (len(got_pairs - want_pairs), len(want_pairs - got_pairs))
+    assert got_keys == want_keys, (len(got_keys - want_keys), len(want_keys - got_keys))
 
 
 def test_pair_catch_up_crash_recovery(staged_pages):

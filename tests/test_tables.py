@@ -86,37 +86,6 @@ def test_snapshot_partitioned_write_prunes(spark, tmp_path):
     assert langs == {"en"}
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Tables bucketed+sorted on the join key SMJ with ZERO exchanges
-    (broadcast disabled to force the distributed strategy)."""
-    from pyspark.sql import functions as F
-
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(200)], ["doc_id", "text"])
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        for n in ("bkt_a", "bkt_b"):
-            tables.write_bucketed(docs, n, str(tmp_path / n),
-                                  "doc_id", n_buckets=8, sort_cols="doc_id")
-        a = tables.read_bucketed(spark, "bkt_a")
-        b = tables.read_bucketed(spark, "bkt_b").select(
-            "doc_id", F.col("text").alias("t2"))
-        j = a.join(b, "doc_id")
-        assert j.count() == 200
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") == 0
-        assert plan.count("SortMergeJoin") == 1
-        # groupBy on the bucket key also needs no exchange
-        g = a.groupBy("doc_id").agg(F.count("*").alias("n"))
-        gplan = g._jdf.queryExecution().executedPlan().toString()
-        assert g.count() == 200 and gplan.count("Exchange") == 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
-
-
 def _drive_snapshot_backend(spark, table):
     """Backend-agnostic snapshot contract: two writes, time travel, resume
     skip — the behaviors the ER pipeline leans on (SURVEY.md §7(e))."""
