@@ -305,29 +305,3 @@ def rand_components(
             F.expr(ari).alias("ari_ppm"),
         )
     )
-
-
-def adjusted_rand(
-    a: DataFrame,
-    b: DataFrame,
-    id_col: str = "doc_id",
-    a_col: str = "cluster_a",
-    b_col: str = "cluster_b",
-) -> dict:
-    """Production ARI: collect the ONE component row and finish the
-    ratio in Python bigints — exact at any n.  (The in-frame ``ari_ppm``
-    column multiplies through by total_pairs, so inside SQL it needs
-    T*index <= 2^63; past n ~ 7.8e4 ANSI mode raises loudly there,
-    while this path never overflows.)  Returns the exact components
-    plus float ``ari``."""
-    r = rand_components(a, b, id_col, a_col, b_col).collect()[0]
-    t, idx = int(r["total_pairs"]), int(r["index_pairs"])
-    ap, bp = int(r["a_pairs"]), int(r["b_pairs"])
-    # exact rational (no ppm floor): ARI = 2*num / (T*(A+B) - 2*A*B)
-    num = t * idx - ap * bp
-    den2 = t * (ap + bp) - 2 * ap * bp
-    ari = 1.0 if den2 == 0 and num == 0 else (2 * num / den2 if den2 else 0.0)
-    return {
-        "n": int(r["n"]), "total_pairs": t, "index_pairs": idx,
-        "a_pairs": ap, "b_pairs": bp, "ari": ari,
-    }

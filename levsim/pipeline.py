@@ -40,7 +40,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from . import blocking, candidates, clustering, consensus, normalize, scoring
+from . import blocking, candidates, clustering, consensus, normalize, prefilter, scoring
 from .tables import SnapshotTable, input_snapshot_id, snapshot_id_for
 
 
@@ -50,7 +50,7 @@ _JOB_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interrupt
 
 @dataclass
 class ERConfig:
-    tau: float = 0.87
+    tau: float = scoring.TAU
     max_block_size: int = candidates.MAX_BLOCK_SIZE
     consensus_method: str = "setmedian"
     # sorted-neighborhood pass: window size (None disables).  Catches
@@ -216,12 +216,14 @@ class ERPipeline:
             wide_pairs = pairs_df.repartition(par, "id_a")
             with_text = scoring.attach_texts(wide_pairs, norm_df, id_col="url",
                                              text_col="norm_text")
-            # cascade: the cheap banded ratio kernel gates the candidates;
-            # jaro_winkler runs only on pairs >= tau
-            scored = scoring.score_pairs_cascade(with_text, tau=cfg.tau,
-                                                 secondary=("jaro_winkler",))
-            return scored.select("id_a", "id_b", "block_pass", "block_key",
-                                 "ratio", "jaro_winkler")
+            # the exact length bound prunes before the crossing; in the
+            # cascade the cheap banded ratio kernel gates the candidates and
+            # jaro_winkler runs only on pairs >= tau, which are the rows kept
+            kept = with_text.where(
+                prefilter.ratio_length_bound(F.col("len_a"), F.col("len_b"), cfg.tau))
+            scored = scoring.score_pairs_cascade(kept, tau=cfg.tau, secondary=("jaro_winkler",))
+            return scored.where(F.col("ratio") >= F.lit(cfg.tau)).select(
+                "id_a", "id_b", "block_pass", "block_key", "ratio", "jaro_winkler")
 
         scores_df, r = self._stage("scores", [stages[-1].snapshot_id], compute_scores,
                                    self.tables["scores"])

@@ -2,14 +2,14 @@
 
 A catch-up is a batch delta over the page files no committed catch-up has
 read, normalized and keyed with the batch path's expressions (content
-hashes, so catch-up and batch agree byte for byte).  ``run_incremental_pairs``
-appends the candidate pairs the new pages unlock, a Catalyst join of their
-keys against the key table in ``checkpoint_dir``.  A url is keyed once (its
-first landing wins); a key's rows are ranked by (batch, doc_id), a new row
-ranked below the ``max_state_ids`` cap pairs with the rows ranked below it,
-and each pair is written once.  This is ``candidates.candidate_pairs``' cap
-rule, which ranks every row in batch 0, so over one landing the two emit
-the same pairs.
+hashes, so catch-up and batch agree byte for byte).  A url is keyed once
+(its first landing wins), and its (doc_id, block_pass, block_key) rows go
+to the key table in ``checkpoint_dir`` tagged with the batch number.
+``run_incremental_pairs`` then runs ``candidates.candidate_pairs`` over
+the key-table rows of the keys this batch touched: its rule pairs a key's
+rows of the latest batch with the rows ranked before them, under the
+``max_state_ids`` cap, so the appended pairs are exactly the ones the new
+pages unlock, and over one landing they are the pipeline's pairs.
 Output files carry the batch number and a marker listing the input files
 commits each batch, so a rerun replaces an uncommitted batch.
 docs/DESIGN.md §9 has the layout, the rules and the exactly-once
@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from . import blocking, candidates, normalize
 from .tables import PAGES_SCHEMA
 
-KEY_TABLE_SCHEMA = "doc_id string, block_key string, batch int, rank int"
+KEY_TABLE_SCHEMA = "doc_id string, block_pass string, block_key string, batch int"
 
 
 def _batch_of(name: str) -> int:
@@ -114,30 +114,23 @@ def _first_landings(spark: SparkSession, files: List[str],
 def run_incremental_pairs(spark: SparkSession, input_dir: str, output_dir: str,
                           checkpoint_dir: str,
                           max_state_ids: int = candidates.MAX_BLOCK_SIZE) -> Optional[int]:
-    """Append the (id_a, id_b, block_key) pairs the new page files unlock
-    to ``output_dir``.  Returns the committed batch number, or None when no
-    file is new."""
+    """Append the (id_a, id_b, block_pass, block_key) pairs the new page
+    files unlock to ``output_dir``.  Returns the committed batch number, or
+    None when no file is new."""
     batch, files = _open_delta(spark, input_dir, output_dir, checkpoint_dir)
     if not files:
         return None
     key_dir = os.path.join(checkpoint_dir, "keys")
-    keyed = _read_batches(spark, key_dir)
-    # (doc_id, block_key) is unique: a pass yields one key per doc
-    pages = normalize.with_normalized(_first_landings(spark, files, keyed))
-    rows = blocking.add_block_keys(pages, id_col="url") \
-        .select("doc_id", "block_key", F.lit(batch).alias("batch"))
-    if keyed is not None:
-        rows = keyed.drop("rank").unionByName(rows)
-    by_arrival = Window.partitionBy("block_key").orderBy("batch", "doc_id")
-    rows = rows.withColumn("rank", (F.row_number().over(by_arrival) - 1).cast("int"))
-    _publish(rows.where(F.col("batch") == batch), key_dir, batch)
+    pages = normalize.with_normalized(
+        _first_landings(spark, files, _read_batches(spark, key_dir)))
+    _publish(blocking.add_block_keys(pages, id_col="url").withColumn("batch", F.lit(batch)),
+             key_dir, batch)
 
-    admitted = spark.read.schema(KEY_TABLE_SCHEMA).parquet(key_dir) \
-        .where(F.col("rank") < max_state_ids)
-    n, s = admitted.where(F.col("batch") == batch).alias("n"), admitted.alias("s")
-    pairs = n.join(s, (F.col("n.block_key") == F.col("s.block_key"))
-                   & (F.col("s.rank") < F.col("n.rank")))
-    _publish(pairs.groupBy(F.least("n.doc_id", "s.doc_id").alias("id_a"),
-                           F.greatest("n.doc_id", "s.doc_id").alias("id_b"))
-             .agg(F.min("n.block_key").alias("block_key")), output_dir, batch)
+    # the key-table rows of the keys this batch touched (the semi-join's
+    # build side is the batch's keys, so it broadcasts at catch-up sizes)
+    keyed = spark.read.schema(KEY_TABLE_SCHEMA).parquet(key_dir)
+    touched = keyed.join(keyed.where(F.col("batch") == batch).select("block_key"),
+                         "block_key", "left_semi")
+    _publish(candidates.candidate_pairs(touched, max_block_size=max_state_ids),
+             output_dir, batch)
     return _commit(checkpoint_dir, batch, files)

@@ -60,6 +60,27 @@ def _capped_pairs(rows, cap):
     return {(a, b, bp, bk) for (a, b), (bp, bk) in prov.items()}
 
 
+def _reference_pairs(deltas, cap):
+    """Pure-Python replay of the per-key stop-key rule, one dict per
+    catch-up: {(id_a, id_b): smallest key}.  Per key, the sorted new ids
+    are admitted while the key's seen count is below the cap, and each
+    admitted id pairs with every id seen before it."""
+    seen, out = {}, []
+    for delta in deltas:
+        emitted = {}
+        for key, ids in delta.items():
+            s = seen.setdefault(key, [])
+            for nid in sorted(ids):
+                if len(s) >= cap:
+                    break
+                for old in s:
+                    pair = (min(old, nid), max(old, nid))
+                    emitted[pair] = min(emitted.get(pair, key), key)
+                s.append(nid)
+        out.append(emitted)
+    return out
+
+
 def _pair_set(pairs):
     return {(r.id_a, r.id_b, r.block_pass, r.block_key) for r in pairs.collect()}
 
@@ -82,6 +103,24 @@ def test_candidate_cap_bounds_block_size(spark):
     assert all(a < b for a, b, _, _ in got)
     assert pairs.count() == len(got)  # one row per pair
     assert got == _capped_pairs(rows, cap=10)
+
+    # with a batch column a key pairs the rows of its latest batch with the
+    # rows ranked before them, the catch-up's replay: old z9 sorts after
+    # the new a and c, y and e0 rank past the cap, and (a, c) is in two keys
+    deltas = [{"h:k": {"b", "z9"}, "m:x": {"e1", "e2"}},
+              {"h:k": {"a", "c", "y"}, "m:x": {"a", "c", "e0"}}]
+    passes = {"h:k": "host", "m:x": "minhash"}
+    batched = [(d, passes[k], k, b) for b, delta in enumerate(deltas)
+               for k, ids in delta.items() for d in sorted(ids)]
+    ref = _reference_pairs(deltas, cap=4)
+    first = spark.createDataFrame([r[:3] for r in batched if r[3] == 0],
+                                  ["doc_id", "block_pass", "block_key"])
+    both = spark.createDataFrame(batched, ["doc_id", "block_pass", "block_key", "batch"])
+    for blocks, want in ((first, ref[0]), (both, ref[1])):
+        got = _pair_set(candidates.candidate_pairs(blocks, max_block_size=4))
+        assert {(a, b): k for a, b, _, k in got} == want
+        assert len(got) == len(want) and all(bp == passes[k] for *_, bp, k in got)
+    assert ("a", "z9") in ref[1] and ref[1]["a", "c"] == "h:k" and len(ref[1]) == 9
 
 
 def test_candidate_multi_pass_dedup(spark):

@@ -4,6 +4,9 @@ hand-built batch path and against ``ERPipeline.run``."""
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,7 +26,11 @@ def _clusters_as_partition(rows):
 
 def test_incremental_er_equals_batch(spark, tmp_path):
     pdf = tables.generate_pages_pdf(n_entities=25, seed=11)
-    full = spark.createDataFrame(pdf.drop(columns=["entity_id"]))
+    # a short page on host0, landing second: its host-key pairs fail the
+    # length bound, and the match log must still hold them
+    short = pdf.iloc[[0]].assign(url="http://host0.example.com/p/20/short",
+                                 text=pdf.text.iloc[0][:60])
+    full = spark.createDataFrame(pd.concat([pdf, short]).drop(columns=["entity_id"]))
     first = full.where(F.col("url").rlike("/p/1?[0-9]/"))   # entities 0-19
     second = full.subtract(first)
     in_dir = str(tmp_path / "in")
@@ -38,6 +45,10 @@ def test_incremental_er_equals_batch(spark, tmp_path):
         streaming.run_incremental_pairs(spark, in_dir, pairs_out, ckpt)
         pairs = spark.read.parquet(pairs_out)
         n_new = incremental.score_new_pairs(spark, pairs, docs, matches, tau=tau)
+        # every pair is scored and logged once, length rejects included
+        logged = spark.read.parquet(matches).select("id_a", "id_b").collect()
+        assert Counter(map(tuple, logged)) == Counter(
+            map(tuple, pairs.select("id_a", "id_b").collect()))
         comps = incremental.refresh_clusters(spark, matches, tau=tau)
         return n_new, comps
 

@@ -386,16 +386,12 @@ def test_partial_ratio_is_window_max(a, b):
         assert K.partial_ratio(a, b) >= K.ratio(a, b)
 
 
-# --- fuzz-family prefilter exactness (round-4 VERDICT #7) -------------------
-# The Column predicates in levsim.prefilter are pure algebra over lengths /
-# histograms; these properties fuzz the SAME formulas in Python against the
-# true kernel scores: a bound that under-estimates even once would let the
-# Catalyst prefilter prune a qualifying pair.  (Column-expr == formula
-# agreement + plan position are asserted in test_plan_pushdown.py.)
+# --- fuzz-family length bounds ------------------------------------------------
+# Length-only upper bounds on the token scorers, fuzzed in Python against the
+# true kernel scores: a bound that under-estimates even once would let a
+# length prefilter prune a qualifying pair.
 
 import re as _re
-
-CHAR_BOUND_ALPHABET = "abcdefghijklmnopqrstuvwxyz0123456789 "
 
 
 def _norm(s: str) -> str:
@@ -451,28 +447,11 @@ def test_token_sort_bound_is_exact_upper_bound(a, b):
     assert ub >= true - 1e-12
 
 
-def _char_hist(s: str):
-    h = [s.count(c) for c in CHAR_BOUND_ALPHABET]
-    h.append(len(s) - sum(h))
-    return h
-
-
-@settings(max_examples=300, deadline=None)
-@given(texts, texts)
-def test_partial_ratio_char_bound_is_exact_upper_bound(a, b):
-    m = min(len(a), len(b))
-    if m == 0:
-        return  # predicate keeps empty-needle pairs unconditionally
-    cbk = sum(min(x, y) for x, y in zip(_char_hist(a), _char_hist(b)))
-    ub = min(m, cbk) / m
-    assert ub >= K.partial_ratio(a, b) - 1e-12
-
-
 @settings(max_examples=200, deadline=None)
 @given(short_texts, st.text(alphabet="abcd", min_size=0, max_size=30))
 def test_partial_ratio_has_no_length_bound(needle, pad):
-    """Documents WHY partial_ratio gets a char bound instead of a length
-    bound: embedding the needle verbatim in an arbitrarily longer haystack
-    scores 1.0, so no predicate over (len_a, len_b) alone can ever prune."""
+    """partial_ratio has no length bound: embedding the needle verbatim in
+    an arbitrarily longer haystack scores 1.0, so no predicate over
+    (len_a, len_b) alone can ever prune."""
     hay = pad + needle + pad
     assert K.partial_ratio(needle, hay) == 1.0

@@ -291,8 +291,6 @@ def test_adjusted_rand_hand_computed(spark):
     assert (row["n"], row["total_pairs"]) == (6, 15)
     assert (row["index_pairs"], row["a_pairs"], row["b_pairs"]) == (4, 6, 7)
     assert row["ari_ppm"] == (1_000_000 * 18) // 55
-    d = evaluate.adjusted_rand(a, b)
-    assert d["ari"] == pytest.approx(18 / 55.5)
 
 
 def test_adjusted_rand_identical_and_degenerate(spark):
@@ -301,15 +299,13 @@ def test_adjusted_rand_identical_and_degenerate(spark):
     )
     same = a.withColumnRenamed("cluster_a", "cluster_b")
     assert evaluate.rand_components(a, same).collect()[0]["ari_ppm"] == 1_000_000
-    assert evaluate.adjusted_rand(a, same)["ari"] == 1.0
     # all-singletons vs all-singletons: degenerate denominator, identical
     s1 = spark.createDataFrame(
         [(i, i) for i in range(5)], "doc_id long, cluster_a long"
     )
     s2 = s1.withColumnRenamed("cluster_a", "cluster_b")
     assert evaluate.rand_components(s1, s2).collect()[0]["ari_ppm"] == 1_000_000
-    # anti-correlated-ish: ARI can go negative -> clamped to 0 in ppm,
-    # float path reports the signed value
+    # anti-correlated-ish: ARI can go negative -> clamped to 0 in ppm
     x = spark.createDataFrame(
         [(1, 1), (2, 1), (3, 2), (4, 2)], "doc_id long, cluster_a long"
     )
@@ -318,7 +314,6 @@ def test_adjusted_rand_identical_and_degenerate(spark):
     )
     row = evaluate.rand_components(x, y).collect()[0]
     assert row["ari_ppm"] == 0
-    assert evaluate.adjusted_rand(x, y)["ari"] < 0
 
 
 def test_candidates_and_consensus_plans_are_lineage_safe(spark, pages, tmp_path, monkeypatch):

@@ -160,51 +160,3 @@ def test_greedy_matching_round_plan_shape(spark):
     assert "CartesianProduct" not in plan
     assert "Window" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
-def test_fuzz_prefilters_are_pre_udf_predicates(spark, pages_path):
-    """Round-4 VERDICT #7: the partial_ratio char bound must sit as a
-    Catalyst Filter BEFORE the Arrow scoring stage, and the Column
-    predicate must agree row-for-row with the pure-Python bound formula
-    the property tests verified."""
-    from pyspark.sql import functions as F
-
-    from levsim import normalize, prefilter
-    from levsim.scoring import attach_texts, score_pairs
-
-    d = spark.read.parquet(pages_path).select(
-        F.col("url").alias("doc_id"), normalize.norm_text("text").alias("norm_text"),
-        "lang",
-    )
-    pairs = (
-        d.select(F.col("doc_id").alias("id_a"), "lang")
-        .join(d.select(F.col("doc_id").alias("id_b"), "lang"), "lang")
-        .where(F.col("id_a") < F.col("id_b"))
-        .drop("lang")
-    )
-    pt = attach_texts(pairs, d, with_char_hists=True)
-    scored = score_pairs(pt, scorers=("partial_ratio",), partial_tau=0.9)
-    plan = scored._jdf.queryExecution().executedPlan().toString()
-    # exactly one Python stage (the scorer); the filter must NOT be above it
-    assert plan.count("ArrowEvalPython") == 1
-    arrow_pos = plan.index("ArrowEvalPython")
-    # plan strings render top-down (consumer first): the Filter node must
-    # appear BELOW (= after in text) the Arrow node it feeds
-    assert "Filter" in plan[arrow_pos:], plan[:arrow_pos]
-    # Column predicate == Python formula, row for row
-    rows = pt.select("text_a", "text_b",
-                     prefilter.partial_ratio_char_bound(
-                         F.col("hist_a"), F.col("hist_b"),
-                         F.col("len_a"), F.col("len_b"), 0.9).alias("keep")
-                     ).collect()
-    A = prefilter.CHAR_BOUND_ALPHABET
-
-    def hist(s):
-        h = [s.count(c) for c in A]
-        return h + [len(s) - sum(h)]
-
-    for r in rows:
-        m = min(len(r.text_a), len(r.text_b))
-        cbk = sum(min(x, y) for x, y in zip(hist(r.text_a), hist(r.text_b)))
-        want = True if m == 0 else (min(m, cbk) >= 0.9 * m)
-        assert r.keep == want, (r.text_a[:20], r.text_b[:20])

@@ -11,7 +11,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from levsim import blocking, normalize, streaming, tables
+from levsim import blocking, incremental, normalize, streaming, tables
+from test_blocking_candidates import _reference_pairs
 
 
 @pytest.fixture()
@@ -97,27 +98,6 @@ def _keyed_rows(df):
     return out
 
 
-def _reference_pairs(deltas, cap):
-    """Pure-Python replay of the per-key stop-key rule, one dict per
-    catch-up: {(id_a, id_b): smallest key}.  Per key, the sorted new ids
-    are admitted while the key's seen count is below the cap, and each
-    admitted id pairs with every id seen before it."""
-    seen, out = {}, []
-    for delta in deltas:
-        emitted = {}
-        for key, ids in delta.items():
-            s = seen.setdefault(key, [])
-            for nid in sorted(ids):
-                if len(s) >= cap:
-                    break
-                for old in s:
-                    pair = (min(old, nid), max(old, nid))
-                    emitted[pair] = min(emitted.get(pair, key), key)
-                s.append(nid)
-        out.append(emitted)
-    return out
-
-
 def _batch_rows(out_dir, batch):
     names = sorted(n for n in os.listdir(out_dir) if n.startswith(f"batch-{batch:06d}-"))
     rows = []
@@ -187,22 +167,36 @@ def test_catch_up_equals_pipeline_run(staged_pages, tmp_path):
     in_dir, out_dir, ckpt = (str(tmp_path / n) for n in ("one_file", "eq_out", "eq_ckpt"))
     full_df.unionByName(long_df).coalesce(1).write.parquet(in_dir)
     assert streaming.run_incremental_pairs(spark, in_dir, out_dir, ckpt, max_state_ids=3) == 0
-    got_pairs = {(r.id_a, r.id_b) for r in spark.read.parquet(out_dir).collect()}
+    pair_cols = ("id_a", "id_b", "block_pass", "block_key")
+    got_pairs = {tuple(r) for r in spark.read.parquet(out_dir).select(*pair_cols).collect()}
     got_keys = {(r.doc_id, r.block_key) for r in spark.read.parquet(ckpt + "/keys").collect()}
 
     pipe = ERPipeline(spark, str(tmp_path / "eq_er"), ERConfig(max_block_size=3))
     run = pipe.run(spark.read.parquet(in_dir))
     sid = {s.stage: s.snapshot_id for s in run.stages}
-    want_pairs = {(r.id_a, r.id_b) for r in
-                  pipe.tables["pairs"].read(spark, sid["candidates"]).collect()}
+    want_pairs = {tuple(r) for r in
+                  pipe.tables["pairs"].read(spark, sid["candidates"]).select(*pair_cols).collect()}
     norm = pipe.tables["pages_norm"].read(spark, sid["normalize"])
     want_keys = {(r.doc_id, r.block_key) for r in blocking.add_block_keys(norm).collect()}
 
     # the cap binds: some key holds more than 3 pages
     assert Counter(k for _, k in want_keys).most_common(1)[0][1] > 3
-    assert any(a.startswith("http://long.") for a, _ in want_pairs)
+    assert any(a.startswith("http://long.") for a, *_ in want_pairs)
     assert got_pairs == want_pairs, (len(got_pairs - want_pairs), len(want_pairs - got_pairs))
     assert got_keys == want_keys, (len(got_keys - want_keys), len(want_keys - got_keys))
+
+    # one scorer: the catch-up's scores of its pair log, at ratio >= tau,
+    # are the pipeline's scores snapshot
+    matches = str(tmp_path / "eq_matches")
+    docs = norm.select(F.col("url").alias("doc_id"), "norm_text")
+    n = incremental.score_new_pairs(spark, spark.read.parquet(out_dir), docs, matches)
+    assert n == len(got_pairs)
+    score_cols = ("id_a", "id_b", "ratio", "jaro_winkler")
+    got_scores = {tuple(r) for r in spark.read.parquet(matches)
+                  .where(F.col("ratio") >= pipe.cfg.tau).select(*score_cols).collect()}
+    want_scores = {tuple(r) for r in
+                   pipe.tables["scores"].read(spark, sid["scores"]).select(*score_cols).collect()}
+    assert want_scores and got_scores == want_scores
 
 
 def test_pair_catch_up_crash_recovery(staged_pages):
@@ -216,7 +210,8 @@ def test_pair_catch_up_crash_recovery(staged_pages):
     streaming.run_incremental_pairs(spark, in_dir, out_dir, ckpt)
 
     def snapshot():
-        pairs = sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
+        pairs = sorted(tuple(r) for r in
+                       spark.read.parquet(out_dir).select("id_a", "id_b", "block_key").collect())
         keys = sorted(tuple(r) for r in spark.read.parquet(ckpt + "/keys").collect())
         return pairs, keys
 

@@ -163,9 +163,11 @@ CASCADE_ROWS = [
 
 @pytest.mark.parametrize("scorer", [s for s in udfs.SCORERS if s != "ratio"])
 def test_cascade_fused_equals_two_step(spark, scorer):
-    """The one-crossing cascade returns the rows and values of the two-step
-    reference (ratio UDF, ratio >= tau, then the secondary UDF on the
-    survivors), and its plan has exactly one ArrowEvalPython."""
+    """The one-crossing cascade returns every row: at ratio >= tau the
+    values of the two-step reference (ratio UDF, ratio >= tau, then the
+    secondary UDF on the survivors), below it ratio 0.0 and a NULL
+    secondary score, NULL scores for a NULL text; its plan has exactly one
+    ArrowEvalPython."""
     from levsim.scoring import score_pairs_cascade
 
     tau = 0.7
@@ -185,8 +187,12 @@ def test_cascade_fused_equals_two_step(spark, scorer):
 
     got = {r.id_a: tuple(r) for r in fused.select(*ref.columns).collect()}
     want = {r.id_a: tuple(r) for r in ref.collect()}
-    assert got == want
-    assert {0, 4} <= set(got) and not {1, 3, 6, 7} & set(got)
+    assert {i: got[i] for i in want} == want
+    assert {0, 4} <= set(want) and not {1, 3, 6, 7} & set(want)
+    assert sorted(got) == [r[0] for r in rows]
+    for i, _, a, b in rows:
+        if i not in want:  # below tau: ratio 0.0 (NULL for a NULL text), no secondary
+            assert got[i][2:] == (None if a is None or b is None else 0.0, None), (a, b)
 
 
 def test_gated_multi_score_needs_ratio():
