@@ -24,7 +24,10 @@ Scale analysis (the part that must survive 100 TB):
   admitted pair comes out.
 - Pairs from different passes are deduped with ONE groupBy on
   (id_a, id_b) — partial aggregation (map-side combine) keeps the shuffle
-  proportional to distinct pairs.
+  proportional to distinct pairs.  AQE sizes that exchange by bytes, so
+  an ids-only pair set comes out in few partitions (a catch-up's pair log
+  is one file per batch); the width for Python scoring is set where the
+  texts are attached (the pipeline's scores stage widens pairs by id_a).
 """
 
 from __future__ import annotations
@@ -87,18 +90,6 @@ def candidate_pairs(
             "block_key",
         ).where(F.col("id_a") != F.col("id_b"))
         pairs = pairs.unionByName(ep)
-    # Partition the pair table by COMPUTE CAPACITY, not shuffle bytes
-    # (round 7): candidate pairs always feed a per-pair scoring stage
-    # (text join + Arrow kernel crossing) whose cost per byte dwarfs the
-    # shuffle, but AQE sizes the dedup exchange by bytes — an ids-only
-    # pair table coalesces to a handful of partitions and the downstream
-    # scoring stage runs nearly serial (measured: q3 verify ran in 3
-    # AQE-coalesced tasks, 4.2s -> 2.7s with this exchange at 2x cores).
-    # The explicit width is user-specified, so AQE leaves it alone; the
-    # dedup groupBy reuses it partition-locally (still ONE exchange).
-    # Scale-adaptive: derives from the cluster's total cores.
-    n_part = pairs.sparkSession.sparkContext.defaultParallelism * 2
-    pairs = pairs.repartition(n_part, "id_a", "id_b")
     if keep_pass_provenance:
         # keep one provenance row per pair: lexicographically first pass/key
         pairs = pairs.groupBy("id_a", "id_b").agg(

@@ -17,10 +17,15 @@ the per-file counts come from the snapshot manifest (parquet footers, see
 so no bookkeeping job runs.  Every job a stage runs is tagged with the job
 group ``er_<stage>``; ``run`` restores the caller's job group on return.
 
-Lineage (``lineage.jsonl``): one row per executed/skipped stage (run id,
-stage, input snapshot ids, output snapshot id, row count from the manifest,
-wall seconds, skipped flag); the candidates row adds ``pairs_by_pass``,
-observed on the candidates write (``DataFrame.observe``).
+Lineage (``lineage.jsonl``): one row per executed/skipped stage, appended
+when the stage ends (run id, stage, input snapshot ids, output snapshot id,
+row count from the manifest, wall seconds, skipped flag, ``spark`` costs);
+the candidates row adds ``pairs_by_pass``, observed on the candidates write
+(``DataFrame.observe``).  ``spark`` is the stage's own Spark costs: its
+``er_<stage>`` jobs' count and, summed over their Spark stages, tasks,
+failed tasks, executor run/CPU/GC seconds and shuffle/spill/input/output
+MB, read in-process from the status store once the listener bus has
+drained (no job, no HTTP); a skipped stage records zeros.
 Metrics (``metrics/``, parquet): one row per (stage, write task) of every
 executed stage, columns (partition_id, rows, stage, run_id), written from
 the manifest's per-file counts in the driver.
@@ -37,6 +42,7 @@ from typing import List, Optional
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -68,6 +74,21 @@ class ERConfig:
         }
 
 
+# a stage's ``spark`` record: key -> StageData getters summed, unit scale
+_SPARK_COSTS = {
+    "tasks": (("numCompleteTasks",), 1),
+    "failed_tasks": (("numFailedTasks",), 1),
+    "executor_run_s": (("executorRunTime",), 1e-3),
+    "executor_cpu_s": (("executorCpuTime",), 1e-9),
+    "gc_s": (("jvmGcTime",), 1e-3),
+    "shuffle_read_mb": (("shuffleReadBytes",), 1e-6),
+    "shuffle_write_mb": (("shuffleWriteBytes",), 1e-6),
+    "spill_mb": (("memoryBytesSpilled", "diskBytesSpilled"), 1e-6),
+    "input_mb": (("inputBytes",), 1e-6),
+    "output_mb": (("outputBytes",), 1e-6),
+}
+
+
 @dataclass
 class StageResult:
     stage: str
@@ -75,6 +96,7 @@ class StageResult:
     rows: int
     wall_sec: float
     skipped: bool
+    spark: dict = field(default_factory=dict)
 
 
 @dataclass
@@ -96,47 +118,77 @@ class ERPipeline:
             for name in ("pages_norm", "pairs", "scores", "clusters", "representatives")
         }
         self.run_id = f"run_{int(time.time() * 1000):x}"
-        self._lineage: List[dict] = []
 
     # ------------------------------------------------------------------
-    def _stage(self, name: str, inputs: List[str], compute, table: SnapshotTable) -> tuple:
+    def _stage(self, name: str, inputs: List[str], compute, table: SnapshotTable,
+               lineage_extra=None) -> tuple:
+        """Skip or compute+write one stage, then append its lineage row;
+        ``lineage_extra()`` adds fields known only after the write."""
         sid = snapshot_id_for(name, self.cfg.params(), inputs)
-        # tag every Spark job this stage triggers so UI/REST stage metrics
-        # (shuffle bytes, spill, GC) aggregate per pipeline stage — the
-        # instrumentation behind scripts/profile_pipeline.py
-        self.spark.sparkContext.setJobGroup(f"er_{name}", f"er stage {name}")
+        group = f"er_{name}"
+        sc = self.spark.sparkContext
+        sc.setJobGroup(group, f"er stage {name}")
         t0 = time.time()
         skipped = table.exists(sid)
+        extra = {}
         if skipped:
             rows = table.manifest(sid)["row_count"]
+            spark = {"jobs": 0, **dict.fromkeys(_SPARK_COSTS, 0)}
         else:
+            before = set(sc.statusTracker().getJobIdsForGroup(group))
             info = table.write(compute(), sid, params=self.cfg.params(),
                                parent=inputs[0] if inputs else None)
             rows = info.row_count
             self._write_metrics(name, table.manifest(sid))
+            spark = self._spark_costs(group, before)
+            if lineage_extra is not None:
+                extra = lineage_extra()
         # downstream plans scan the snapshot (stored schema: no job)
         df = table.read(self.spark, sid)
-        res = StageResult(name, sid, rows, 0.0 if skipped else time.time() - t0, skipped)
-        self._lineage.append(
-            {
-                "run_id": self.run_id,
-                "stage": name,
-                "inputs": inputs,
-                "snapshot_id": sid,
-                "rows": res.rows,
-                "wall_sec": round(res.wall_sec, 3),
-                "skipped": res.skipped,
-                "ts": time.time(),
-            }
-        )
+        res = StageResult(name, sid, rows, 0.0 if skipped else time.time() - t0, skipped,
+                          spark)
+        row = {
+            "run_id": self.run_id,
+            "stage": name,
+            "inputs": inputs,
+            "snapshot_id": sid,
+            "rows": res.rows,
+            "wall_sec": round(res.wall_sec, 3),
+            "skipped": res.skipped,
+            "spark": spark,
+            **extra,
+            "ts": time.time(),
+        }
+        with open(os.path.join(self.workdir, "lineage.jsonl"), "a") as f:
+            f.write(json.dumps(row) + "\n")
         return df, res
 
-    def _flush_lineage(self):
-        path = os.path.join(self.workdir, "lineage.jsonl")
-        with open(path, "a") as f:
-            for row in self._lineage:
-                f.write(json.dumps(row) + "\n")
-        self._lineage = []
+    def _spark_costs(self, group: str, before: set) -> dict:
+        """The costs of the jobs ``group`` ran since ``before`` (job ids),
+        summed over their Spark stages from the in-process status store."""
+        sc = self.spark.sparkContext
+        jsc = sc._jsc.sc()
+        # job/stage end events reach the status store through the bus
+        jsc.listenerBus().waitUntilEmpty()
+        tracker, store = sc.statusTracker(), jsc.statusStore()
+        jobs = set(tracker.getJobIdsForGroup(group)) - before
+        stage_ids = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+        done = []
+        for s in stage_ids:
+            try:
+                data = store.lastStageAttempt(s)
+            except Py4JJavaError:
+                # gone: past spark.ui.retainedStages the store evicts the
+                # stages without a completion time, the SKIPPED ones, first
+                continue
+            # a stage already run by an earlier job is SKIPPED here
+            if data.status().toString() != "SKIPPED":
+                done.append(data)
+        rec = {"jobs": len(jobs)}
+        for key, (getters, scale) in _SPARK_COSTS.items():
+            total = sum(getattr(d, g)() for d in done for g in getters)
+            rec[key] = total if scale == 1 else round(total * scale, 3)
+        return rec
 
     def _write_metrics(self, stage: str, manifest: dict):
         """Rows per write task of a stage -> metrics table, from the
@@ -201,12 +253,10 @@ class ERPipeline:
             return pairs.observe(by_pass, *[
                 F.count_if(F.col("block_pass") == p).alias(p) for p in passes])
 
-        pairs_df, r = self._stage("candidates", [stages[-1].snapshot_id], compute_pairs,
-                                  self.tables["pairs"])
+        pairs_df, r = self._stage(
+            "candidates", [stages[-1].snapshot_id], compute_pairs, self.tables["pairs"],
+            lineage_extra=lambda: {"pairs_by_pass": {p: n for p, n in by_pass.get.items() if n}})
         stages.append(r)
-        if not r.skipped:
-            self._lineage[-1]["pairs_by_pass"] = {
-                p: n for p, n in by_pass.get.items() if n}
 
         def compute_scores():
             # widen the ids-only pair set BEFORE attaching texts: pair rows
@@ -217,8 +267,9 @@ class ERPipeline:
             with_text = scoring.attach_texts(wide_pairs, norm_df, id_col="url",
                                              text_col="norm_text")
             # the exact length bound prunes before the crossing; in the
-            # cascade the cheap banded ratio kernel gates the candidates and
-            # jaro_winkler runs only on pairs >= tau, which are the rows kept
+            # cascade the ratio kernel (full bit-parallel Indel, zeroed below
+            # tau) gates the candidates and jaro_winkler runs only on pairs
+            # >= tau, which are the rows kept
             kept = with_text.where(
                 prefilter.ratio_length_bound(F.col("len_a"), F.col("len_b"), cfg.tau))
             scored = scoring.score_pairs_cascade(kept, tau=cfg.tau, secondary=("jaro_winkler",))
@@ -253,6 +304,5 @@ class ERPipeline:
                                  self.tables["representatives"])
         stages.append(r)
 
-        self._flush_lineage()
         return ERRun(clusters=clusters_df, representatives=reps_df, matched=matched,
                      stages=stages)

@@ -6,8 +6,11 @@ on doc_id to attach (text, length) to each side, then ONE ArrowEvalPython
 node computing all requested scores in a single Python round-trip.  The
 product path — the pipeline's scores stage and the catch-up's
 ``incremental.score_new_pairs`` — scores with ``score_pairs_cascade``: the
-same single crossing, gated, so the UDF computes the banded ratio for every
-row and the secondary scorers only for rows whose ratio is >= tau.  The
+same single crossing, gated, so the UDF computes the ratio for every row
+and the secondary scorers only for rows whose ratio is >= tau.  The ratio
+is ``batch.batch_ratio``: the full bit-parallel Indel/LCS kernel
+(``batch_indel``), with results below the cutoff zeroed afterwards — there
+is no band and no in-kernel early exit.  The
 caller filters: the pipeline prunes on the length bound before the
 crossing and keeps ``ratio >= tau`` after it, while the catch-up logs
 every row so that no pair is scored twice.
@@ -53,7 +56,7 @@ def score_pairs(
     scorers: Sequence[str] = ("ratio",),
 ) -> DataFrame:
     """Add score columns; if tau is given, apply the exact length prefilter
-    first (Catalyst-side) and the in-kernel cutoff inside the UDF."""
+    first (Catalyst-side) and zero the ratios below tau inside the UDF."""
     df = pairs_with_text
     if tau is not None:
         df = df.where(prefilter.ratio_length_bound(F.col("len_a"), F.col("len_b"), tau))
@@ -79,12 +82,12 @@ def score_pairs_cascade(
     secondary: Sequence[str] = ("jaro_winkler",),
 ) -> DataFrame:
     """Cascade scoring: cheap-first, in ONE Arrow crossing, over every row.
-    The banded ratio kernel scores every pair with tau as its cutoff (0.0
-    below it); inside the same pandas UDF the expensive secondary scorers
+    The bit-parallel ratio kernel scores every pair in full and zeroes the
+    ratios below tau; inside the same pandas UDF the expensive secondary scorers
     (jaro-family is O(l1*l2) on long texts) run ONLY on the rows whose
     ratio is at or above tau and are NULL elsewhere.  A row with a NULL
     text is NULL in every score.  This is the reference's score_cutoff
-    early-exit philosophy lifted across scorers: at web scale the
+    philosophy lifted across scorers: at web scale the
     overwhelming majority of candidates die at the ratio gate, so
     secondary-kernel cost tracks the (tiny) match count instead of the
     candidate count, and each scoring task holds one Python worker, not

@@ -1,17 +1,24 @@
 """spark-submit entry point for the ER pipeline (north rule:
 ``spark-submit --py-files levsim.zip scripts/run_pipeline.py``).
 
+The report (JSON on stdout) lists each pipeline stage's rows, wall
+seconds, skipped flag and ``spark`` record (its Spark jobs, tasks, executor
+run/CPU/GC seconds, shuffle/spill/input/output MB; see ``levsim.pipeline``),
+the same rows ``<workdir>/lineage.jsonl`` keeps, so this is also the
+per-stage profiling entry point.  A rerun with the same workdir and input
+skips every stage and records zero jobs.
+
 Modes:
   --synthesize N   generate a deterministic synthetic pages corpus of N
-                   entities (seed 42) as the input snapshot
+                   entities (seed 42, ~4.5 pages each) as the input snapshot
   --input PATH     read an existing pages parquet (url, warc_ts, html,
                    text, lang)
   --workdir DIR    snapshot/lineage/metrics root (default ./er_work)
   --tau X          match threshold (default 0.87)
   --evaluate       compute pairwise F1 against ground truth (synthetic only)
 
-Build the py-files archive with:
-  (cd /root/repo && zip -qr levsim.zip levsim)
+Build the py-files archive from the repository root with:
+  zip -qr levsim.zip levsim
 Then:
   spark-submit --master <cluster> --py-files levsim.zip scripts/run_pipeline.py \
       --synthesize 1000 --workdir /tmp/er --evaluate
@@ -80,7 +87,7 @@ def main() -> None:
         "run_id": pipe.run_id,
         "stages": [
             {"stage": s.stage, "snapshot": s.snapshot_id, "rows": s.rows,
-             "wall_sec": round(s.wall_sec, 2), "skipped": s.skipped}
+             "wall_sec": round(s.wall_sec, 2), "skipped": s.skipped, "spark": s.spark}
             for s in run.stages
         ],
         "n_clusters": run.representatives.count(),

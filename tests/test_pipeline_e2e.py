@@ -123,6 +123,96 @@ def test_pipeline_bookkeeping_runs_no_jobs(spark, pages, tmp_path):
         assert len({r.partition_id for r in got}) == len(got), s.stage
 
 
+def _lineage_rows(wd):
+    import json
+    import os
+
+    with open(os.path.join(wd, "lineage.jsonl")) as f:
+        return [json.loads(line) for line in f]
+
+
+def test_stage_spark_records(spark, pages, tmp_path):
+    """Each executed stage records its own Spark costs on its StageResult
+    and lineage row: the jobs of its ``er_<stage>`` group and their tasks,
+    CPU and shuffle bytes; a resumed stage records no job."""
+    pages.write.parquet(str(tmp_path / "pages"))
+    pages = spark.read.parquet(str(tmp_path / "pages"))
+    wd = str(tmp_path / "er_costs")
+    tracker = spark.sparkContext.statusTracker()
+    before = {g: set(tracker.getJobIdsForGroup(f"er_{g}")) for g in STAGES}
+    run = ERPipeline(spark, wd, ERConfig(tau=0.87)).run(pages)
+    lineage = {r["stage"]: r for r in _lineage_rows(wd)}
+    assert [s.stage for s in run.stages] == list(STAGES)
+    for s in run.stages:
+        new_jobs = set(tracker.getJobIdsForGroup(f"er_{s.stage}")) - before[s.stage]
+        assert not s.skipped
+        assert s.spark["jobs"] == len(new_jobs) >= 1, (s.stage, s.spark)
+        assert s.spark["tasks"] >= 1 and s.spark["failed_tasks"] == 0, (s.stage, s.spark)
+        assert s.spark["executor_cpu_s"] > 0, (s.stage, s.spark)
+        assert s.spark["executor_run_s"] > 0, (s.stage, s.spark)
+        assert lineage[s.stage]["spark"] == s.spark
+    assert run.stages[1].spark["shuffle_write_mb"] > 0, run.stages[1].spark
+
+    rerun = ERPipeline(spark, wd, ERConfig(tau=0.87)).run(pages)
+    for s in rerun.stages:
+        assert s.skipped and s.spark["jobs"] == 0 == s.spark["tasks"], (s.stage, s.spark)
+
+
+EVICTING_RUN = r"""
+import json, sys
+from pyspark.sql import SparkSession
+from levsim import tables
+from levsim.pipeline import ERPipeline
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "2")
+         .config("spark.ui.retainedStages", "10")
+         .getOrCreate())
+pages = spark.createDataFrame(tables.generate_pages_pdf(20, seed=7).drop(columns=["entity_id"]))
+run = ERPipeline(spark, sys.argv[1]).run(pages)
+print(json.dumps({s.stage: s.spark for s in run.stages}))
+spark.stop()
+"""
+
+
+def test_stage_spark_records_survive_stage_eviction(tmp_path):
+    """Past ``spark.ui.retainedStages`` the status store evicts the SKIPPED
+    stages of a stage's own jobs before the record is read; the record
+    still comes out (the lookup raised NoSuchElementException).  Its own
+    session, because the limit is fixed when the store starts."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", EVICTING_RUN, str(tmp_path / "er")],
+                         env={**os.environ, "PYTHONPATH": root},
+                         capture_output=True, text=True, timeout=900)
+    assert out.returncode == 0, out.stderr[-3000:]
+    rec = json.loads(out.stdout.strip().splitlines()[-1])
+    assert list(rec) == list(STAGES)
+    assert all(r["jobs"] >= 1 and r["tasks"] >= 1 for r in rec.values()), rec
+
+
+def test_lineage_row_written_when_stage_ends(spark, pages, tmp_path, monkeypatch):
+    """A run that fails in consensus keeps the lineage of the four stages
+    it completed, with their Spark records and pairs_by_pass."""
+    from levsim import consensus
+
+    def fail(*a, **kw):
+        raise RuntimeError("consensus failed")
+
+    monkeypatch.setattr(consensus, "elect_representatives", fail)
+    wd = str(tmp_path / "er_fail")
+    with pytest.raises(RuntimeError, match="consensus failed"):
+        ERPipeline(spark, wd, ERConfig(tau=0.87)).run(pages)
+    rows = _lineage_rows(wd)
+    assert [r["stage"] for r in rows] == list(STAGES[:4])
+    assert all(not r["skipped"] and r["spark"]["jobs"] >= 1 for r in rows), rows
+    assert sum(rows[1]["pairs_by_pass"].values()) == rows[1]["rows"]
+
+
 def test_pipeline_restores_unset_job_group(spark, pages, tmp_path):
     sc = spark.sparkContext
     sc.setLocalProperty("spark.jobGroup.id", None)

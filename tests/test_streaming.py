@@ -243,7 +243,9 @@ def test_pair_catch_up_rejects_streaming_dirs(staged_pages, tmp_path):
 def test_pair_catch_up_is_a_batch_job(staged_pages):
     """One catch-up starts no streaming query and runs at most 15 Spark
     jobs (the Structured Streaming emitter committed 36 state stores per
-    catch-up)."""
+    catch-up).  AQE sizes its pair exchange, so its few hundred pairs land
+    in fewer files than a fixed ``2 * defaultParallelism`` repartition
+    wrote (8 per batch at local[4])."""
     from pyspark.sql.streaming import StreamingQueryListener
 
     class Starts(StreamingQueryListener):
@@ -280,6 +282,8 @@ def test_pair_catch_up_is_a_batch_job(staged_pages):
                 sc.setLocalProperty("spark.job.description", None)
             assert spark.streams.active == []
             assert 1 <= len(jobs) <= 15, (k, len(jobs))
+            files = [n for n in os.listdir(out_dir) if n.startswith(f"batch-{k:06d}-")]
+            assert 1 <= len(files) < 2 * sc.defaultParallelism, (k, files)
     finally:
         spark.streams.removeListener(listener)
     assert listener.started == []
