@@ -26,8 +26,9 @@ Scale analysis (the part that must survive 100 TB):
   (id_a, id_b) — partial aggregation (map-side combine) keeps the shuffle
   proportional to distinct pairs.  AQE sizes that exchange by bytes, so
   an ids-only pair set comes out in few partitions (a catch-up's pair log
-  is one file per batch); the width for Python scoring is set where the
-  texts are attached (the pipeline's scores stage widens pairs by id_a).
+  is one file per batch); a caller that scores or verifies the pairs
+  sets the width where it attaches the texts (the pipeline's scores stage
+  widens pairs by id_a).
 """
 
 from __future__ import annotations

@@ -98,7 +98,10 @@ def minhash_candidate_pairs(
     shingle_k: int = 3,
     max_block_size: int = 500,
 ) -> DataFrame:
-    """Near-duplicate candidate pairs via MinHash banding (id_a < id_b)."""
+    """Near-duplicate candidate pairs via MinHash banding (id_a < id_b).
+
+    The ids-only pairs come out in the few partitions AQE sizes them to;
+    widen them (``repartition(n, "id_a")``) before a per-pair verify."""
     from ..candidates import candidate_pairs
 
     blocks = blocking.add_block_keys(

@@ -25,7 +25,9 @@ the candidates row adds ``pairs_by_pass``, observed on the candidates write
 ``er_<stage>`` jobs' count and, summed over their Spark stages, tasks,
 failed tasks, executor run/CPU/GC seconds and shuffle/spill/input/output
 MB, read in-process from the status store once the listener bus has
-drained (no job, no HTTP); a skipped stage records zeros.
+drained (no job, no HTTP); ``complete`` is false when the bus did not drain
+in time, and then the sums may be partial.  A skipped
+stage records zeros.  ``wall_sec`` ends before the record is read.
 Metrics (``metrics/``, parquet): one row per (stage, write task) of every
 executed stage, columns (partition_id, rows, stage, run_id), written from
 the manifest's per-file counts in the driver.
@@ -89,6 +91,13 @@ _SPARK_COSTS = {
 }
 
 
+def _drain_listener_bus(sc) -> None:
+    """Wait until the listener bus has delivered its queued events to the
+    status store; Spark gives up after 10 s and raises TimeoutException
+    (a ``Py4JJavaError`` here)."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+
 @dataclass
 class StageResult:
     stage: str
@@ -133,20 +142,23 @@ class ERPipeline:
         extra = {}
         if skipped:
             rows = table.manifest(sid)["row_count"]
-            spark = {"jobs": 0, **dict.fromkeys(_SPARK_COSTS, 0)}
         else:
             before = set(sc.statusTracker().getJobIdsForGroup(group))
             info = table.write(compute(), sid, params=self.cfg.params(),
                                parent=inputs[0] if inputs else None)
             rows = info.row_count
             self._write_metrics(name, table.manifest(sid))
+        # downstream plans scan the snapshot (stored schema: no job)
+        df = table.read(self.spark, sid)
+        # the stage's wall time leaves out the cost of recording it
+        wall = 0.0 if skipped else time.time() - t0
+        if skipped:
+            spark = {"jobs": 0, **dict.fromkeys(_SPARK_COSTS, 0), "complete": True}
+        else:
             spark = self._spark_costs(group, before)
             if lineage_extra is not None:
                 extra = lineage_extra()
-        # downstream plans scan the snapshot (stored schema: no job)
-        df = table.read(self.spark, sid)
-        res = StageResult(name, sid, rows, 0.0 if skipped else time.time() - t0, skipped,
-                          spark)
+        res = StageResult(name, sid, rows, wall, skipped, spark)
         row = {
             "run_id": self.run_id,
             "stage": name,
@@ -167,10 +179,16 @@ class ERPipeline:
         """The costs of the jobs ``group`` ran since ``before`` (job ids),
         summed over their Spark stages from the in-process status store."""
         sc = self.spark.sparkContext
-        jsc = sc._jsc.sc()
-        # job/stage end events reach the status store through the bus
-        jsc.listenerBus().waitUntilEmpty()
-        tracker, store = sc.statusTracker(), jsc.statusStore()
+        # job/stage end events reach the status store through the bus.  A
+        # queue that lags (an event log on remote storage, a flood of task
+        # ends) can outlast the bus's wait: the record then sums what the
+        # store holds so far and says it is incomplete; the stage goes on
+        try:
+            _drain_listener_bus(sc)
+            complete = True
+        except Py4JJavaError:
+            complete = False
+        tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
         jobs = set(tracker.getJobIdsForGroup(group)) - before
         stage_ids = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
         done = []
@@ -188,6 +206,7 @@ class ERPipeline:
         for key, (getters, scale) in _SPARK_COSTS.items():
             total = sum(getattr(d, g)() for d in done for g in getters)
             rec[key] = total if scale == 1 else round(total * scale, 3)
+        rec["complete"] = complete
         return rec
 
     def _write_metrics(self, stage: str, manifest: dict):
