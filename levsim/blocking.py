@@ -6,6 +6,10 @@ Three passes per the north rule:
      (vectorized pandas UDF -> posexplode)
   3. ``tokensort`` — exact token-sorted-text key (catches word reorders)
 
+``PASSES`` names them; the pipeline and the catch-up key with all three.
+``sorted_neighborhood_pairs`` (with ``global_sort_ranks``) is a pair
+operator for driver queries, not a pipeline pass.
+
 Determinism at scale: every key is a pure content hash — never derived from
 partition ids, timestamps or RNG state — so Spark task retries and
 speculative execution cannot produce divergent keys (SURVEY.md §7 judgment
@@ -203,6 +207,10 @@ def minhash_band_udf(n_perm: int = 64, rows_per_band: int = 4, shingle_k: int = 
     return _udf
 
 
+# the pipeline's and the catch-up's passes, in ``add_block_keys`` order
+PASSES = ("host", "minhash", "tokensort")
+
+
 def add_block_keys(
     df: DataFrame,
     id_col: str = "url",
@@ -211,7 +219,7 @@ def add_block_keys(
     n_perm: int = 64,
     rows_per_band: int = 4,
     shingle_k: int = 3,
-    passes: tuple = ("host", "minhash", "tokensort"),
+    passes: tuple = PASSES,
 ) -> DataFrame:
     """Explode df into (id, block_pass, block_key) rows, one per blocking key.
 
@@ -249,17 +257,6 @@ def add_block_keys(
                     "block_key"
                 ),
             )
-        )
-    if "phonetic" in passes:
-        from .normalize import phonetic_key
-
-        pk = phonetic_key(F.split(F.col(text_col), " ").getItem(0))
-        parts.append(
-            df.select(
-                F.col(id_col).alias("doc_id"),
-                F.lit("phonetic").alias("block_pass"),
-                F.concat(F.lit("p:"), pk).alias("block_key"),
-            ).where(F.length(pk) > 0)
         )
     out = parts[0]
     for p in parts[1:]:

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-# the per-key cap; the catch-up's ``max_state_ids`` defaults to it too
+# the per-key cap of the pipeline (``ERConfig``) and the catch-up
 MAX_BLOCK_SIZE = 200
 
 
@@ -45,7 +45,6 @@ def candidate_pairs(
     blocks: DataFrame,
     max_block_size: int = MAX_BLOCK_SIZE,
     keep_pass_provenance: bool = True,
-    extra_pairs: DataFrame | None = None,
 ) -> DataFrame:
     """blocks(doc_id, block_pass, block_key[, batch]) -> pairs(id_a, id_b[, block_pass, block_key]).
 
@@ -53,13 +52,6 @@ def candidate_pairs(
     its distinct (batch, doc_id) rows and pairs each of its first
     ``max_block_size`` that is in the key's latest batch with every row
     ranked before it; ``batch`` defaults to 0.
-
-    ``extra_pairs``: pre-built candidate pairs from non-equality passes
-    (e.g. sorted-neighborhood, ``blocking.sorted_neighborhood_pairs``) with
-    columns (id_a, id_b, block_pass, block_key); unioned before the
-    cross-pass dedup so provenance resolution and downstream stages see
-    one uniform pair set.  Order is canonicalized here (SNM emits
-    rank-ordered, not id-ordered, pairs).
     """
     batch = F.col("batch") if "batch" in blocks.columns else F.lit(0)
     # one groupBy per block: its pass (keys are pass-namespaced, so min()
@@ -83,14 +75,6 @@ def candidate_pairs(
             "'id_a', least(x.doc_id, ids[j].doc_id), "
             "'id_b', greatest(x.doc_id, ids[j].doc_id)))))")),
     )
-    if extra_pairs is not None:
-        ep = extra_pairs.select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            "block_pass",
-            "block_key",
-        ).where(F.col("id_a") != F.col("id_b"))
-        pairs = pairs.unionByName(ep)
     if keep_pass_provenance:
         # keep one provenance row per pair: lexicographically first pass/key
         pairs = pairs.groupBy("id_a", "id_b").agg(

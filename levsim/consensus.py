@@ -96,7 +96,7 @@ def _sorted_runs(df: DataFrame, keys: list, order_col: str, text_col: str,
     )
 
 
-def _weighted_election(method: str, improve_rounds: int):
+def _weighted_election(method: str):
     def elect(texts: list) -> tuple:
         if len(texts) == 1:  # every median variant of one string is itself
             return 1, texts[0]
@@ -115,8 +115,6 @@ def _weighted_election(method: str, improve_rounds: int):
             rep = kernels.quickmedian(uniq, w)
         elif method == "median":
             rep = kernels.median(uniq, w)
-            for _ in range(improve_rounds):
-                rep = kernels.median_improve(rep, uniq, w)
         else:
             raise ValueError(f"unknown consensus method {method!r}")
         return len(texts), rep
@@ -165,7 +163,6 @@ def group_median_table(
 def elect_representatives(
     clustered: DataFrame,
     method: str = "setmedian",
-    improve_rounds: int = 0,
     text_col: str = "norm_text",
     id_col: str = "doc_id",
     max_members: Optional[int] = 1000,
@@ -182,7 +179,7 @@ def elect_representatives(
         F.col(text_col).alias(text_col),
     )
     return _sorted_runs(df, ["cluster_id"], id_col, text_col, max_members,
-                        _weighted_election(method, improve_rounds), CONSENSUS_SCHEMA)
+                        _weighted_election(method), CONSENSUS_SCHEMA)
 
 
 def select_canonical(

@@ -398,15 +398,6 @@ def minhash_sql_pairs(df: DataFrame, id_col: str, text_col: str,
 # ---------------------------------------------------------------------------
 
 
-def token_jaccard_col(text_a, text_b) -> F.Column:
-    """Jaccard similarity of distinct-token sets — pure column expression."""
-    ta = F.array_distinct(F.split(text_a, " "))
-    tb = F.array_distinct(F.split(text_b, " "))
-    inter = F.size(F.array_intersect(ta, tb))
-    union = F.size(F.array_union(ta, tb))
-    return F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0))
-
-
 def char_ngrams_col(text_col, n: int = 3) -> F.Column:
     """Distinct character n-grams as a pure column expression (texts shorter
     than n yield an empty set — the when-guard matters because Spark's

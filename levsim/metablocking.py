@@ -1,8 +1,7 @@
 """Meta-blocking: weight and prune the comparison graph induced by a
 (multi-pass) blocking assignment before any pair is scored (Papadakis,
 Koutrika, Palpanas, Nejdl 2014, "Meta-Blocking: Taking Entity Resolution
-to the Next Level", TKDE; schemes CBS/ARCS weighting + WEP/WNP/CNP
-pruning).
+to the Next Level", TKDE; schemes CBS/ARCS weighting + WNP pruning).
 
 Why this is a first-class 100 TB operator: redundancy-positive blocking
 (host keys + MinHash bands + prefixes, unioned) deliberately assigns
@@ -14,16 +13,14 @@ prunes the candidate set BEFORE the expensive Arrow scoring crossing,
 typically by 5-20x at equal recall.  Every stage here is a bounded
 relational op:
 
-* edge building = the same capped self-join shape as
-  ``candidates.candidate_pairs`` (block-size caps apply upstream), then
-  ONE groupBy (id_a, id_b) with map-side partial aggregation — the edge
+* edge building = a self-join of the deduped block table on the block
+  key (``max_block_size`` purges oversized blocks first), then ONE
+  groupBy (id_a, id_b) with map-side partial aggregation — the edge
   multiset never materializes per-block duplicates beyond the shuffle.
-* WEP/WNP thresholds are pure aggregates; the node-centric WNP test is
+* WNP thresholds are pure aggregates; the node-centric test is
   expressed as ``w * degree >= sum_w`` (cross-multiplication), so the
   whole path stays in exact BIGINT arithmetic — no float thresholds, a
   DuckDB oracle replays every kept edge bit-for-bit.
-* CNP's per-node top-k is a window partitioned BY NODE (bounded by node
-  degree), never a global sort.
 
 Weights (exact integers):
   cbs      = number of blocks the pair co-occurs in (Common Blocks).
@@ -40,9 +37,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "comparison_edges",
-    "prune_edges_wep",
     "prune_edges_wnp",
-    "prune_edges_cnp",
 ]
 
 _PPM = 1_000_000
@@ -108,30 +103,6 @@ def comparison_edges(
     )
 
 
-def prune_edges_wep(edges: DataFrame, weight_col: str = "cbs") -> DataFrame:
-    """Weight Edge Pruning: keep edges with weight >= the global mean.
-
-    Exact-integer test via cross-multiplication: ``w * n_edges >=
-    total_weight`` (no float mean, no floor ambiguity).  The global
-    aggregate is one scalar row, broadcast into the filter.
-
-    ``edges`` is consumed twice (the aggregate and the filter scan); one
-    lazy localCheckpoint keeps the upstream edge build — the expensive
-    block self-join + groupBy — from running twice (round-7; the same
-    shared-subtree materialization as ``comparison_edges``).
-    """
-    edges = edges.localCheckpoint(eager=False)
-    tot = edges.agg(
-        F.sum(weight_col).cast("long").alias("_tw"),
-        F.count("*").cast("long").alias("_ne"),
-    )
-    return (
-        edges.crossJoin(F.broadcast(tot))
-        .where(F.col(weight_col) * F.col("_ne") >= F.col("_tw"))
-        .drop("_tw", "_ne")
-    )
-
-
 def prune_edges_wnp(edges: DataFrame, weight_col: str = "cbs") -> DataFrame:
     """Weighted Node Neighborhood Pruning: keep an edge iff its weight
     reaches the mean weight of AT LEAST ONE endpoint's neighborhood
@@ -177,33 +148,3 @@ def prune_edges_wnp(edges: DataFrame, weight_col: str = "cbs") -> DataFrame:
         .drop("_sw_a", "_deg_a", "_sw_b", "_deg_b")
         .select(*edges.columns)
     )
-
-
-def prune_edges_cnp(
-    edges: DataFrame, k: int, weight_col: str = "cbs"
-) -> DataFrame:
-    """Cardinality Node Pruning: per-node top-k edges (weight desc,
-    (id_a, id_b) asc tie-break), kept if EITHER endpoint retains the
-    edge.  The window partitions by node — bounded by node degree,
-    never a global sort.
-
-    ``edges`` is consumed twice (the explode and the final join); one
-    lazy localCheckpoint keeps the upstream edge build from running
-    twice (round-7 shared-subtree materialization)."""
-    if k < 1:
-        raise ValueError(f"k={k} must be >= 1")
-    edges = edges.localCheckpoint(eager=False)
-    ends = edges.select(
-        F.explode(F.array("id_a", "id_b")).alias("_node"),
-        "id_a", "id_b", F.col(weight_col).alias("_w"),
-    )
-    win = Window.partitionBy("_node").orderBy(
-        F.col("_w").desc(), F.col("id_a").asc(), F.col("id_b").asc()
-    )
-    kept = (
-        ends.withColumn("_rn", F.row_number().over(win))
-        .where(F.col("_rn") <= int(k))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    return edges.join(kept, ["id_a", "id_b"])

@@ -61,17 +61,11 @@ class ERConfig:
     tau: float = scoring.TAU
     max_block_size: int = candidates.MAX_BLOCK_SIZE
     consensus_method: str = "setmedian"
-    # sorted-neighborhood pass: window size (None disables).  Catches
-    # near-misses whose sort keys are CLOSE but unequal — typos in the
-    # leading chars — which no equality pass can pair; pairs union into
-    # the candidate set with block_pass='snm'.
-    snm_window: int | None = None
 
     def params(self) -> dict:
         return {
             "tau": self.tau,
             "max_block_size": self.max_block_size,
-            "snm_window": self.snm_window,
             "consensus": self.consensus_method,
         }
 
@@ -250,27 +244,11 @@ class ERPipeline:
         def compute_pairs():
             # the catch-up's keys (streaming.run_incremental_pairs)
             blocks = blocking.add_block_keys(norm_df)
-            extra = None
-            if cfg.snm_window:
-                snm_src = norm_df.select(
-                    F.col("url").alias("doc_id"),
-                    F.substring(normalize.token_sort_key(F.col("norm_text")), 1, 24).alias("sk"),
-                )
-                extra = blocking.sorted_neighborhood_pairs(
-                    snm_src, "doc_id", "sk", window=cfg.snm_window
-                ).select(
-                    "id_a",
-                    "id_b",
-                    F.lit("snm").alias("block_pass"),
-                    F.concat(F.lit("s:"), F.col("gap").cast("string")).alias("block_key"),
-                )
-            pairs = candidates.candidate_pairs(blocks, max_block_size=cfg.max_block_size,
-                                               extra_pairs=extra)
+            pairs = candidates.candidate_pairs(blocks, max_block_size=cfg.max_block_size)
             # blocking observability: per-pass candidate counts, observed
             # on the snapshot write
-            passes = ["host", "minhash", "tokensort", *(["snm"] if cfg.snm_window else [])]
             return pairs.observe(by_pass, *[
-                F.count_if(F.col("block_pass") == p).alias(p) for p in passes])
+                F.count_if(F.col("block_pass") == p).alias(p) for p in blocking.PASSES])
 
         pairs_df, r = self._stage(
             "candidates", [stages[-1].snapshot_id], compute_pairs, self.tables["pairs"],

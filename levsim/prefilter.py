@@ -11,8 +11,7 @@ lengths are scan columns, pushes them into the join/scan):
 - equivalent distance form: indel_dist >= |l1-l2|, so
     |l1 - l2| > (1-tau)*(l1+l2)  ==>  prune.
 
-For OSA (as for Levenshtein) with cutoff k: |l1 - l2| > k ==> prune
-(distance lower bound, ``osa_length_bound``).  These are exact bounds — pruned pairs can never pass the final
+These are exact bounds — pruned pairs can never pass the final
 threshold, so recall is unaffected.
 """
 
@@ -28,10 +27,3 @@ def ratio_length_bound(len_a: Column, len_b: Column, tau: float) -> Column:
     return (lensum == 0) | (
         (2.0 * F.least(len_a, len_b) / lensum) >= F.lit(tau)
     )
-
-
-def osa_length_bound(len_a: Column, len_b: Column, cutoff: int) -> Column:
-    """TRUE iff the pair can still have OSA distance <= cutoff.  Exact:
-    substitutions and transpositions preserve the length difference, so
-    osa >= |l1 - l2| — the same bound as plain Levenshtein."""
-    return F.abs(len_a - len_b) <= F.lit(cutoff)

@@ -8,7 +8,7 @@ to the key table in ``checkpoint_dir`` tagged with the batch number.
 ``run_incremental_pairs`` then runs ``candidates.candidate_pairs`` over
 the key-table rows of the keys this batch touched: its rule pairs a key's
 rows of the latest batch with the rows ranked before them, under the
-``max_state_ids`` cap, so the appended pairs are exactly the ones the new
+``max_block_size`` cap, so the appended pairs are exactly the ones the new
 pages unlock, and over one landing they are the pipeline's pairs.
 Output files carry the batch number and a marker listing the input files
 commits each batch, so a rerun replaces an uncommitted batch.
@@ -113,7 +113,7 @@ def _first_landings(spark: SparkSession, files: List[str],
 
 def run_incremental_pairs(spark: SparkSession, input_dir: str, output_dir: str,
                           checkpoint_dir: str,
-                          max_state_ids: int = candidates.MAX_BLOCK_SIZE) -> Optional[int]:
+                          max_block_size: int = candidates.MAX_BLOCK_SIZE) -> Optional[int]:
     """Append the (id_a, id_b, block_pass, block_key) pairs the new page
     files unlock to ``output_dir``.  Returns the committed batch number, or
     None when no file is new."""
@@ -131,6 +131,6 @@ def run_incremental_pairs(spark: SparkSession, input_dir: str, output_dir: str,
     keyed = spark.read.schema(KEY_TABLE_SCHEMA).parquet(key_dir)
     touched = keyed.join(keyed.where(F.col("batch") == batch).select("block_key"),
                          "block_key", "left_semi")
-    _publish(candidates.candidate_pairs(touched, max_block_size=max_state_ids),
+    _publish(candidates.candidate_pairs(touched, max_block_size=max_block_size),
              output_dir, batch)
     return _commit(checkpoint_dir, batch, files)

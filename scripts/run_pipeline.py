@@ -12,7 +12,8 @@ Modes:
   --synthesize N   generate a deterministic synthetic pages corpus of N
                    entities (seed 42, ~4.5 pages each) as the input snapshot
   --input PATH     read an existing pages parquet (url, warc_ts, html,
-                   text, lang)
+                   text, lang); a rerun resumes only while its files are
+                   unchanged
   --workdir DIR    snapshot/lineage/metrics root (default ./er_work)
   --tau X          match threshold (default 0.87)
   --evaluate       compute pairwise F1 against ground truth (synthetic only)
@@ -43,8 +44,6 @@ def main() -> None:
     ap.add_argument("--consensus", type=str, default="setmedian",
                     choices=["setmedian", "quickmedian", "median"])
     ap.add_argument("--evaluate", action="store_true")
-    ap.add_argument("--snm-window", type=int, default=0,
-                    help="enable the sorted-neighborhood candidate pass (0 = off)")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -70,16 +69,18 @@ def main() -> None:
 
     if args.synthesize:
         pages = tables.generate_pages(spark, n_entities=args.synthesize, seed=42)
+        # an in-memory corpus has no files to key resume on: name it
         input_id = f"synthetic_{args.synthesize}_42"
     elif args.input:
         pages = spark.read.parquet(args.input)
-        input_id = args.input
+        # resume keys on the files' paths, sizes and mtimes, so a replaced
+        # file recomputes (``tables.input_snapshot_id``)
+        input_id = None
     else:
         ap.error("one of --synthesize or --input is required")
         return
 
-    cfg = ERConfig(tau=args.tau, consensus_method=args.consensus,
-                   snm_window=args.snm_window or None)
+    cfg = ERConfig(tau=args.tau, consensus_method=args.consensus)
     pipe = ERPipeline(spark, args.workdir, cfg)
     run = pipe.run(pages, pages_snapshot_id=input_id)
 

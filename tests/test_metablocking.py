@@ -1,17 +1,12 @@
 """Meta-blocking (levsim/metablocking.py) — hand-computed comparison
-graph, exact-integer weights, and the three pruning schemes."""
+graph, exact-integer weights, and WNP pruning."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from levsim.metablocking import (
-    comparison_edges,
-    prune_edges_cnp,
-    prune_edges_wep,
-    prune_edges_wnp,
-)
+from levsim.metablocking import comparison_edges, prune_edges_wnp
 
 PPM = 1_000_000
 
@@ -68,12 +63,6 @@ def test_purge_and_singleton(blocks):
     assert uncapped.where((F.col("id_a") == 9) | (F.col("id_b") == 9)).count() == 0
 
 
-def test_wep_keeps_edges_at_or_above_global_mean(edges):
-    # total cbs = 10 over 8 edges -> keep cbs*8 >= 10, i.e. cbs = 2
-    kept = set(_emap(prune_edges_wep(edges, "cbs")))
-    assert kept == {(1, 2), (2, 3)}
-
-
 def test_wnp_hand_computed(edges):
     # arcs weights: (1,2)=1333333 (1,3)=333333 (2,3)=499999, rest 166666
     # node sums/degs: 1:(1666666,2) 2:(2166664,4) 3:(1166664,4)
@@ -103,17 +92,6 @@ def test_wnp_drops_weak_edges(spark):
     kept = {(r["id_a"], r["id_b"]) for r in prune_edges_wnp(edges, "cbs").collect()}
     assert (1, 3) not in kept and (1, 4) not in kept
     assert {(1, 2), (3, 5), (4, 5)} <= kept
-
-
-def test_cnp_per_node_topk(edges):
-    # k=1: each node retains its single best edge (arcs desc, id asc);
-    # an edge survives if either endpoint retains it
-    kept = set(_emap(prune_edges_cnp(edges, k=1, weight_col="arcs_ppm")))
-    # node1 -> (1,2); node2 -> (1,2); node3 -> (2,3);
-    # node4 -> (2,4); node5 -> (2,5)
-    assert kept == {(1, 2), (2, 3), (2, 4), (2, 5)}
-    with pytest.raises(ValueError):
-        prune_edges_cnp(edges, k=0)
 
 
 def test_schema_and_columns(edges):

@@ -81,6 +81,49 @@ def test_pipeline_new_input_same_workdir_recomputes(spark, tmp_path):
     assert counts[0] != counts[1]
 
 
+def test_run_pipeline_input_resumes_on_its_files(spark, tmp_path):
+    """``scripts/run_pipeline.py --input`` keys resume on the input files:
+    after the file is replaced, a rerun in the same workdir recomputes
+    every stage over the new pages (it used to key on the path string,
+    skip all five stages and report the old file's rows); a rerun on
+    unchanged files skips all five."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    inp, wd = str(tmp_path / "in"), str(tmp_path / "er")
+
+    def land(n_entities, seed):
+        pages = tables.generate_pages(spark, n_entities=n_entities, seed=seed)
+        pages.drop("entity_id").coalesce(1).write.mode("overwrite").parquet(inp)
+        return spark.read.parquet(inp).count()
+
+    def run():
+        out = subprocess.run(
+            [sys.executable, os.path.join(root, "scripts", "run_pipeline.py"),
+             "--input", inp, "--workdir", wd],
+            env={**os.environ, "PYTHONPATH": root}, capture_output=True, text=True,
+            timeout=900)
+        assert out.returncode == 0, out.stderr[-3000:]
+        report = json.loads(out.stdout[out.stdout.index("{"):])
+        return {s["stage"]: s for s in report["stages"]}
+
+    n_first = land(20, 1)
+    first = run()
+    assert first["normalize"]["rows"] == n_first
+    n_second = land(30, 2)
+    assert n_second != n_first
+    second = run()
+    assert not any(s["skipped"] for s in second.values()), second
+    assert second["normalize"]["rows"] == n_second
+    third = run()
+    assert list(third) == list(STAGES)
+    assert all(s["skipped"] for s in third.values()), third
+    assert third["normalize"]["rows"] == n_second
+
+
 STAGES = ("normalize", "candidates", "scores", "clusters", "consensus")
 
 
@@ -288,28 +331,6 @@ def test_consensus_representative_quality(spark, pages, tmp_path):
         assert r.representative in r.texts
 
 
-def test_pipeline_with_snm_pass(spark, pages, tmp_path):
-    """snm_window enables the sorted-neighborhood candidate pass: pairs
-    carry block_pass provenance, F1 holds, and the extra pass can only ADD
-    candidates (supersets of the equality-pass run)."""
-    base = ERPipeline(spark, str(tmp_path / "er_nosnm"), ERConfig(tau=0.87))
-    base.run(pages)
-    pipe = ERPipeline(
-        spark, str(tmp_path / "er_snm"), ERConfig(tau=0.87, snm_window=4)
-    )
-    run = pipe.run(pages)
-    predicted = evaluate.pairs_from_clusters(run.clusters, id_col="url")
-    truth = evaluate.truth_pairs_from_entities(pages, id_col="url")
-    assert evaluate.pair_f1(predicted, truth)["f1"] >= 0.99
-    pairs = pipe.tables["pairs"].read(spark)
-    passes = {r.block_pass for r in pairs.select("block_pass").distinct().collect()}
-    assert passes <= {"host", "minhash", "tokensort", "snm"}
-    n_base = base.tables["pairs"].read(spark).count()
-    assert pairs.count() >= n_base
-    # canonical order holds for every unioned pair
-    assert pairs.where(F.col("id_a") >= F.col("id_b")).count() == 0
-
-
 def test_bcubed_hand_computed(spark):
     """B-cubed on a hand-checkable case: truth entities {1,2,3} / {4,5};
     prediction merges 3 with {4,5} and leaves {1,2} together.
@@ -431,10 +452,11 @@ def test_adjusted_rand_identical_and_degenerate(spark):
 
 
 def test_candidates_and_consensus_plans_are_lineage_safe(spark, pages, tmp_path, monkeypatch):
-    """Neither stage scans a checkpointed RDD (its blocks die with an
-    executor), and neither needs a Window.  Candidates groups blocks instead
-    of self-joining them and runs the MinHash UDF once; consensus is one
-    sorted Arrow pass, not a singleton/multi-member union."""
+    """No stage write of a default run scans a checkpointed RDD (its blocks
+    die with an executor).  Neither candidates nor consensus needs a
+    Window: candidates groups blocks instead of self-joining them and runs
+    the MinHash UDF once; consensus is one sorted Arrow pass, not a
+    singleton/multi-member union."""
     import re
 
     plans = {}
@@ -450,10 +472,11 @@ def test_candidates_and_consensus_plans_are_lineage_safe(spark, pages, tmp_path,
     def count(plan, op):
         return len(re.findall(op, plan))
 
+    assert set(plans) == {"pages_norm", "pairs", "scores", "clusters", "representatives"}
+    for table, plan in plans.items():
+        assert not count(plan, r"ExistingRDD|LogicalRDD"), (table, plan)
     for table in ("pairs", "representatives"):
-        plan = plans[table]
-        assert not count(plan, r"ExistingRDD|LogicalRDD"), plan
-        assert not count(plan, r"\bWindow\b"), plan
+        assert not count(plans[table], r"\bWindow\b"), plans[table]
     assert not count(plans["pairs"], r"Join\b|CartesianProduct"), plans["pairs"]
     assert count(plans["pairs"], r"\bArrowEvalPython\b") == 1, plans["pairs"]
     assert not count(plans["representatives"], r"\bUnion\b"), plans["representatives"]

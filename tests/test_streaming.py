@@ -109,7 +109,7 @@ def _batch_rows(out_dir, batch):
 
 
 def test_pair_cap_matches_reference(staged_pages):
-    """max_state_ids=3 binds on shared hosts and near-dup bands: each
+    """max_block_size=3 binds on shared hosts and near-dup bands: each
     catch-up's pairs equal the stateful emitter's per-key rule."""
     spark, in_dir, _, _, full_df, second = staged_pages
     out_dir, ckpt = in_dir + "_cap_out", in_dir + "_cap_ckpt"
@@ -117,10 +117,10 @@ def test_pair_cap_matches_reference(staged_pages):
     ref = _reference_pairs([_keyed_rows(first), _keyed_rows(second)], cap=3)
 
     assert streaming.run_incremental_pairs(spark, in_dir, out_dir, ckpt,
-                                           max_state_ids=3) == 0
+                                           max_block_size=3) == 0
     second.coalesce(1).write.mode("append").parquet(in_dir)
     assert streaming.run_incremental_pairs(spark, in_dir, out_dir, ckpt,
-                                           max_state_ids=3) == 1
+                                           max_block_size=3) == 1
     for batch, want in enumerate(ref):
         got = _batch_rows(out_dir, batch)
         assert len(got) == len({(a, b) for a, b, _ in got})  # one row per pair
@@ -153,7 +153,7 @@ def _long_pages(n_words=2500, seed=3):
 
 def test_catch_up_equals_pipeline_run(staged_pages, tmp_path):
     """Batch and catch-up follow one blocking rule set: over pages landed
-    as one file, a catch-up with ``max_state_ids=3`` emits exactly the
+    as one file, a catch-up with ``max_block_size=3`` emits exactly the
     candidate pairs of ``ERPipeline(ERConfig(max_block_size=3)).run`` (the
     cap binds on shared hosts and bands), and its key table is
     ``add_block_keys`` over the pipeline's ``pages_norm`` snapshot (pages
@@ -166,7 +166,7 @@ def test_catch_up_equals_pipeline_run(staged_pages, tmp_path):
     long_df = spark.createDataFrame(long_pdf, schema=full_df.schema)
     in_dir, out_dir, ckpt = (str(tmp_path / n) for n in ("one_file", "eq_out", "eq_ckpt"))
     full_df.unionByName(long_df).coalesce(1).write.parquet(in_dir)
-    assert streaming.run_incremental_pairs(spark, in_dir, out_dir, ckpt, max_state_ids=3) == 0
+    assert streaming.run_incremental_pairs(spark, in_dir, out_dir, ckpt, max_block_size=3) == 0
     pair_cols = ("id_a", "id_b", "block_pass", "block_key")
     got_pairs = {tuple(r) for r in spark.read.parquet(out_dir).select(*pair_cols).collect()}
     got_keys = {(r.doc_id, r.block_key) for r in spark.read.parquet(ckpt + "/keys").collect()}
