@@ -68,6 +68,29 @@ def _call_c(fn_name: str, a, b, extra=(), out_dtype=np.int64):
     return out, nulla | nullb
 
 
+def _per_pair(a, b, fn, dtype=np.int64) -> Tuple[np.ndarray, np.ndarray]:
+    """The pure-Python path: ``fn(x, y)`` per pair -> (values, null mask);
+    a pair with a None side is null, with value 0."""
+    n = len(a)
+    out = np.zeros(n, dtype=dtype)
+    nulls = np.zeros(n, dtype=bool)
+    for i in range(n):
+        if a[i] is None or b[i] is None:
+            nulls[i] = True
+        else:
+            out[i] = fn(a[i], b[i])
+    return out, nulls
+
+
+def _clamp(res, score_cutoff: Optional[int]) -> Tuple[np.ndarray, np.ndarray]:
+    """Post-hoc cutoff for a C kernel that takes none: distances above
+    ``score_cutoff`` become ``score_cutoff + 1``."""
+    out, nulls = res
+    if score_cutoff is not None:
+        out = np.where(out > score_cutoff, score_cutoff + 1, out)
+    return out, nulls
+
+
 def batch_distance(
     a: Sequence[Optional[str]],
     b: Sequence[Optional[str]],
@@ -83,7 +106,6 @@ def batch_distance(
     a performance knob for near-match pairs."""
     import ctypes
 
-    n = len(a)
     if weights == (1, 1, 1):
         if score_hint is not None:
             res = _call_c("batch_lev_hint", a, b,
@@ -99,35 +121,16 @@ def batch_distance(
         res = _call_c("batch_lev_weighted", a, b,
                       extra=(ctypes.c_int64(wi), ctypes.c_int64(wd), ctypes.c_int64(ws)))
         if res is not None:
-            out, nulls = res
-            if score_cutoff is not None:
-                out = np.where(out > score_cutoff, score_cutoff + 1, out)
-            return out, nulls
-    out = np.empty(n, dtype=np.int64)
-    nulls = np.zeros(n, dtype=bool)
-    for i in range(n):
-        if a[i] is None or b[i] is None:
-            nulls[i] = True
-            out[i] = 0
-        else:
-            out[i] = kernels.distance(a[i], b[i], weights=weights, score_cutoff=score_cutoff)
-    return out, nulls
+            return _clamp(res, score_cutoff)
+    return _per_pair(a, b, lambda x, y: kernels.distance(
+        x, y, weights=weights, score_cutoff=score_cutoff))
 
 
 def batch_indel(a, b) -> Tuple[np.ndarray, np.ndarray]:
     res = _call_c("batch_indel", a, b)
     if res is not None:
         return res
-    n = len(a)
-    out = np.empty(n, dtype=np.int64)
-    nulls = np.zeros(n, dtype=bool)
-    for i in range(n):
-        if a[i] is None or b[i] is None:
-            nulls[i] = True
-            out[i] = 0
-        else:
-            out[i] = kernels.indel_distance(a[i], b[i])
-    return out, nulls
+    return _per_pair(a, b, kernels.indel_distance)
 
 
 def batch_ratio(a, b, score_cutoff: Optional[float] = None) -> Tuple[np.ndarray, np.ndarray]:
@@ -147,16 +150,7 @@ def batch_jaro(a, b) -> Tuple[np.ndarray, np.ndarray]:
     res = _call_c("batch_jaro", a, b, out_dtype=np.float64)
     if res is not None:
         return res
-    n = len(a)
-    out = np.empty(n, dtype=np.float64)
-    nulls = np.zeros(n, dtype=bool)
-    for i in range(n):
-        if a[i] is None or b[i] is None:
-            nulls[i] = True
-            out[i] = 0.0
-        else:
-            out[i] = kernels.jaro(a[i], b[i])
-    return out, nulls
+    return _per_pair(a, b, kernels.jaro, np.float64)
 
 
 def batch_jaro_winkler(a, b, prefix_weight: float = 0.1) -> Tuple[np.ndarray, np.ndarray]:
@@ -168,35 +162,15 @@ def batch_jaro_winkler(a, b, prefix_weight: float = 0.1) -> Tuple[np.ndarray, np
                   out_dtype=np.float64)
     if res is not None:
         return res
-    n = len(a)
-    out = np.empty(n, dtype=np.float64)
-    nulls = np.zeros(n, dtype=bool)
-    for i in range(n):
-        if a[i] is None or b[i] is None:
-            nulls[i] = True
-            out[i] = 0.0
-        else:
-            out[i] = kernels.jaro_winkler(a[i], b[i], prefix_weight=prefix_weight)
-    return out, nulls
+    return _per_pair(a, b, lambda x, y: kernels.jaro_winkler(x, y, prefix_weight=prefix_weight),
+                     np.float64)
 
 
 def batch_hamming(a, b, score_cutoff: Optional[int] = None) -> Tuple[np.ndarray, np.ndarray]:
     res = _call_c("batch_hamming", a, b)
     if res is not None:
-        out, nulls = res
-        if score_cutoff is not None:
-            out = np.where(out > score_cutoff, score_cutoff + 1, out)
-        return out, nulls
-    n = len(a)
-    out = np.empty(n, dtype=np.int64)
-    nulls = np.zeros(n, dtype=bool)
-    for i in range(n):
-        if a[i] is None or b[i] is None:
-            nulls[i] = True
-            out[i] = 0
-        else:
-            out[i] = kernels.hamming(a[i], b[i], score_cutoff=score_cutoff)
-    return out, nulls
+        return _clamp(res, score_cutoff)
+    return _per_pair(a, b, lambda x, y: kernels.hamming(x, y, score_cutoff=score_cutoff))
 
 
 def batch_osa(a, b, score_cutoff: Optional[int] = None) -> Tuple[np.ndarray, np.ndarray]:
@@ -206,20 +180,8 @@ def batch_osa(a, b, score_cutoff: Optional[int] = None) -> Tuple[np.ndarray, np.
     cutoff clamps post-hoc like batch_lev_weighted."""
     res = _call_c("batch_osa", a, b)
     if res is not None:
-        out, nulls = res
-        if score_cutoff is not None:
-            out = np.where(out > score_cutoff, score_cutoff + 1, out)
-        return out, nulls
-    n = len(a)
-    out = np.empty(n, dtype=np.int64)
-    nulls = np.zeros(n, dtype=bool)
-    for i in range(n):
-        if a[i] is None or b[i] is None:
-            nulls[i] = True
-            out[i] = 0
-        else:
-            out[i] = kernels.osa_distance(a[i], b[i], score_cutoff=score_cutoff)
-    return out, nulls
+        return _clamp(res, score_cutoff)
+    return _per_pair(a, b, lambda x, y: kernels.osa_distance(x, y, score_cutoff=score_cutoff))
 
 
 def batch_damerau(a, b, score_cutoff: Optional[int] = None) -> Tuple[np.ndarray, np.ndarray]:
@@ -230,20 +192,8 @@ def batch_damerau(a, b, score_cutoff: Optional[int] = None) -> Tuple[np.ndarray,
     pair by nature of the algorithm — length-prefilter long texts."""
     res = _call_c("batch_damerau", a, b)
     if res is not None:
-        out, nulls = res
-        if score_cutoff is not None:
-            out = np.where(out > score_cutoff, score_cutoff + 1, out)
-        return out, nulls
-    n = len(a)
-    out = np.empty(n, dtype=np.int64)
-    nulls = np.zeros(n, dtype=bool)
-    for i in range(n):
-        if a[i] is None or b[i] is None:
-            nulls[i] = True
-            out[i] = 0
-        else:
-            out[i] = kernels.damerau_distance(a[i], b[i], score_cutoff=score_cutoff)
-    return out, nulls
+        return _clamp(res, score_cutoff)
+    return _per_pair(a, b, lambda x, y: kernels.damerau_distance(x, y, score_cutoff=score_cutoff))
 
 
 def batch_affine_gap(a, b, gap_open: int = 2, gap_extend: int = 1, sub_cost: int = 2,
@@ -256,22 +206,10 @@ def batch_affine_gap(a, b, gap_open: int = 2, gap_extend: int = 1, sub_cost: int
                   extra=(ctypes.c_int64(gap_open), ctypes.c_int64(gap_extend),
                          ctypes.c_int64(sub_cost)))
     if res is not None:
-        out, nulls = res
-        if score_cutoff is not None:
-            out = np.where(out > score_cutoff, score_cutoff + 1, out)
-        return out, nulls
-    n = len(a)
-    out = np.empty(n, dtype=np.int64)
-    nulls = np.zeros(n, dtype=bool)
-    for i in range(n):
-        if a[i] is None or b[i] is None:
-            nulls[i] = True
-            out[i] = 0
-        else:
-            out[i] = kernels.affine_gap_distance(
-                a[i], b[i], gap_open=gap_open, gap_extend=gap_extend,
-                sub_cost=sub_cost, score_cutoff=score_cutoff)
-    return out, nulls
+        return _clamp(res, score_cutoff)
+    return _per_pair(a, b, lambda x, y: kernels.affine_gap_distance(
+        x, y, gap_open=gap_open, gap_extend=gap_extend, sub_cost=sub_cost,
+        score_cutoff=score_cutoff))
 
 
 def batch_partial_ratio(a, b, score_cutoff: Optional[float] = None) -> Tuple[np.ndarray, np.ndarray]:
@@ -343,7 +281,7 @@ def batch_editops(a: Sequence[Optional[str]], b: Sequence[Optional[str]]):
 
     n = len(a)
     lib = cbuild.load()
-    if lib is not None and hasattr(lib, "batch_editops"):
+    if lib is not None:
         ca, oa, nulla = _flatten(a)
         cb, ob, nullb = _flatten(b)
         nulls = nulla | nullb

@@ -145,7 +145,7 @@ def minhash_signatures_batch(texts, n_perm: int, shingle_k: int, seed: int) -> n
     a, b = _params(n_perm, seed)
     lib = cbuild.load()
     safe = ["" if t is None else t for t in texts]
-    if lib is not None and hasattr(lib, "batch_minhash"):
+    if lib is not None:
         import ctypes
 
         from .batch import _flatten, _ptr

@@ -143,7 +143,7 @@ def batch_simhash(texts: List[str | None]) -> np.ndarray:
 
     safe = ["" if t is None else t for t in texts]
     lib = cbuild.load()
-    if lib is not None and hasattr(lib, "batch_simhash"):
+    if lib is not None:
         import ctypes
 
         codes, offs, _ = _flatten(safe)

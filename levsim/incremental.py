@@ -57,13 +57,15 @@ def score_new_pairs(
     """Score the pairs absent from the matches log with the pipeline's
     cascade and append every one of them, rejects included.
 
-    ``pairs``: (id_a, id_b) candidate log (append-only, exactly-once).
-    ``docs``: (doc_id, norm_text).  ``matches_path``: parquet log of
+    ``pairs``: (id_a, id_b) candidate log, one row per pair (the catch-up
+    pair log holds each pair once by construction; nothing here dedups
+    it).  ``docs``: (doc_id, norm_text), one row per doc (one page per url,
+    ``normalize.one_page_per_url``).  ``matches_path``: parquet log of
     (id_a, id_b, ratio, jaro_winkler); ratio is 0.0 below tau and
     jaro_winkler NULL there.  Returns the number of NEW pairs scored this
     round.  The anti-join keys on the pair identity, so re-running a
     catch-up is idempotent and no pair is scored twice."""
-    pairs = pairs.select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
+    pairs = pairs.select("id_a", "id_b")
     if os.path.exists(matches_path):
         seen = read_parquet_log(spark, matches_path).select("id_a", "id_b")
         pairs = pairs.join(seen, ["id_a", "id_b"], "left_anti")

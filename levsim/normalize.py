@@ -8,7 +8,7 @@ fold, push down and codegen.  No UDFs here.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -55,6 +55,17 @@ def with_normalized(df: DataFrame, text_col: str = "text", url_col: str = "url")
     if url_col in df.columns:
         out = out.withColumn("host", url_host(url_col))
     return out
+
+
+def one_page_per_url(pages: DataFrame) -> DataFrame:
+    """One landing per url, the page every later stage keys and scores
+    under that url: the earliest ``warc_ts``, then the smallest text.  Rows
+    with a NULL url are dropped.  The batch's normalize stage and each
+    catch-up (over its new files) apply this rule, so a url that lands
+    twice is one page in both."""
+    first = Window.partitionBy("url").orderBy("warc_ts", "text")
+    return pages.where(F.col("url").isNotNull()) \
+        .withColumn("_n", F.row_number().over(first)).where(F.col("_n") == 1).drop("_n")
 
 
 def phonetic_key(col) -> Column:

@@ -234,8 +234,11 @@ class ERPipeline:
             pages_snapshot_id = input_snapshot_id(pages, f"{self.run_id}_{uuid.uuid4().hex}")
         stages: List[StageResult] = []
 
+        # one page per url, by the catch-up's rule (a re-landed url is one
+        # page, not two rows that cluster and pair twice)
         norm_df, r = self._stage("normalize", [pages_snapshot_id],
-                                 lambda: normalize.with_normalized(pages),
+                                 lambda: normalize.with_normalized(
+                                     normalize.one_page_per_url(pages)),
                                  self.tables["pages_norm"])
         stages.append(r)
 
@@ -277,10 +280,9 @@ class ERPipeline:
                                    self.tables["scores"])
         stages.append(r)
 
-        matched = scores_df.where(F.col("ratio") >= F.lit(cfg.tau))
-
         def compute_clusters():
-            comps = clustering.connected_components(matched)
+            # the scores snapshot holds only the matches (ratio >= tau)
+            comps = clustering.connected_components(scores_df)
             return clustering.attach_clusters(
                 norm_df.select("url", "norm_text"),
                 comps.withColumnRenamed("doc_id", "url"),
@@ -301,5 +303,5 @@ class ERPipeline:
                                  self.tables["representatives"])
         stages.append(r)
 
-        return ERRun(clusters=clusters_df, representatives=reps_df, matched=matched,
+        return ERRun(clusters=clusters_df, representatives=reps_df, matched=scores_df,
                      stages=stages)

@@ -1,11 +1,11 @@
-"""SparkSession construction with the engine's scale-oriented defaults.
+"""SparkSession construction: the engine's one session recipe.
 
-Tuned for the task's execution model: AQE on (runtime shuffle coalescing +
-skew-join splitting, required by the north rule), Arrow batching for the
-pandas-UDF scoring stage, and shuffle partitioning sized by cores locally —
-on a real cluster override via ``LEVSIM_SHUFFLE_PARTITIONS`` (rule of thumb:
-2-3x total executor cores, or rely on AQE coalescing from a high initial
-value).
+``ENGINE_CONF`` is the recipe: AQE on (runtime shuffle coalescing and
+skew-join splitting, required by the north rule), Arrow with 10,000-row
+batches for the pandas-UDF stages, and UTC.  ``get_spark`` applies it plus
+the local-mode settings (master, shuffle partitions, driver memory,
+console progress); the spark-submit entry point ``scripts/run_pipeline.py``
+applies it and nothing else, so the submit line decides those.
 """
 
 from __future__ import annotations
@@ -38,31 +38,35 @@ def iceberg_jar_path() -> str | None:
 ICEBERG_CATALOG = "levsim_ice"
 
 
+# Every levsim session runs with these.  The AQE lines equal Spark's
+# defaults and stay explicit: a spark-submit run can start from a
+# spark-defaults file that turns them off.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
 def get_spark(
     app_name: str = "levsim",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
-    arrow_batch_size: int = 10_000,
+    shuffle_partitions: int = 64,
     iceberg_warehouse: str | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("LEVSIM_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("LEVSIM_SHUFFLE_PARTITIONS", "64"))
+    """A local session: ``ENGINE_CONF`` plus master (default
+    ``local[$SPARK_GRAFT_CPUS]``, else every core), shuffle width, driver
+    memory (``$LEVSIM_DRIVER_MEM``, default 8g) and no console progress."""
+    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     b = (
         SparkSession.builder.appName(app_name)
+        .config(map=ENGINE_CONF)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("LEVSIM_MIN_PARTITION_SIZE", "1m"),
-        )
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_size))
         .config("spark.driver.memory", os.environ.get("LEVSIM_DRIVER_MEM", "8g"))
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.showConsoleProgress", "false")
     )
     if iceberg_warehouse is not None:

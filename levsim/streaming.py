@@ -23,7 +23,7 @@ import os
 import shutil
 from typing import List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import blocking, candidates, normalize
@@ -99,12 +99,9 @@ def _read_batches(spark: SparkSession, directory: str) -> Optional[DataFrame]:
 
 def _first_landings(spark: SparkSession, files: List[str],
                     keyed: Optional[DataFrame]) -> DataFrame:
-    """The pages of ``files``: one landing per url (earliest ``warc_ts``,
-    then smallest text), minus the urls already in ``keyed.doc_id``."""
-    first = Window.partitionBy("url").orderBy("warc_ts", "text")
-    pages = spark.read.schema(PAGES_SCHEMA).parquet(*files) \
-        .where(F.col("url").isNotNull()) \
-        .withColumn("_n", F.row_number().over(first)).where(F.col("_n") == 1).drop("_n")
+    """The pages of ``files``, one per url (``normalize.one_page_per_url``),
+    minus the urls already in ``keyed.doc_id``."""
+    pages = normalize.one_page_per_url(spark.read.schema(PAGES_SCHEMA).parquet(*files))
     if keyed is None:
         return pages
     return pages.join(keyed.select(F.col("doc_id").alias("_keyed")),

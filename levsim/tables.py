@@ -253,33 +253,20 @@ class SnapshotTable:
         return out
 
     def write(self, df: DataFrame, snapshot_id: str, params: Optional[dict] = None,
-              parent: Optional[str] = None,
-              partition_by: Optional[List[str]] = None) -> SnapshotInfo:
+              parent: Optional[str] = None) -> SnapshotInfo:
         """Write df as a new snapshot in one Spark job; atomic commit via
         rename-into-place.  The manifest's row and file counts come from the
-        written footers, not from a read-back.
-
-        ``partition_by``: hive-style partition columns (e.g. ["lang"]) —
-        the Iceberg-partitioning analog; subsequent reads with a filter on
-        these columns prune directories at planning time (PartitionFilters
-        in the scan node), the table-layout lever that matters at 100 TB."""
+        written footers, not from a read-back."""
         final = self._snap_dir(snapshot_id)
         if self.exists(snapshot_id):
             return self._info(snapshot_id)
         tmp = tempfile.mkdtemp(prefix=f".tmp_{snapshot_id}_", dir=self.dir)
         data_dir = os.path.join(tmp, "data")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
+        df.write.mode("overwrite").parquet(data_dir)
         # Spark names each data file part-<write task>-<uuid>...
         files = [{"path": os.path.relpath(f, tmp), "rows": pq.read_metadata(f).num_rows,
                   "task": int(re.match(r"part-(\d+)", os.path.basename(f)).group(1))}
                  for f in _parquet_files(data_dir)]
-        # the schema a reader of the files sees: partition columns come last
-        pb = list(partition_by or [])
-        schema = StructType([f for f in df.schema if f.name not in pb]
-                            + [df.schema[c] for c in pb])
         manifest = {
             "snapshot_id": snapshot_id,
             "table": self.name,
@@ -288,8 +275,7 @@ class SnapshotTable:
             "parent": parent,
             "params": params or {},
             "format": "parquet",
-            "partition_by": pb,
-            "schema": schema.jsonValue(),
+            "schema": df.schema.jsonValue(),
             "files": files,
         }
         with open(os.path.join(tmp, "manifest.json"), "w") as f:
@@ -389,19 +375,13 @@ class IcebergSnapshotTable:
         return sorted(self._tags())
 
     def write(self, df: DataFrame, snapshot_id: str, params: Optional[dict] = None,
-              parent: Optional[str] = None,
-              partition_by: Optional[List[str]] = None) -> "SnapshotInfo":
+              parent: Optional[str] = None) -> "SnapshotInfo":
         if self.exists(snapshot_id):
             return self._info(snapshot_id)
-        w = df.writeTo(self.ident)
-        if partition_by:
-            from pyspark.sql import functions as F  # noqa: N812
-
-            w = w.partitionedBy(*[F.col(c) for c in partition_by])
         # each levsim snapshot is a FULL table state: REPLACE creates a new
         # Iceberg snapshot of the same table, prior snapshots stay
         # reachable through their tags until an explicit expire
-        w.createOrReplace()
+        df.writeTo(self.ident).createOrReplace()
         self.spark.sql(
             f"ALTER TABLE {self.ident} CREATE TAG `{snapshot_id}`"
         )

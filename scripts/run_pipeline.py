@@ -50,21 +50,14 @@ def main() -> None:
 
     from levsim import evaluate, tables
     from levsim.pipeline import ERConfig, ERPipeline
+    from levsim.session import ENGINE_CONF
 
-    # Apply the house engine configs (AQE + partition coalescing + skew-join
-    # splitting, Arrow batching, UTC) on TOP of whatever spark-submit set —
-    # round-6 profiling showed the raw builder.getOrCreate() here ran the
-    # whole stress WITHOUT AQE, which is not the tuned production posture.
-    builder = SparkSession.builder.appName("levsim-er")
-    for k, v in (
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-    ):
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    # The engine's one session recipe on top of what spark-submit set;
+    # master, memory and shuffle width stay the submit line's.  A round-6
+    # spark-submit stress run built its session with a bare getOrCreate()
+    # here and ran without AQE.  JVM options (driver heap, JIT flags) belong
+    # on the submit line too: the driver JVM is running before this script.
+    spark = SparkSession.builder.appName("levsim-er").config(map=ENGINE_CONF).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     if args.synthesize:
@@ -99,8 +92,6 @@ def main() -> None:
         report["pair_f1"] = evaluate.pair_f1(predicted, truth)
         # cluster-level metric (round 5): B-cubed weights every RECORD
         # equally where pairwise F1 weights clusters quadratically
-        from pyspark.sql import functions as F
-
         assigned = run.clusters.select("url", "cluster_id").join(
             pages.select("url", "entity_id"), "url")
         report["bcubed"] = evaluate.bcubed(assigned, id_col="url")

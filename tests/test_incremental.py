@@ -81,3 +81,41 @@ def test_incremental_er_equals_batch(spark, tmp_path):
     er = _clusters_as_partition(
         run.clusters.select(F.col("url").alias("doc_id"), "cluster_id").collect())
     assert inc == {c for c in er if len(c) > 1}
+
+
+def test_relanded_url_is_one_page(spark, tmp_path):
+    """A url that lands twice with different text is one page, its first
+    landing, in the batch and in the catch-up: one ``clusters`` row per url,
+    one ``scores`` row per pair, each pair once in the catch-up's pair and
+    match logs, and the catch-up's clusters equal the batch's."""
+    pdf = tables.generate_pages_pdf(30, seed=1).drop(columns=["entity_id"])
+    again = pdf.iloc[:5].assign(text=pdf.text.iloc[:5] + " updated",
+                                warc_ts=pdf.warc_ts.iloc[:5] + pd.Timedelta(days=1))
+    in_dir = str(tmp_path / "in")
+    spark.createDataFrame(pd.concat([pdf, again], ignore_index=True)) \
+        .coalesce(1).write.parquet(in_dir)
+    pages = spark.read.parquet(in_dir)
+
+    wd = str(tmp_path / "er")
+    run = ERPipeline(spark, wd).run(pages)
+    clusters = run.clusters.select("url", "cluster_id").collect()
+    assert len(clusters) == len({r.url for r in clusters}) == pdf.url.nunique()
+    scores = run.matched.select("id_a", "id_b").collect()
+    assert len(scores) == len(set(map(tuple, scores)))
+    kept = tables.SnapshotTable(wd, "pages_norm").read(spark) \
+        .where(F.col("url").isin(list(again.url))).select("url", "text").collect()
+    assert {r.url: r.text for r in kept} == dict(zip(pdf.url.iloc[:5], pdf.text.iloc[:5]))
+
+    pairs_out, matches = str(tmp_path / "pairs"), str(tmp_path / "matches")
+    assert streaming.run_incremental_pairs(spark, in_dir, pairs_out, str(tmp_path / "ck")) == 0
+    docs = normalize.with_normalized(normalize.one_page_per_url(pages)).select(
+        F.col("url").alias("doc_id"), "norm_text")
+    pairs = spark.read.parquet(pairs_out)
+    incremental.score_new_pairs(spark, pairs, docs, matches)
+    for log in (pairs, spark.read.parquet(matches)):
+        ids = log.select("id_a", "id_b").collect()
+        assert len(ids) == len(set(map(tuple, ids)))
+    inc = _clusters_as_partition(incremental.refresh_clusters(spark, matches).collect())
+    er = _clusters_as_partition(
+        run.clusters.select(F.col("url").alias("doc_id"), "cluster_id").collect())
+    assert inc == {c for c in er if len(c) > 1}

@@ -62,25 +62,6 @@ def test_length_prefilter_is_pre_udf_predicate(spark, pages_path):
     assert "Filter" in plan
 
 
-def test_snapshot_partition_pruning_counts_files(spark, tmp_path):
-    """Partitioned snapshot reads with a partition filter must plan strictly
-    fewer files than the full scan (PartitionFilters, not post-filter)."""
-    from levsim.tables import SnapshotTable, generate_pages
-
-    t = SnapshotTable(str(tmp_path), "pp")
-    t.write(generate_pages(spark, n_entities=30, partitions=4), "s1",
-            partition_by=["lang"])
-    full = t.read(spark, "s1")
-    one = full.where("lang = 'en'")
-    def n_files(df):
-        plan = _scan_plan(df)
-        # executedPlan prints the scan's file count at planning time via
-        # the FileSourceScanExec metadata; fall back to comparing plans
-        return plan
-    plan_one = n_files(one)
-    assert "PartitionFilters" in plan_one and "lang" in plan_one
-
-
 def test_textstats_stays_in_codegen(spark, pages_path):
     """Text-stats are pure column algebra — never a Python evaluation node.
     The regexp/arithmetic subset additionally runs inside a

@@ -64,28 +64,6 @@ def test_cc_self_loops_and_dups(spark):
     assert comps[3] == 3
 
 
-def test_snapshot_partitioned_write_prunes(spark, tmp_path):
-    import os
-
-    from levsim.tables import SnapshotTable, generate_pages
-
-    pages = generate_pages(spark, n_entities=20, partitions=4)
-    t = SnapshotTable(str(tmp_path), "pages")
-    info = t.write(pages, "snap1", partition_by=["lang"])
-    assert info.row_count == pages.count()
-    assert t.manifest("snap1")["partition_by"] == ["lang"]
-    # hive-style layout on disk
-    data_dir = os.path.join(str(tmp_path), "pages", "snap_snap1", "data")
-    assert any(d.startswith("lang=") for d in os.listdir(data_dir))
-    # planning-time partition pruning: the filtered scan reads only the
-    # matching directory (PartitionFilters in the physical plan)
-    df = t.read(spark, "snap1").where("lang = 'en'")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "lang" in plan
-    langs = {r.lang for r in df.select("lang").distinct().collect()}
-    assert langs == {"en"}
-
-
 def _drive_snapshot_backend(spark, table):
     """Backend-agnostic snapshot contract: two writes, time travel, resume
     skip — the behaviors the ER pipeline leans on (SURVEY.md §7(e))."""
@@ -157,9 +135,8 @@ def _jobs_in(spark, group, fn):
 
 def test_snapshot_row_count_from_footers(spark, tmp_path):
     """row_count is the manifest's per-file footer counts, and it equals a
-    read-back count for a plain, an empty and a partitioned write; the read
-    schema is the one inference of the written files would give."""
-    import json
+    read-back count for a plain and an empty write; the read schema is the
+    one inference of the written files would give."""
     import os
 
     from pyspark.sql import functions as F
@@ -169,40 +146,31 @@ def test_snapshot_row_count_from_footers(spark, tmp_path):
     t = SnapshotTable(str(tmp_path), "counts")
     rows = spark.range(0, 1000, numPartitions=5).select(
         "id", (F.col("id") % 3).cast("string").alias("k"), F.lit("x").alias("v"))
-    cases = {
-        "plain": (rows, None),
-        "empty": (rows.where("id < 0"), None),
-        "parts": (rows, ["k"]),
-        "empty_parts": (rows.where("id < 0"), ["k"]),
-    }
-    for sid, (df, pb) in cases.items():
-        info, jobs = _jobs_in(spark, f"test_snapshot_write_{sid}",
-                              lambda: t.write(df, sid, partition_by=pb))
+    cases = {"plain": rows, "empty": rows.where("id < 0")}
+    for sid, df in cases.items():
+        info, jobs = _jobs_in(spark, f"test_snapshot_write_{sid}", lambda: t.write(df, sid))
         assert len(jobs) == 1, (sid, jobs)  # the write, nothing else
         got = t.read(spark, sid)
         assert info.row_count == got.count() == df.count(), sid
         m = t.manifest(sid)
         assert sum(f["rows"] for f in m["files"]) == m["row_count"] == info.row_count
-        assert got.columns == (["id", "v", "k"] if pb else ["id", "k", "v"])
+        assert got.columns == ["id", "k", "v"]
         assert {f.name: f.dataType for f in got.schema} == {
             f.name: f.dataType for f in df.schema}, sid
-        if not pb:
-            inferred = spark.read.parquet(os.path.join(t.dir, f"snap_{sid}", "data"))
-            assert got.schema == inferred.schema, sid
-    # inference would read the partition values "0", "1", "2" as integers;
-    # the stored schema keeps the column's written type
-    assert str(t.read(spark, "parts").schema["k"].dataType) == "StringType()"
+        inferred = spark.read.parquet(os.path.join(t.dir, f"snap_{sid}", "data"))
+        assert got.schema == inferred.schema, sid
 
 
 def test_snapshot_read_runs_no_job(spark, tmp_path):
     from levsim.tables import SnapshotTable, generate_pages
 
     t = SnapshotTable(str(tmp_path), "nojob")
-    t.write(generate_pages(spark, n_entities=10, partitions=3), "s1", partition_by=["lang"])
+    pages = generate_pages(spark, n_entities=10, partitions=3)
+    t.write(pages, "s1")
     schema, jobs = _jobs_in(spark, "test_snapshot_read_no_job",
                             lambda: t.read(spark, "s1").schema)
     assert jobs == [], jobs
-    assert schema.fieldNames() == ["url", "warc_ts", "html", "text", "entity_id", "lang"]
+    assert schema.fieldNames() == pages.columns
 
 
 def test_snapshot_old_manifest_reads_by_inference(spark, tmp_path):
