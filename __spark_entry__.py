@@ -68,19 +68,19 @@ _P_CTE = (
 
 
 def q_lev_distance_pairs(spark, sf_dir):
-    from levsim.udfs import lev_distance_udf
+    from levsim.udfs import pair_udf
 
     return _pairs(spark, sf_dir).select(
-        "id_a", "id_b", lev_distance_udf()("text_a", "text_b").alias("dist")
+        "id_a", "id_b", pair_udf("distance")("text_a", "text_b").alias("dist")
     )
 
 
 def q_lev_distance_cutoff(spark, sf_dir):
-    from levsim.udfs import lev_distance_udf
+    from levsim.udfs import pair_udf
 
     return _pairs(spark, sf_dir).select(
         "id_a", "id_b",
-        lev_distance_udf(score_cutoff=_CUTOFF)("text_a", "text_b").alias("dist_c"),
+        pair_udf("distance", score_cutoff=_CUTOFF)("text_a", "text_b").alias("dist_c"),
     )
 
 
@@ -99,34 +99,34 @@ def q_lev_ratio_pairs(spark, sf_dir):
     the scorer's value evidence is the driver-green truncated/multiword/
     unicode siblings (same kernel code path, lengths spanning the 64-char
     Myers block boundary) plus the reference's own test vectors."""
-    from levsim.udfs import lev_ratio_udf
+    from levsim.udfs import pair_udf
 
     return _pairs(spark, sf_dir).select(
-        "id_a", "id_b", F.round(lev_ratio_udf()("text_a", "text_b"), 6).alias("ratio")
+        "id_a", "id_b", F.round(pair_udf("ratio")("text_a", "text_b"), 6).alias("ratio")
     )
 
 
 def q_jaro_pairs(spark, sf_dir):
-    from levsim.udfs import lev_jaro_udf
+    from levsim.udfs import pair_udf
 
     return _pairs(spark, sf_dir).select(
-        "id_a", "id_b", F.round(lev_jaro_udf()("text_a", "text_b"), 6).alias("jaro")
+        "id_a", "id_b", F.round(pair_udf("jaro")("text_a", "text_b"), 6).alias("jaro")
     )
 
 
 def q_jaro_winkler_pairs(spark, sf_dir):
-    from levsim.udfs import lev_jaro_winkler_udf
+    from levsim.udfs import pair_udf
 
     return _pairs(spark, sf_dir).select(
-        "id_a", "id_b", F.round(lev_jaro_winkler_udf()("text_a", "text_b"), 6).alias("jw")
+        "id_a", "id_b", F.round(pair_udf("jaro_winkler")("text_a", "text_b"), 6).alias("jw")
     )
 
 
 def q_hamming_pairs(spark, sf_dir):
-    from levsim.udfs import lev_hamming_udf
+    from levsim.udfs import pair_udf
 
     return _pairs(spark, sf_dir).select(
-        "id_a", "id_b", lev_hamming_udf()("text_a", "text_b").alias("ham")
+        "id_a", "id_b", pair_udf("hamming")("text_a", "text_b").alias("ham")
     )
 
 
@@ -143,11 +143,11 @@ def q_editops_count_pairs(spark, sf_dir):
 def q_lev_weighted_pairs(spark, sf_dir):
     # uniform weights (2,2,2) scale the unit-cost distance by exactly 2 —
     # validates the weighted-DP path against 2*levenshtein in SQL
-    from levsim.udfs import lev_distance_udf
+    from levsim.udfs import pair_udf
 
     return _pairs(spark, sf_dir).select(
         "id_a", "id_b",
-        lev_distance_udf(weights=(2, 2, 2))("text_a", "text_b").alias("wdist"),
+        pair_udf("distance", weights=(2, 2, 2))("text_a", "text_b").alias("wdist"),
     )
 
 
@@ -156,7 +156,7 @@ def q_lev_weighted_asym(spark, sf_dir):
     the generalized weighted DP checked against a recursive-CTE oracle that
     runs the same weighted recurrence in SQL (the uniform (2,2,2) query
     only exercises scaling)."""
-    from levsim.udfs import lev_distance_udf
+    from levsim.udfs import pair_udf
 
     p = _pairs(spark, sf_dir).select(
         "id_a", "id_b",
@@ -165,7 +165,7 @@ def q_lev_weighted_asym(spark, sf_dir):
     )
     return p.select(
         "id_a", "id_b",
-        lev_distance_udf(weights=(3, 1, 2))("ta", "tb").alias("wdist"),
+        pair_udf("distance", weights=(3, 1, 2))("ta", "tb").alias("wdist"),
     )
 
 
@@ -477,13 +477,13 @@ def q_sorted_neighborhood(spark, sf_dir):
 
 
 def q_topk_jw_matches(spark, sf_dir):
-    from levsim.udfs import lev_jaro_winkler_udf
+    from levsim.udfs import pair_udf
 
     # rank on the UNROUNDED jw (the oracle's row_number also orders by the
     # unrounded jaro_winkler_similarity) so sub-1e-6 score gaps cannot rank
     # differently across engines; round only for the emitted column
     p = _pairs(spark, sf_dir).withColumn(
-        "jw_raw", lev_jaro_winkler_udf()("text_a", "text_b")
+        "jw_raw", pair_udf("jaro_winkler")("text_a", "text_b")
     )
     w = Window.partitionBy("id_a").orderBy(F.desc("jw_raw"), F.asc("id_b"))
     return (
@@ -943,10 +943,10 @@ def q_lev_distance_hint(spark, sf_dir):
     """score_hint adaptive band doubling must be invisible in results: the
     hinted kernel is checked against DuckDB's plain levenshtein — a hint
     far below most true distances forces several doubling rounds per pair."""
-    from levsim.udfs import lev_distance_udf
+    from levsim.udfs import pair_udf
 
     return _pairs(spark, sf_dir).select(
-        "id_a", "id_b", lev_distance_udf(score_hint=4)("text_a", "text_b").alias("dist")
+        "id_a", "id_b", pair_udf("distance", score_hint=4)("text_a", "text_b").alias("dist")
     )
 
 
@@ -1758,7 +1758,7 @@ def q_lev_ratio_trunc(spark, sf_dir):
     (reference __init__.py:133-179) checked against a DuckDB recursive-CTE
     indel DP (no builtin exists; the CTE runs the two-row DP via the
     min-plus unrolling row'[j] = min_k<=j (m[k] + j - k))."""
-    from levsim.udfs import lev_ratio_udf
+    from levsim.udfs import pair_udf
 
     p = _pairs(spark, sf_dir).select(
         "id_a", "id_b",
@@ -1766,7 +1766,7 @@ def q_lev_ratio_trunc(spark, sf_dir):
         F.substring("text_b", 1, 20).alias("tb"),
     )
     return p.select(
-        "id_a", "id_b", F.round(lev_ratio_udf()("ta", "tb"), 6).alias("ratio")
+        "id_a", "id_b", F.round(pair_udf("ratio")("ta", "tb"), 6).alias("ratio")
     )
 
 
@@ -1777,7 +1777,7 @@ def q_osa_distance_pairs(spark, sf_dir):
     plain Levenshtein on this corpus.  Oracle: the Levenshtein recursive
     CTE extended with a third carried row (prow = dp[i-1]) feeding the
     dp[i-2][j-2] + 1 transposition candidate."""
-    from levsim.udfs import osa_distance_udf
+    from levsim.udfs import pair_udf
 
     def swap34(c):
         return F.concat(
@@ -1790,7 +1790,7 @@ def q_osa_distance_pairs(spark, sf_dir):
         swap34(F.col("text_a")).alias("ta"),
         F.substring("text_b", 1, 18).alias("tb"),
     )
-    return p.select("id_a", "id_b", osa_distance_udf()("ta", "tb").alias("osa"))
+    return p.select("id_a", "id_b", pair_udf("osa")("ta", "tb").alias("osa"))
 
 
 def q_damerau_distance_pairs(spark, sf_dir):
@@ -1801,7 +1801,7 @@ def q_damerau_distance_pairs(spark, sf_dir):
     DuckDB's own ``damerau_levenshtein`` builtin — a fully independent
     second implementation (byte-based, exact on this all-ASCII corpus;
     the codepoint-vs-byte gap is covered by bytes-mode unit tests)."""
-    from levsim.udfs import damerau_distance_udf
+    from levsim.udfs import pair_udf
 
     def swap34(c):
         return F.concat(
@@ -1814,7 +1814,7 @@ def q_damerau_distance_pairs(spark, sf_dir):
         swap34(F.col("text_a")).alias("ta"),
         F.substring("text_b", 1, 32).alias("tb"),
     )
-    return p.select("id_a", "id_b", damerau_distance_udf()("ta", "tb").alias("dl"))
+    return p.select("id_a", "id_b", pair_udf("damerau")("ta", "tb").alias("dl"))
 
 
 def _damerau_oracle_sql() -> str:
@@ -1836,7 +1836,7 @@ def q_token_sort_ratio(spark, sf_dir):
     the same recursive-CTE indel DP with the token sort applied in SQL
     (list_sort is binary-collation == Spark array_sort on ASCII)."""
     from levsim.normalize import token_sort_key
-    from levsim.udfs import lev_ratio_udf
+    from levsim.udfs import pair_udf
 
     p = _pairs(spark, sf_dir).select(
         "id_a", "id_b",
@@ -1844,7 +1844,7 @@ def q_token_sort_ratio(spark, sf_dir):
         F.substring(token_sort_key(F.col("text_b")), 1, 20).alias("tb"),
     )
     return p.select(
-        "id_a", "id_b", F.round(lev_ratio_udf()("ta", "tb"), 6).alias("tsr")
+        "id_a", "id_b", F.round(pair_udf("ratio")("ta", "tb"), 6).alias("tsr")
     )
 
 
@@ -1853,14 +1853,14 @@ def q_affine_gap_pairs(spark, sf_dir):
     16-char prefixes.  Oracle: recursive CTE carrying TWO rows (V and D);
     the I chain collapses to the min-plus scan with slope `extend` because
     opening from an I cell is dominated by extending it."""
-    from levsim.udfs import affine_gap_udf
+    from levsim.udfs import pair_udf
 
     p = _pairs(spark, sf_dir).select(
         "id_a", "id_b",
         F.substring("text_a", 1, 16).alias("ta"),
         F.substring("text_b", 1, 16).alias("tb"),
     )
-    return p.select("id_a", "id_b", affine_gap_udf()("ta", "tb").alias("agap"))
+    return p.select("id_a", "id_b", pair_udf("affine_gap")("ta", "tb").alias("agap"))
 
 
 def q_partial_ratio_pairs(spark, sf_dir):
@@ -1874,7 +1874,7 @@ def q_partial_ratio_pairs(spark, sf_dir):
     enumerate — without this, a sub-8-char text_b silently empties the
     oracle's window range while the kernel swaps sides (adversarial
     fixture covers it)."""
-    from levsim.udfs import partial_ratio_udf
+    from levsim.udfs import pair_udf
 
     a_short = F.length("text_a") <= F.length("text_b")
     p = _pairs(spark, sf_dir).select(
@@ -1883,7 +1883,7 @@ def q_partial_ratio_pairs(spark, sf_dir):
         F.substring(F.when(a_short, F.col("text_b")).otherwise(F.col("text_a")), 1, 24).alias("tb"),
     )
     return p.select(
-        "id_a", "id_b", F.round(partial_ratio_udf()("ta", "tb"), 6).alias("pratio")
+        "id_a", "id_b", F.round(pair_udf("partial_ratio")("ta", "tb"), 6).alias("pratio")
     )
 
 
@@ -1897,7 +1897,7 @@ def q_token_set_ratio(spark, sf_dir):
     max-then-round because round is monotone — both engines round once at
     the end."""
     from levsim.normalize import token_set_strings
-    from levsim.udfs import lev_ratio_udf
+    from levsim.udfs import pair_udf
 
     p = _pairs(spark, sf_dir).withColumn(
         "s", token_set_strings(F.col("text_a"), F.col("text_b"))
@@ -1907,7 +1907,7 @@ def q_token_set_ratio(spark, sf_dir):
         F.substring("s.comb_a", 1, 16).alias("t1"),
         F.substring("s.comb_b", 1, 16).alias("t2"),
     )
-    r = lev_ratio_udf()
+    r = pair_udf("ratio")
     return p.select(
         "id_a", "id_b",
         F.round(F.greatest(r("t0", "t1"), r("t0", "t2"), r("t1", "t2")), 6).alias("tset"),
@@ -1921,7 +1921,7 @@ def q_lev_ratio_multiword(spark, sf_dir):
     carries — _ckernels.c indel_one) is what the oracle checks; the 20-char
     query only ever exercises the single-word path.  Subsampling keeps the
     O(pairs * len^3) CTE affordable."""
-    from levsim.udfs import lev_ratio_udf
+    from levsim.udfs import pair_udf
 
     p = _pairs(spark, sf_dir).where(F.col("id_a") % 20 == 0).select(
         "id_a", "id_b",
@@ -1929,7 +1929,7 @@ def q_lev_ratio_multiword(spark, sf_dir):
         F.substring("text_b", 1, 80).alias("tb"),
     )
     return p.select(
-        "id_a", "id_b", F.round(lev_ratio_udf()("ta", "tb"), 6).alias("ratio")
+        "id_a", "id_b", F.round(pair_udf("ratio")("ta", "tb"), 6).alias("ratio")
     )
 
 
@@ -1940,7 +1940,7 @@ def q_lev_ratio_unicode(spark, sf_dir):
     the recursive-CTE oracle uses character-based substr/translate and is
     codepoint-correct, so a green check proves the engine's code-point
     semantics (reference RF_UINT32) cross-engine beyond ASCII."""
-    from levsim.udfs import lev_ratio_udf
+    from levsim.udfs import pair_udf
 
     def uni(c):
         return F.translate(F.substring(c, 1, 16), "aeos", "äéøß")
@@ -1949,7 +1949,7 @@ def q_lev_ratio_unicode(spark, sf_dir):
         "id_a", "id_b", uni(F.col("text_a")).alias("ta"), uni(F.col("text_b")).alias("tb")
     )
     return p.select(
-        "id_a", "id_b", F.round(lev_ratio_udf()("ta", "tb"), 6).alias("ratio")
+        "id_a", "id_b", F.round(pair_udf("ratio")("ta", "tb"), 6).alias("ratio")
     )
 
 
@@ -1958,7 +1958,7 @@ def q_hamming_unicode(spark, sf_dir):
     hamming builtin is byte-based, so the oracle is a character-based
     position scan (substr comparisons + length-diff padding) — exact for
     any input."""
-    from levsim.udfs import lev_hamming_udf
+    from levsim.udfs import pair_udf
 
     def uni(c):
         return F.translate(F.substring(c, 1, 24), "aeos", "äéøß")
@@ -1966,7 +1966,7 @@ def q_hamming_unicode(spark, sf_dir):
     p = _pairs(spark, sf_dir).select(
         "id_a", "id_b", uni(F.col("text_a")).alias("ta"), uni(F.col("text_b")).alias("tb")
     )
-    return p.select("id_a", "id_b", lev_hamming_udf()("ta", "tb").alias("ham"))
+    return p.select("id_a", "id_b", pair_udf("hamming")("ta", "tb").alias("ham"))
 
 
 def q_jaro_unicode(spark, sf_dir):
@@ -1977,7 +1977,7 @@ def q_jaro_unicode(spark, sf_dir):
     counts transpositions positionally.  Exact vs the kernel (prototyped:
     0 mismatches on all blocked pairs); the float combine mirrors the
     kernel's expression order so the doubles are bit-identical."""
-    from levsim.udfs import lev_jaro_udf
+    from levsim.udfs import pair_udf
 
     def uni(c):
         return F.translate(F.substring(c, 1, 24), "aeos", "äéøß")
@@ -1986,7 +1986,7 @@ def q_jaro_unicode(spark, sf_dir):
         "id_a", "id_b", uni(F.col("text_a")).alias("ta"), uni(F.col("text_b")).alias("tb")
     )
     return p.select(
-        "id_a", "id_b", F.round(lev_jaro_udf()("ta", "tb"), 6).alias("jaro")
+        "id_a", "id_b", F.round(pair_udf("jaro")("ta", "tb"), 6).alias("jaro")
     )
 
 
@@ -2065,7 +2065,7 @@ def q_jaro_winkler_unicode(spark, sf_dir):
     """Jaro-Winkler on multi-byte code points: the jaro CTE oracle plus the
     prefix boost (<= 4 leading code points, applied only above 0.7),
     combined in the kernel's exact float expression order."""
-    from levsim.udfs import lev_jaro_winkler_udf
+    from levsim.udfs import pair_udf
 
     def uni(c):
         return F.translate(F.substring(c, 1, 24), "aeos", "äéøß")
@@ -2074,7 +2074,7 @@ def q_jaro_winkler_unicode(spark, sf_dir):
         "id_a", "id_b", uni(F.col("text_a")).alias("ta"), uni(F.col("text_b")).alias("tb")
     )
     return p.select(
-        "id_a", "id_b", F.round(lev_jaro_winkler_udf()("ta", "tb"), 6).alias("jw")
+        "id_a", "id_b", F.round(pair_udf("jaro_winkler")("ta", "tb"), 6).alias("jw")
     )
 
 
@@ -2318,15 +2318,15 @@ def entry(spark: SparkSession) -> DataFrame:
     over sf0.001 documents; returns scored matched pairs with cluster ids."""
     from levsim.clustering import connected_components
     from levsim.prefilter import ratio_length_bound
-    from levsim.udfs import lev_jaro_winkler_udf, lev_ratio_udf
+    from levsim.udfs import pair_udf
 
     tau = 0.48  # word-soup corpus: ~100 same-vocabulary pairs at sf0.001
     p = _pairs(spark, "/root/testdata/sf0.001")
     p = p.withColumn("len_a", F.length("text_a")).withColumn("len_b", F.length("text_b"))
     p = p.where(ratio_length_bound(F.col("len_a"), F.col("len_b"), tau))
-    p = p.withColumn("ratio", lev_ratio_udf(score_cutoff=tau)("text_a", "text_b"))
+    p = p.withColumn("ratio", pair_udf("ratio", score_cutoff=tau)("text_a", "text_b"))
     matched = p.where(F.col("ratio") >= tau).withColumn(
-        "jw", lev_jaro_winkler_udf()("text_a", "text_b")
+        "jw", pair_udf("jaro_winkler")("text_a", "text_b")
     )
     comps = connected_components(matched)
     return (
@@ -3119,7 +3119,7 @@ def q_mutual_best_match(spark, sf_dir):
     identical max-then-min two-step (no row_number nondeterminism on
     either engine)."""
     from levsim.linkage import mutual_best_match
-    from levsim.udfs import lev_jaro_winkler_udf
+    from levsim.udfs import pair_udf
 
     d = _docs(spark, sf_dir)
     a = d.where(F.length("text") % 2 == 0).select(
@@ -3130,7 +3130,7 @@ def q_mutual_best_match(spark, sf_dir):
         F.col("text").alias("text_b"))
     s = (
         a.join(F.broadcast(b), ["lang", "source"])
-        .withColumn("_jw", lev_jaro_winkler_udf()("text_a", "text_b"))
+        .withColumn("_jw", pair_udf("jaro_winkler")("text_a", "text_b"))
         .withColumn("score_ppm", F.expr("cast(round(_jw * 1000000) as bigint)"))
     )
     return mutual_best_match(s, "id_a", "id_b", "score_ppm")
@@ -3169,7 +3169,7 @@ def q_greedy_matching(spark, sf_dir):
     both engines run max_rounds=14 — rounds past the fixpoint are empty
     on both sides, so the fixed unroll is exact."""
     from levsim.linkage import greedy_one_to_one
-    from levsim.udfs import lev_jaro_winkler_udf
+    from levsim.udfs import pair_udf
 
     d = _docs(spark, sf_dir)
     a = d.where(F.length("text") % 2 == 0).select(
@@ -3180,7 +3180,7 @@ def q_greedy_matching(spark, sf_dir):
         F.col("text").alias("text_b"))
     s = (
         a.join(F.broadcast(b), ["lang", "source"])
-        .withColumn("_jw", lev_jaro_winkler_udf()("text_a", "text_b"))
+        .withColumn("_jw", pair_udf("jaro_winkler")("text_a", "text_b"))
         .withColumn("score_ppm", F.expr("cast(round(_jw * 1000000) as bigint)"))
     )
     return greedy_one_to_one(s, max_rounds=14)

@@ -65,7 +65,7 @@ def main() -> None:
     from levsim.prefilter import ratio_length_bound
     from levsim.extras.simsearch import brute_force_topk_blocked, embedding_neardup_pairs
     from levsim.extras.textstats import with_textstats
-    from levsim.udfs import lev_ratio_udf, multi_score_udf
+    from levsim.udfs import multi_score_udf, pair_udf
 
     # widen the single-file scan so joins fan out over all cores
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(int(cpus) * 2).cache()
@@ -88,7 +88,6 @@ def main() -> None:
         p = a.join(F.broadcast(b), ["lang", "source"]).where(F.col("id_a") < F.col("id_b"))
         p = p.withColumn("len_a", F.length("text_a")).withColumn("len_b", F.length("text_b"))
         p = p.where(ratio_length_bound(F.col("len_a"), F.col("len_b"), tau))
-        p = p.sortWithinPartitions("id_a")
         scored = multi_score_udf(("ratio", "jaro_winkler"), ratio_cutoff=tau)("text_a", "text_b")
         p = p.withColumn("_s", scored).withColumn("ratio", F.col("_s.ratio")).withColumn(
             "jw", F.col("_s.jaro_winkler")).drop("_s")
@@ -202,7 +201,7 @@ def main() -> None:
         verified = (
             cand.join(a, "id_a").join(b, "id_b")
             .where(ratio_length_bound(F.col("len_a"), F.col("len_b"), 0.6))
-            .withColumn("ratio", lev_ratio_udf(score_cutoff=0.6)("text_a", "text_b"))
+            .withColumn("ratio", pair_udf("ratio", score_cutoff=0.6)("text_a", "text_b"))
             .where(F.col("ratio") >= 0.6)
         )
         extra["minhash_verified_pairs"] = verified.count()

@@ -9,6 +9,11 @@ bit-identical (asserted in tests/test_batch.py).
 Reference semantics carried through: score_cutoff returns ``cutoff+1`` for
 distances and ``0.0`` for similarities below the cutoff
 (reference ``__init__.py:84-88,150-153``).
+
+NULLs: a text that is None or a float NaN (``_isnull``) is NULL on both
+paths, and every scorer returns ``(values, null mask)`` with a pair NULL
+when either side is.  Values under the mask are unspecified (the C path
+scores the empty string, the fallback writes 0); the UDFs mask them.
 """
 
 from __future__ import annotations
@@ -20,6 +25,16 @@ import numpy as np
 from . import cbuild, kernels
 
 
+def _isnull(t) -> bool:
+    return t is None or (isinstance(t, float) and np.isnan(t))
+
+
+def _lengths(texts) -> np.ndarray:
+    """Code-point lengths as float64, 0 for a NULL text."""
+    return np.fromiter((0 if _isnull(t) else len(t) for t in texts), dtype=np.float64,
+                       count=len(texts))
+
+
 def _flatten(texts: Sequence[Optional[str]]) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
     """list[str|None] -> (codes uint32, offsets int64, isnull bool)."""
     n = len(texts)
@@ -27,7 +42,7 @@ def _flatten(texts: Sequence[Optional[str]]) -> Tuple[np.ndarray, np.ndarray, np
     lens = np.empty(n, dtype=np.int64)
     parts = []
     for i, t in enumerate(texts):
-        if t is None or t is np.nan or (isinstance(t, float) and np.isnan(t)):
+        if _isnull(t):
             isnull[i] = True
             lens[i] = 0
         else:
@@ -70,12 +85,12 @@ def _call_c(fn_name: str, a, b, extra=(), out_dtype=np.int64):
 
 def _per_pair(a, b, fn, dtype=np.int64) -> Tuple[np.ndarray, np.ndarray]:
     """The pure-Python path: ``fn(x, y)`` per pair -> (values, null mask);
-    a pair with a None side is null, with value 0."""
+    a pair with a NULL side is null, with value 0."""
     n = len(a)
     out = np.zeros(n, dtype=dtype)
     nulls = np.zeros(n, dtype=bool)
     for i in range(n):
-        if a[i] is None or b[i] is None:
+        if _isnull(a[i]) or _isnull(b[i]):
             nulls[i] = True
         else:
             out[i] = fn(a[i], b[i])
@@ -106,6 +121,8 @@ def batch_distance(
     a performance knob for near-match pairs."""
     import ctypes
 
+    if min(weights) < 0:
+        raise ValueError("weights have to be non-negative")
     if weights == (1, 1, 1):
         if score_hint is not None:
             res = _call_c("batch_lev_hint", a, b,
@@ -136,9 +153,7 @@ def batch_indel(a, b) -> Tuple[np.ndarray, np.ndarray]:
 def batch_ratio(a, b, score_cutoff: Optional[float] = None) -> Tuple[np.ndarray, np.ndarray]:
     """Normalized indel similarity per pair -> (float64 values, null mask)."""
     dist, nulls = batch_indel(a, b)
-    l1 = np.fromiter((0 if x is None else len(x) for x in a), dtype=np.float64, count=len(a))
-    l2 = np.fromiter((0 if x is None else len(x) for x in b), dtype=np.float64, count=len(b))
-    lensum = l1 + l2
+    lensum = _lengths(a) + _lengths(b)
     with np.errstate(divide="ignore", invalid="ignore"):
         sim = np.where(lensum > 0, 1.0 - dist / np.maximum(lensum, 1.0), 1.0)
     if score_cutoff is not None:
@@ -202,6 +217,8 @@ def batch_affine_gap(a, b, gap_open: int = 2, gap_extend: int = 1, sub_cost: int
     C two-row Gotoh when available (bit-identical to the NumPy kernel)."""
     import ctypes
 
+    if min(gap_open, gap_extend, sub_cost) < 0:
+        raise ValueError("costs have to be non-negative")
     res = _call_c("batch_affine", a, b,
                   extra=(ctypes.c_int64(gap_open), ctypes.c_int64(gap_extend),
                          ctypes.c_int64(sub_cost)))
@@ -230,7 +247,7 @@ def batch_partial_ratio(a, b, score_cutoff: Optional[float] = None) -> Tuple[np.
         for i in range(n):
             x, y = a[i], b[i]
             starts.append(pos)
-            if x is None or y is None:
+            if _isnull(x) or _isnull(y):
                 nulls[i] = True
                 la_arr[i] = 0
                 continue
@@ -258,13 +275,8 @@ def batch_partial_ratio(a, b, score_cutoff: Optional[float] = None) -> Tuple[np.
             if score_cutoff is not None and not nulls[i] and out[i] < score_cutoff:
                 out[i] = 0.0
         return out, nulls
-    for i in range(n):
-        if a[i] is None or b[i] is None:
-            nulls[i] = True
-            out[i] = 0.0
-        else:
-            out[i] = kernels.partial_ratio(a[i], b[i], score_cutoff=score_cutoff)
-    return out, nulls
+    return _per_pair(a, b, lambda x, y: kernels.partial_ratio(x, y, score_cutoff=score_cutoff),
+                     np.float64)
 
 
 _EDITOP_NAMES = ("replace", "insert", "delete")
@@ -292,9 +304,7 @@ def batch_editops(a: Sequence[Optional[str]], b: Sequence[Optional[str]]):
         pi = np.empty(max(cap, 1), dtype=np.int32)
         pj = np.empty(max(cap, 1), dtype=np.int32)
         offs = np.zeros(n + 1, dtype=np.int64)
-        fn = lib.batch_editops
-        fn.restype = ctypes.c_int64
-        total = fn(
+        total = lib.batch_editops(
             _ptr(ca, ctypes.c_uint32), _ptr(oa, ctypes.c_int64),
             _ptr(cb, ctypes.c_uint32), _ptr(ob, ctypes.c_int64),
             ctypes.c_int64(n),
@@ -317,6 +327,6 @@ def batch_editops(a: Sequence[Optional[str]], b: Sequence[Optional[str]]):
                 ])
             return out
     return [
-        None if (x is None or y is None) else kernels.editops(x, y)
+        None if (_isnull(x) or _isnull(y)) else kernels.editops(x, y)
         for x, y in zip(a, b)
     ]

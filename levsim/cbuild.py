@@ -24,6 +24,33 @@ _SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_ckernels.c")
 _lib: Optional[ctypes.CDLL] = None
 _tried = False
 
+_I64 = ctypes.c_int64
+_P = ctypes.POINTER
+# codes and offsets of both sides, then the pair count
+_PAIRS = [_P(ctypes.c_uint32), _P(_I64), _P(ctypes.c_uint32), _P(_I64), _I64]
+# codes and offsets of one text column, then the document count
+_DOCS = [_P(ctypes.c_uint32), _P(_I64), _I64]
+# every non-static function of _ckernels.c -> (argtypes, restype)
+SIGNATURES = {
+    "batch_lev": (_PAIRS + [_I64, _P(_I64)], None),  # cutoff (-1: none)
+    "batch_lev_hint": (_PAIRS + [_I64, _I64, _P(_I64)], None),  # cutoff, band hint
+    "batch_lev_weighted": (_PAIRS + [_I64, _I64, _I64, _P(_I64)], None),  # ins, del, sub
+    "batch_indel": (_PAIRS + [_P(_I64)], None),
+    "batch_jaro": (_PAIRS + [_P(ctypes.c_double)], None),
+    "batch_jaro_winkler": (_PAIRS + [ctypes.c_double, _P(ctypes.c_double)], None),
+    "batch_hamming": (_PAIRS + [_P(_I64)], None),
+    "batch_osa": (_PAIRS + [_P(_I64)], None),
+    "batch_damerau": (_PAIRS + [_P(_I64)], None),
+    "batch_affine": (_PAIRS + [_I64, _I64, _I64, _P(_I64)], None),  # open, extend, sub
+    # ops, source and destination positions, per-pair offsets, capacity;
+    # returns the op count, negative when cap is too small
+    "batch_editops": (_PAIRS + [_P(ctypes.c_int8), _P(ctypes.c_int32), _P(ctypes.c_int32),
+                                _P(_I64), _I64], _I64),
+    # n_perm, shingle_k, the hash coefficients a and b, out
+    "batch_minhash": (_DOCS + [_I64, _I64] + [_P(ctypes.c_uint64)] * 3, None),
+    "batch_simhash": (_DOCS + [_P(_I64)], None),
+}
+
 
 def _cache_dir() -> str:
     base = os.environ.get("LEVSIM_CACHE", os.path.join(tempfile.gettempdir(), "levsim_cache"))
@@ -91,25 +118,8 @@ def load() -> Optional[ctypes.CDLL]:
         lib = ctypes.CDLL(so_path)
     except OSError:
         return None
-    I64 = ctypes.POINTER(ctypes.c_int64)
-    U32 = ctypes.POINTER(ctypes.c_uint32)
-    F64 = ctypes.POINTER(ctypes.c_double)
-    lib.batch_lev.argtypes = [U32, I64, U32, I64, ctypes.c_int64, ctypes.c_int64, I64]
-    lib.batch_lev_weighted.argtypes = [U32, I64, U32, I64, ctypes.c_int64,
-                                       ctypes.c_int64, ctypes.c_int64, ctypes.c_int64, I64]
-    lib.batch_indel.argtypes = [U32, I64, U32, I64, ctypes.c_int64, I64]
-    lib.batch_jaro.argtypes = [U32, I64, U32, I64, ctypes.c_int64, F64]
-    lib.batch_jaro_winkler.argtypes = [U32, I64, U32, I64, ctypes.c_int64, ctypes.c_double, F64]
-    lib.batch_hamming.argtypes = [U32, I64, U32, I64, ctypes.c_int64, I64]
-    U64 = ctypes.POINTER(ctypes.c_uint64)
-    lib.batch_minhash.argtypes = [U32, I64, ctypes.c_int64, ctypes.c_int64,
-                                  ctypes.c_int64, U64, U64, U64]
-    lib.batch_simhash.argtypes = [U32, I64, ctypes.c_int64, I64]
-    lib.batch_lev_hint.argtypes = [U32, I64, U32, I64, ctypes.c_int64,
-                                   ctypes.c_int64, ctypes.c_int64, I64]
-    for fn in ("batch_lev", "batch_lev_weighted", "batch_indel", "batch_jaro",
-               "batch_jaro_winkler", "batch_hamming", "batch_minhash",
-               "batch_simhash", "batch_lev_hint"):
-        getattr(lib, fn).restype = None
+    for name, (argtypes, restype) in SIGNATURES.items():
+        fn = getattr(lib, name)
+        fn.argtypes, fn.restype = argtypes, restype
     _lib = lib
     return _lib

@@ -971,7 +971,7 @@ def edit_distance_join(
         raise ValueError("tau must be >= 0")
     if q < 1:
         raise ValueError("q must be >= 1")
-    from ..udfs import lev_distance_udf
+    from ..udfs import pair_udf
 
     base = (
         df.select(
@@ -1055,7 +1055,7 @@ def edit_distance_join(
     return (
         cand.join(ta, "id_a")
         .join(tb, "id_b")
-        .withColumn("dist", lev_distance_udf(score_cutoff=tau)("text_a", "text_b"))
+        .withColumn("dist", pair_udf("distance", score_cutoff=tau)("text_a", "text_b"))
         .where(F.col("dist") <= tau)
         .select("id_a", "id_b", "dist")
     )

@@ -78,6 +78,6 @@ def fuzzy_dict_match(
         "match", F.explode(deletion_variants(F.col("match"), max_dist)).alias("v"))
     cand = tv.join(F.broadcast(dv), "v").select("tok", "match").distinct()
     verified = cand.withColumn(
-        "dist", udfs.lev_distance_udf(score_cutoff=max_dist)("tok", "match")
+        "dist", udfs.pair_udf("distance", score_cutoff=max_dist)("tok", "match")
     ).where(F.col("dist") <= max_dist)
     return verified

@@ -16,7 +16,7 @@ Spark shape (why this scales):
   bounded by ``max_tokens`` (take the first N tokens of each side; NULL
   disables).
 * The inner similarity runs through the house Arrow-batched jaro kernel
-  (levsim.udfs.lev_jaro_udf -> C batch_jaro) — ONE vectorized crossing
+  (``levsim.udfs.pair_udf("jaro")`` -> C batch_jaro) — ONE vectorized crossing
   over the exploded token-pair table, never a per-row Python UDF.
 * Both reductions (max over T_b, weighted mean over T_a) are plain
   groupBy aggregates with map-side partial aggregation; nothing global.
@@ -73,7 +73,7 @@ def soft_tfidf_pairs(
     A loud up-front BIGINT guard (one scalar aggregate) rejects idf_scale
     values whose worst-case dot term would wrap Spark's non-ANSI sum.
     """
-    from levsim.udfs import lev_jaro_winkler_udf
+    from levsim.udfs import pair_udf
 
     n_docs = docs.select(F.countDistinct(F.col(id_col)).alias("n")).collect()[0]["n"]
     toks = docs.select(
@@ -114,7 +114,7 @@ def soft_tfidf_pairs(
     wb = w.select(F.col("doc_id").alias("id_b"), F.col("tok").alias("tok_b"),
                   F.col("w").alias("wb"))
     cross = pairs.join(wa, "id_a").join(wb, "id_b")
-    jw = lev_jaro_winkler_udf(prefix_weight)
+    jw = pair_udf("jaro_winkler", prefix_weight=prefix_weight)
     sims = cross.withColumn(
         "_jw", jw(F.col("tok_a"), F.col("tok_b"))
     ).withColumn("jw_ppm", F.expr("cast(round(_jw * 1000000) as bigint)"))
@@ -189,13 +189,13 @@ def monge_elkan_pairs(
     the round-6 boundary, observed in the wild at sf0.01); per-value
     round-6 jaro parity with DuckDB IS established (jaro_pairs), so
     quantize-then-integer-mean is exact."""
-    from levsim.udfs import lev_jaro_udf
+    from levsim.udfs import pair_udf
 
     ta = _tok_counts(pairs, text_a, "a", max_tokens)
     tb = _tok_counts(pairs, text_b, "b", max_tokens)
     cross = ta.join(tb, ["id_a", "id_b"])
     sims = cross.withColumn(
-        "_sim", lev_jaro_udf()(F.col("tok_a"), F.col("tok_b"))
+        "_sim", pair_udf("jaro")(F.col("tok_a"), F.col("tok_b"))
     )
 
     def _direction(sims_df, tok, cnt):

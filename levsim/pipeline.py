@@ -272,7 +272,7 @@ class ERPipeline:
             # >= tau, which are the rows kept
             kept = with_text.where(
                 prefilter.ratio_length_bound(F.col("len_a"), F.col("len_b"), cfg.tau))
-            scored = scoring.score_pairs_cascade(kept, tau=cfg.tau, secondary=("jaro_winkler",))
+            scored = scoring.score_pairs_cascade(kept, tau=cfg.tau)
             return scored.where(F.col("ratio") >= F.lit(cfg.tau)).select(
                 "id_a", "id_b", "block_pass", "block_key", "ratio", "jaro_winkler")
 

@@ -1,24 +1,25 @@
 """Pair scoring stage: attach texts to candidate pairs and score with the
 Arrow-batched kernels.
 
-Plan shape (what .explain should show): two shuffled hash/sort-merge joins
-on doc_id to attach (text, length) to each side, then ONE ArrowEvalPython
-node computing all requested scores in a single Python round-trip.  The
-product path — the pipeline's scores stage and the catch-up's
-``incremental.score_new_pairs`` — scores with ``score_pairs_cascade``: the
-same single crossing, gated, so the UDF computes the ratio for every row
-and the secondary scorers only for rows whose ratio is >= tau.  The ratio
-is ``batch.batch_ratio``: the full bit-parallel Indel/LCS kernel
-(``batch_indel``), with results below the cutoff zeroed afterwards — there
-is no band and no in-kernel early exit.  The
-caller filters: the pipeline prunes on the length bound before the
-crossing and keeps ``ratio >= tau`` after it, while the catch-up logs
-every row so that no pair is scored twice.
+Plan shape (what .explain should show): two joins on doc_id to attach
+(text, length) to each side, then ONE ArrowEvalPython node computing all
+requested scores in a single Python round-trip, with no sort in between:
+every kernel scores one pair at a time and caches nothing across pairs, so
+row order inside a batch does not matter.  Both entry points build that
+column with ``udfs.multi_score_udf`` over the scorer table
+(``udfs.SCORERS``; an unknown name raises ``ValueError``) and differ only in
+what runs around it: ``score_pairs`` can apply the length prefilter first,
+``score_pairs_cascade`` gates the secondary scorers on the ratio.
 
-One-side-cache affinity (reference CachedIndel/CachedLevenshtein,
-_levenshtein.hpp:488,600,666): sortWithinPartitions(id_a) groups equal
-left-side strings adjacently inside every Arrow batch, so per-pattern setup
-(prefix strip, bitmask build) amortizes across a run of pairs.
+The product path — the pipeline's scores stage and the catch-up's
+``incremental.score_new_pairs`` — scores with ``score_pairs_cascade``: the
+UDF computes the ratio for every row and the secondary scorers only for
+rows whose ratio is >= tau.  The ratio is ``batch.batch_ratio``: the full
+bit-parallel Indel/LCS kernel (``batch_indel``), with results below the
+cutoff zeroed afterwards — there is no band and no in-kernel early exit.
+The caller filters: the pipeline prunes on the length bound before the
+crossing and keeps ``ratio >= tau`` after it, while the catch-up logs every
+row so that no pair is scored twice.
 """
 
 from __future__ import annotations
@@ -50,6 +51,16 @@ def attach_texts(
     return pairs.join(side("a"), "id_a").join(side("b"), "id_b")
 
 
+def _scored(df: DataFrame, scorers: Sequence[str], tau: Optional[float],
+            gate: Optional[float] = None) -> DataFrame:
+    """One score column per scorer, from one struct-returning UDF over
+    (text_a, text_b); ratios below ``tau`` are zeroed."""
+    udf = udfs.multi_score_udf(scorers, ratio_cutoff=tau, gate=gate)
+    df = df.withColumn("_scores", udf("text_a", "text_b"))
+    fields = df.schema["_scores"].dataType.fieldNames()
+    return df.withColumns({f: F.col("_scores")[f] for f in fields}).drop("_scores")
+
+
 def score_pairs(
     pairs_with_text: DataFrame,
     tau: Optional[float] = None,
@@ -60,20 +71,7 @@ def score_pairs(
     df = pairs_with_text
     if tau is not None:
         df = df.where(prefilter.ratio_length_bound(F.col("len_a"), F.col("len_b"), tau))
-    df = df.sortWithinPartitions("id_a")
-    known = tuple(s for s in scorers if s in udfs.SCORERS)
-    if known:
-        # one Arrow crossing for all scores (struct-returning UDF)
-        df = df.withColumn("_scores", udfs.multi_score_udf(known, ratio_cutoff=tau)(
-            "text_a", "text_b"))
-        df = _unpack_scores(df)
-    return df
-
-
-def _unpack_scores(df: DataFrame) -> DataFrame:
-    """The ``_scores`` struct column -> one column per score."""
-    fields = df.schema["_scores"].dataType.fieldNames()
-    return df.withColumns({f: F.col("_scores")[f] for f in fields}).drop("_scores")
+    return _scored(df, scorers, tau)
 
 
 def score_pairs_cascade(
@@ -92,7 +90,4 @@ def score_pairs_cascade(
     secondary-kernel cost tracks the (tiny) match count instead of the
     candidate count, and each scoring task holds one Python worker, not
     two chained ones."""
-    sec = tuple(s for s in secondary if s in udfs.SCORERS and s != "ratio")
-    scored = udfs.multi_score_udf(("ratio", *sec), ratio_cutoff=tau, gate=tau)
-    return _unpack_scores(pairs_with_text.sortWithinPartitions("id_a")
-                          .withColumn("_scores", scored("text_a", "text_b")))
+    return _scored(pairs_with_text, ("ratio", *secondary), tau, gate=tau)

@@ -4,10 +4,12 @@ These are the ONLY Python↔JVM row-data crossings in the engine's hot path
 (SURVEY.md §3): everything before them (blocking, prefilters) and after them
 (thresholds, aggregation, clustering) is pure Catalyst column algebra.
 
-Each factory returns a pandas_udf; parameters (cutoff, weights, …) are bound
-at plan-construction time so the UDF closure ships to executors fully
-configured.  Scores are deterministic pure functions of their inputs —
-safe under Spark task retries and speculative execution.
+One table, ``_SCORERS``, names each pair scorer's struct field, Spark type,
+pandas dtype and batch kernel; ``pair_udf`` builds one score column from it
+and ``multi_score_udf`` several in one crossing.  Parameters (cutoff,
+weights, …) are bound at plan-construction time so the UDF closure ships to
+executors fully configured.  Scores are deterministic pure functions of
+their inputs — safe under Spark task retries and speculative execution.
 """
 
 from __future__ import annotations
@@ -47,64 +49,8 @@ def _once(udf):
     return udf.asNondeterministic()
 
 
-def lev_distance_udf(score_cutoff: Optional[int] = None, weights: Tuple[int, int, int] = (1, 1, 1),
-                     score_hint: Optional[int] = None):
-    """Levenshtein distance column; reference cutoff semantics
-    (``__init__.py:84-88``: > cutoff -> cutoff+1).  ``score_hint`` enables
-    the adaptive band-doubling kernel (perf only, identical results)."""
-
-    @pandas_udf(LongType())
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        vals, nulls = batch.batch_distance(a.tolist(), b.tolist(), score_cutoff=score_cutoff,
-                                           weights=weights, score_hint=score_hint)
-        return _mask(vals, nulls, "Int64")
-
-    return _once(_udf)
-
-
-def lev_ratio_udf(score_cutoff: Optional[float] = None):
-    """Normalized indel similarity column (reference ``ratio``)."""
-
-    @pandas_udf(DoubleType())
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        vals, nulls = batch.batch_ratio(a.tolist(), b.tolist(), score_cutoff=score_cutoff)
-        return _mask(vals, nulls, "float64")
-
-    return _once(_udf)
-
-
-def lev_jaro_udf():
-    @pandas_udf(DoubleType())
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        vals, nulls = batch.batch_jaro(a.tolist(), b.tolist())
-        return _mask(vals, nulls, "float64")
-
-    return _once(_udf)
-
-
-def lev_jaro_winkler_udf(prefix_weight: float = 0.1):
-    if not (0.0 <= prefix_weight <= 0.25):
-        raise ValueError("prefix_weight has to be in the range 0.0 - 0.25")
-
-    @pandas_udf(DoubleType())
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        vals, nulls = batch.batch_jaro_winkler(a.tolist(), b.tolist(), prefix_weight=prefix_weight)
-        return _mask(vals, nulls, "float64")
-
-    return _once(_udf)
-
-
-def lev_hamming_udf(score_cutoff: Optional[int] = None):
-    @pandas_udf(LongType())
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        vals, nulls = batch.batch_hamming(a.tolist(), b.tolist(), score_cutoff=score_cutoff)
-        return _mask(vals, nulls, "Int64")
-
-    return _once(_udf)
-
-
 # scorer name -> (struct field, Spark type, pandas dtype, batch kernel), in
-# the struct's field order
+# the struct's field order; distances are LongType, similarities DoubleType
 _SCORERS = {
     "ratio": ("ratio", DoubleType(), "float64", batch.batch_ratio),
     "jaro_winkler": ("jaro_winkler", DoubleType(), "float64", batch.batch_jaro_winkler),
@@ -113,8 +59,33 @@ _SCORERS = {
     "osa": ("osa", LongType(), "Int64", batch.batch_osa),
     "affine_gap": ("affine_gap", LongType(), "Int64", batch.batch_affine_gap),
     "partial_ratio": ("partial_ratio", DoubleType(), "float64", batch.batch_partial_ratio),
+    "hamming": ("hamming", LongType(), "Int64", batch.batch_hamming),
+    "damerau": ("damerau", LongType(), "Int64", batch.batch_damerau),
 }
 SCORERS = tuple(_SCORERS)
+
+
+def _check_names(scorers) -> None:
+    unknown = [s for s in scorers if s not in _SCORERS]
+    if unknown:
+        raise ValueError(f"unknown scorers {unknown}; known: {list(SCORERS)}")
+
+
+def pair_udf(scorer: str, **params):
+    """One score column for a pair of string columns: ``scorer`` is a key of
+    the scorer table and ``params`` are its batch kernel's keyword
+    arguments (``score_cutoff``, ``weights``, ``prefix_weight``, ...).  The
+    kernel runs once on an empty batch here, so a bad parameter raises when
+    the UDF is built, not in a task.  A pair with a NULL side is NULL."""
+    _check_names((scorer,))
+    _, spark_type, dtype, kernel = _SCORERS[scorer]
+    kernel([], [], **params)
+
+    @pandas_udf(spark_type)
+    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
+        return _mask(*kernel(a.tolist(), b.tolist(), **params), dtype)
+
+    return _once(_udf)
 
 
 def multi_score_udf(scorers: Tuple[str, ...] = ("ratio", "jaro_winkler"),
@@ -131,7 +102,8 @@ def multi_score_udf(scorers: Tuple[str, ...] = ("ratio", "jaro_winkler"),
     ``ratio`` (which must be requested) is computed for every row first, and
     the other scorers run only on the rows whose ratio is >= ``gate``; on
     the other rows they are NULL.  A row with a NULL text is NULL in every
-    field."""
+    field.  An unknown scorer name raises ``ValueError``."""
+    _check_names(scorers)
     names = [s for s in _SCORERS if s in scorers]
     if gate is not None and "ratio" not in names:
         raise ValueError("a gated multi_score_udf needs the ratio scorer")
@@ -176,18 +148,6 @@ EDITOPS_SCHEMA = ArrayType(
     )
 )
 
-OPCODES_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("op", StringType()),
-            StructField("i1", IntegerType()),
-            StructField("i2", IntegerType()),
-            StructField("j1", IntegerType()),
-            StructField("j2", IntegerType()),
-        ]
-    )
-)
-
 
 def lev_editops_udf():
     """Minimal edit script per pair (diagnostic path, O(mn) memory per pair —
@@ -195,31 +155,12 @@ def lev_editops_udf():
 
     @pandas_udf(EDITOPS_SCHEMA)
     def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        from .batch import batch_editops
-
-        scripts = batch_editops(a.tolist(), b.tolist())
+        scripts = batch.batch_editops(a.tolist(), b.tolist())
         out = [
             None if ops is None
             else [{"op": o, "spos": s, "dpos": d} for (o, s, d) in ops]
             for ops in scripts
         ]
-        return pd.Series(out)
-
-    return _once(_udf)
-
-
-def lev_opcodes_udf():
-    @pandas_udf(OPCODES_SCHEMA)
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(a.tolist(), b.tolist()):
-            if x is None or y is None:
-                out.append(None)
-            else:
-                out.append(
-                    [{"op": o, "i1": i1, "i2": i2, "j1": j1, "j2": j2}
-                     for (o, i1, i2, j1, j2) in kernels.opcodes(x, y)]
-                )
         return pd.Series(out)
 
     return _once(_udf)
@@ -231,13 +172,9 @@ def seqratio_udf():
 
     @pandas_udf(DoubleType())
     def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(a.tolist(), b.tolist()):
-            if x is None or y is None:
-                out.append(None)
-            else:
-                out.append(kernels.seqratio(list(x), list(y)))
-        return pd.Series(out, dtype="float64")
+        vals, nulls = batch._per_pair(a.tolist(), b.tolist(),
+                                      lambda x, y: kernels.seqratio(list(x), list(y)), np.float64)
+        return _mask(vals, nulls, "float64")
 
     return _once(_udf)
 
@@ -248,67 +185,8 @@ def setratio_udf():
 
     @pandas_udf(DoubleType())
     def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(a.tolist(), b.tolist()):
-            if x is None or y is None:
-                out.append(None)
-            else:
-                out.append(kernels.setratio(list(x), list(y)))
-        return pd.Series(out, dtype="float64")
-
-    return _once(_udf)
-
-
-def osa_distance_udf(score_cutoff: Optional[int] = None):
-    """OSA (restricted Damerau-Levenshtein) distance column — engine extra
-    (kernels.osa_distance); reference cutoff codomain rule."""
-
-    @pandas_udf(LongType())
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        vals, nulls = batch.batch_osa(a.tolist(), b.tolist(), score_cutoff=score_cutoff)
-        return _mask(vals, nulls, "Int64")
-
-    return _once(_udf)
-
-
-def damerau_distance_udf(score_cutoff: Optional[int] = None):
-    """Unrestricted Damerau-Levenshtein distance column — engine extra
-    (kernels.damerau_distance, Lowrance-Wagner): adjacent transposition
-    without OSA's no-substring-edited-twice restriction; reference cutoff
-    codomain rule.  The driver oracle checks this against DuckDB's
-    independent damerau_levenshtein builtin."""
-
-    @pandas_udf(LongType())
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        vals, nulls = batch.batch_damerau(a.tolist(), b.tolist(), score_cutoff=score_cutoff)
-        return _mask(vals, nulls, "Int64")
-
-    return _once(_udf)
-
-
-def affine_gap_udf(gap_open: int = 2, gap_extend: int = 1, sub_cost: int = 2,
-                   score_cutoff: Optional[int] = None):
-    """Affine-gap (Gotoh) alignment distance column — engine extra
-    (kernels.affine_gap_distance): long gap runs cost open + len*extend,
-    the right model for boilerplate insertions in web text."""
-
-    @pandas_udf(LongType())
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        vals, nulls = batch.batch_affine_gap(
-            a.tolist(), b.tolist(), gap_open=gap_open, gap_extend=gap_extend,
-            sub_cost=sub_cost, score_cutoff=score_cutoff)
-        return _mask(vals, nulls, "Int64")
-
-    return _once(_udf)
-
-
-def partial_ratio_udf(score_cutoff: Optional[float] = None):
-    """Best-window indel similarity column (fuzz family engine extra,
-    kernels.partial_ratio): shorter side slides over the longer."""
-
-    @pandas_udf(DoubleType())
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        vals, nulls = batch.batch_partial_ratio(a.tolist(), b.tolist(), score_cutoff=score_cutoff)
+        vals, nulls = batch._per_pair(a.tolist(), b.tolist(),
+                                      lambda x, y: kernels.setratio(list(x), list(y)), np.float64)
         return _mask(vals, nulls, "float64")
 
     return _once(_udf)

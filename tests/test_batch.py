@@ -84,6 +84,50 @@ def test_nulls_masked():
     assert list(nulls) == [False, True, True]
 
 
+@pytest.mark.parametrize("c", [True, False], ids=["c", "fallback"])
+def test_one_null_rule(monkeypatch, c):
+    """None and NaN are NULL on both paths: same mask, and the same values
+    wherever the mask is False."""
+    import os
+
+    if c and os.environ.get("LEVSIM_NO_C") == "1":
+        pytest.skip("C accelerator disabled via LEVSIM_NO_C")
+    a, b = ["ab", float("nan"), None], ["b", "c", "d"]
+    want = {"indel": [1], "ratio": [K.ratio("ab", "b")]}
+    if not c:
+        monkeypatch.setattr(cbuild, "_lib", None)
+        monkeypatch.setattr(cbuild, "_tried", True)
+    for name, fn in (("indel", batch.batch_indel), ("ratio", batch.batch_ratio)):
+        vals, nulls = fn(a, b)
+        assert list(nulls) == [False, True, True], name
+        assert list(vals[~nulls]) == want[name], name
+    for fn in (batch.batch_jaro, batch.batch_partial_ratio, batch.batch_osa):
+        assert list(fn(a, b)[1]) == [False, True, True], fn
+    assert batch.batch_editops(a, b) == [K.editops("ab", "b"), None, None]
+
+
+@pytest.mark.parametrize("c", [True, False], ids=["c", "fallback"])
+def test_negative_costs_raise(monkeypatch, c):
+    """Both paths reject what the scalar kernels reject."""
+    if not c:
+        monkeypatch.setattr(cbuild, "_lib", None)
+        monkeypatch.setattr(cbuild, "_tried", True)
+    with pytest.raises(ValueError):
+        batch.batch_distance(["abc"], ["abd"], weights=(-1, 1, 1))
+    with pytest.raises(ValueError):
+        batch.batch_affine_gap(["abc"], ["abd"], sub_cost=-1)
+
+
+def test_ffi_table_declares_every_export():
+    """cbuild.SIGNATURES names exactly the non-static functions of
+    _ckernels.c, so no export is called without declared types."""
+    import re
+
+    with open(cbuild._SRC) as f:
+        exports = set(re.findall(r"^(?!static\b)[a-z]\w*[\s*]+(\w+)\s*\(", f.read(), re.M))
+    assert exports == set(cbuild.SIGNATURES)
+
+
 def test_python_fallback_identical(monkeypatch):
     monkeypatch.setattr(cbuild, "_lib", None)
     monkeypatch.setattr(cbuild, "_tried", True)  # force fallback

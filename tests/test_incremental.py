@@ -119,3 +119,33 @@ def test_relanded_url_is_one_page(spark, tmp_path):
     er = _clusters_as_partition(
         run.clusters.select(F.col("url").alias("doc_id"), "cluster_id").collect())
     assert inc == {c for c in er if len(c) > 1}
+
+
+def test_score_new_pairs_plan_has_no_sort(spark, tmp_path, monkeypatch):
+    """A catch-up's scoring plan, with and without a matches log to
+    anti-join, crosses into Python right after the text joins."""
+    import re
+
+    plans = []
+    cascade = scoring.score_pairs_cascade
+
+    def recording(*a, **kw):
+        df = cascade(*a, **kw)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return df
+
+    monkeypatch.setattr(scoring, "score_pairs_cascade", recording)
+    pages = normalize.with_normalized(spark.createDataFrame(
+        tables.generate_pages_pdf(10, seed=3).drop(columns=["entity_id"])))
+    docs = pages.select(F.col("url").alias("doc_id"), "norm_text")
+    candidates.candidate_pairs(blocking.add_block_keys(pages), max_block_size=10**6,
+                               keep_pass_provenance=False).write.parquet(str(tmp_path / "pairs"))
+    pairs = spark.read.parquet(str(tmp_path / "pairs"))  # a pair log, as a catch-up reads it
+    matches = str(tmp_path / "matches")
+    assert incremental.score_new_pairs(spark, pairs, docs, matches) > 0
+    assert incremental.score_new_pairs(spark, pairs, docs, matches) == 0
+    assert len(plans) == 2
+    for plan in plans:
+        assert plan.count("ArrowEvalPython") == 1, plan
+        below = plan[plan.index("ArrowEvalPython"):]  # down to the text joins
+        assert not re.search(r"\bSort \[", below[:re.search(r"Join\b", below).start()]), plan

@@ -456,7 +456,9 @@ def test_candidates_and_consensus_plans_are_lineage_safe(spark, pages, tmp_path,
     die with an executor).  Neither candidates nor consensus needs a
     Window: candidates groups blocks instead of self-joining them and runs
     the MinHash UDF once; consensus is one sorted Arrow pass, not a
-    singleton/multi-member union."""
+    singleton/multi-member union.  Scores crosses into Python once, right
+    after the text joins: no kernel keeps state across pairs, so no sort
+    sits in between."""
     import re
 
     plans = {}
@@ -481,3 +483,6 @@ def test_candidates_and_consensus_plans_are_lineage_safe(spark, pages, tmp_path,
     assert count(plans["pairs"], r"\bArrowEvalPython\b") == 1, plans["pairs"]
     assert not count(plans["representatives"], r"\bUnion\b"), plans["representatives"]
     assert count(plans["representatives"], r"\bMapInArrow\b") == 1, plans["representatives"]
+    assert count(plans["scores"], r"\bArrowEvalPython\b") == 1, plans["scores"]
+    below = plans["scores"][plans["scores"].index("ArrowEvalPython"):]  # down to the text joins
+    assert not count(below[:re.search(r"Join\b", below).start()], r"\bSort \["), plans["scores"]

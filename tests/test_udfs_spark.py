@@ -7,6 +7,7 @@ import random
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType
 
 from levsim import kernels as K
 from levsim import udfs
@@ -26,26 +27,26 @@ def pairs_df(spark):
 
 
 def test_distance_udf(pairs_df):
-    got = pairs_df.withColumn("d", udfs.lev_distance_udf()("a", "b")).collect()
+    got = pairs_df.withColumn("d", udfs.pair_udf("distance")("a", "b")).collect()
     for r in got:
         assert r.d == K.distance(r.a, r.b), (r.a, r.b)
 
 
 def test_distance_udf_cutoff(pairs_df):
-    got = pairs_df.withColumn("d", udfs.lev_distance_udf(score_cutoff=3)("a", "b")).collect()
+    got = pairs_df.withColumn("d", udfs.pair_udf("distance", score_cutoff=3)("a", "b")).collect()
     for r in got:
         assert r.d == K.distance(r.a, r.b, score_cutoff=3)
 
 
 def test_ratio_udf(pairs_df):
-    got = pairs_df.withColumn("s", udfs.lev_ratio_udf()("a", "b")).collect()
+    got = pairs_df.withColumn("s", udfs.pair_udf("ratio")("a", "b")).collect()
     for r in got:
         assert r.s == K.ratio(r.a, r.b)  # exact float equality: same code path
 
 
 def test_jaro_udfs(pairs_df):
-    got = pairs_df.withColumn("j", udfs.lev_jaro_udf()("a", "b")).withColumn(
-        "jw", udfs.lev_jaro_winkler_udf()("a", "b")
+    got = pairs_df.withColumn("j", udfs.pair_udf("jaro")("a", "b")).withColumn(
+        "jw", udfs.pair_udf("jaro_winkler")("a", "b")
     ).collect()
     for r in got:
         assert r.j == K.jaro(r.a, r.b)
@@ -53,7 +54,7 @@ def test_jaro_udfs(pairs_df):
 
 
 def test_hamming_udf(pairs_df):
-    got = pairs_df.withColumn("h", udfs.lev_hamming_udf()("a", "b")).collect()
+    got = pairs_df.withColumn("h", udfs.pair_udf("hamming")("a", "b")).collect()
     for r in got:
         assert r.h == K.hamming(r.a, r.b)
 
@@ -65,25 +66,51 @@ def test_editops_udf(pairs_df):
         assert [(x.op, x.spos, x.dpos) for x in r.e] == exp
 
 
-def test_opcodes_udf(spark):
-    """The opcodes UDF equals kernels.opcodes on the golden strings, empty
-    strings included; a NULL side gives NULL."""
-    golden = [("spam", "park"), ("dog kennels", "mattresses"),
-              ("spam and eggs", "foo and bar"), ("man", "scotsman"),
-              ("Levnhtein", "Leveshein"), ("Lenshtein", "Lvenstein"),
-              ("lewenstein", "levenshtein"), ("", ""), ("abc", ""), ("", "abc")]
-    rows = golden + [("abc", None), (None, "abc"), (None, None)]
-    df = spark.createDataFrame(list(enumerate(rows)), "i int, ab struct<a: string, b: string>")
-    got = {r.i: r.o for r in df.select(
-        "i", udfs.lev_opcodes_udf()("ab.a", "ab.b").alias("o")).collect()}
-    assert len(got) == len(rows)
-    for i, (a, b) in enumerate(rows):
-        if a is None or b is None:
-            assert got[i] is None, (a, b)
-        else:
-            assert [(x.op, x.i1, x.i2, x.j1, x.j2) for x in got[i]] == K.opcodes(a, b), (a, b)
-    assert [tuple(x) for x in got[0]] == [("delete", 0, 1, 0, 0), ("equal", 1, 3, 0, 2),
-                                          ("insert", 3, 3, 2, 3), ("replace", 3, 4, 3, 4)]
+@pytest.mark.parametrize("scorer, scalar", [
+    ("osa", K.osa_distance), ("damerau", K.damerau_distance),
+    ("affine_gap", K.affine_gap_distance), ("partial_ratio", K.partial_ratio)])
+def test_pair_udf_equals_scalar(pairs_df, scorer, scalar):
+    """The table's scorers that no test above covers, one column each."""
+    for r in pairs_df.withColumn("s", udfs.pair_udf(scorer)("a", "b")).collect():
+        assert r.s == scalar(r.a, r.b), (r.a, r.b)
+
+
+def test_pair_udf_types():
+    """Distances are LongType columns, similarities DoubleType."""
+    types = {s: udfs.pair_udf(s).returnType for s in udfs.SCORERS}
+    assert {s for s, t in types.items() if t == LongType()} == {
+        "distance", "osa", "affine_gap", "hamming", "damerau"}
+    assert {s for s, t in types.items() if t == DoubleType()} == {
+        "ratio", "jaro", "jaro_winkler", "partial_ratio"}
+
+
+def test_pair_udf_bad_params_raise_when_built():
+    with pytest.raises(ValueError):
+        udfs.pair_udf("jaro_winkler", prefix_weight=0.3)
+    with pytest.raises(ValueError):
+        udfs.pair_udf("distance", weights=(-1, 1, 1))
+    with pytest.raises(ValueError):
+        udfs.pair_udf("affine_gap", gap_open=-2)
+    with pytest.raises(TypeError):
+        udfs.pair_udf("jaro", score_cutoff=0.5)  # batch_jaro takes no cutoff
+
+
+def test_unknown_scorer_names_raise(spark):
+    """A misspelt scorer raises instead of scoring nothing."""
+    from levsim.scoring import score_pairs, score_pairs_cascade
+
+    df = spark.createDataFrame(
+        [(1, 2, "lewenstein", "levenshtein", 10, 11)],
+        "id_a long, id_b long, text_a string, text_b string, len_a int, len_b int",
+    )
+    with pytest.raises(ValueError):
+        udfs.pair_udf("ratoi")
+    with pytest.raises(ValueError):
+        udfs.multi_score_udf(("ratio", "ratoi"))
+    with pytest.raises(ValueError):
+        score_pairs(df, scorers=("ratoi",))
+    with pytest.raises(ValueError):
+        score_pairs_cascade(df, tau=0.5, secondary=("jaro_winklr",))
 
 
 def test_seqratio_setratio_udf(spark):
@@ -103,7 +130,7 @@ def test_seqratio_setratio_udf(spark):
 
 def test_nulls_propagate(spark):
     df = spark.createDataFrame([("abc", None), (None, "x"), ("a", "b")], ["a", "b"])
-    got = df.withColumn("s", udfs.lev_ratio_udf()("a", "b")).orderBy(F.col("a").asc_nulls_first()).collect()
+    got = df.withColumn("s", udfs.pair_udf("ratio")("a", "b")).orderBy(F.col("a").asc_nulls_first()).collect()
     # sorted by a: (None,"x"), ("a","b"), ("abc",None)
     assert got[0].s is None and got[1].s is not None and got[2].s is None
 
@@ -179,7 +206,7 @@ def test_cascade_fused_equals_two_step(spark, scorer):
     plan = fused._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1, plan
 
-    ref = df.withColumn("ratio", udfs.lev_ratio_udf(score_cutoff=tau)("text_a", "text_b"))
+    ref = df.withColumn("ratio", udfs.pair_udf("ratio", score_cutoff=tau)("text_a", "text_b"))
     ref = ref.where(F.col("ratio") >= tau).localCheckpoint()
     ref = ref.withColumn("_s", udfs.multi_score_udf((scorer,))("text_a", "text_b"))
     field = ref.schema["_s"].dataType.fieldNames()[0]
