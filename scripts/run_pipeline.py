@@ -20,9 +20,13 @@ Modes:
 
 Build the py-files archive from the repository root with:
   zip -qr levsim.zip levsim
-Then:
-  spark-submit --master <cluster> --py-files levsim.zip scripts/run_pipeline.py \
-      --synthesize 1000 --workdir /tmp/er --evaluate
+Then, with the engine's JIT policy (``levsim.session.JIT_JAVA_OPTIONS``) on
+the submit line:
+  spark-submit --master <cluster> --py-files levsim.zip \
+      --driver-java-options "-XX:Tier4InvocationThreshold=50000 \
+        -XX:Tier4MinInvocationThreshold=6000 -XX:Tier4CompileThreshold=60000 \
+        -XX:Tier4BackEdgeThreshold=400000" \
+      scripts/run_pipeline.py --synthesize 1000 --workdir /tmp/er --evaluate
 """
 
 from __future__ import annotations
@@ -55,8 +59,10 @@ def main() -> None:
     # The engine's one session recipe on top of what spark-submit set;
     # master, memory and shuffle width stay the submit line's.  A round-6
     # spark-submit stress run built its session with a bare getOrCreate()
-    # here and ran without AQE.  JVM options (driver heap, JIT flags) belong
-    # on the submit line too: the driver JVM is running before this script.
+    # here and ran without AQE.  JVM options belong on the submit line too,
+    # since the driver JVM is running before this script: the heap with
+    # --driver-memory, the JIT policy session.JIT_JAVA_OPTIONS (which
+    # get_spark sets for local sessions) with --driver-java-options.
     spark = SparkSession.builder.appName("levsim-er").config(map=ENGINE_CONF).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -7,6 +7,8 @@ assumes this; here it is asserted directly."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -55,18 +57,18 @@ def test_partition_invariant(spark, name):
     assert a == b, f"{name}: output depends on partitioning"
 
 
-def test_pipeline_layout_invariant(spark, tmp_path):
-    """``ERPipeline.run`` gives the same pairs (with provenance), scores,
-    clusters and representatives whether its pages come as 1 file under 3
-    shuffle partitions or as 5 files of shuffled rows under 16, on a corpus
-    with re-landed urls and a cap that binds."""
+ER_TABLES = ("pairs", "scores", "clusters", "representatives")
+CAP = 3  # binds on the layout corpus
+
+
+def _layout_corpus(spark):
+    """The 20-entity seed-2 pages plus every 7th url re-landed an hour
+    later with changed text; asserts that the cap binds on it."""
     import pandas as pd
     from pyspark.sql import functions as F
 
     from levsim import blocking, normalize, tables
-    from levsim.pipeline import ERConfig, ERPipeline
 
-    cap = 3
     pdf = tables.generate_pages_pdf(20, seed=2).drop(columns=["entity_id"])
     again = pdf.iloc[::7].assign(text=pdf.text.iloc[::7] + " v2",
                                  warc_ts=pdf.warc_ts.iloc[::7] + pd.Timedelta(hours=1))
@@ -74,7 +76,25 @@ def test_pipeline_layout_invariant(spark, tmp_path):
     keyed = blocking.add_block_keys(normalize.with_normalized(
         normalize.one_page_per_url(spark.createDataFrame(pdf))))
     biggest = keyed.groupBy("block_key").count().agg(F.max("count")).first()[0]
-    assert biggest > cap  # the cap binds
+    assert biggest > CAP  # the cap binds
+    return pdf
+
+
+def _er_snapshots(spark, wd):
+    from levsim import tables
+
+    return {t: sorted(tuple(r) for r in tables.SnapshotTable(wd, t).read(spark).collect())
+            for t in ER_TABLES}
+
+
+def test_pipeline_layout_invariant(spark, tmp_path):
+    """``ERPipeline.run`` gives the same pairs (with provenance), scores,
+    clusters and representatives whether its pages come as 1 file under 3
+    shuffle partitions or as 5 files of shuffled rows under 16, on a corpus
+    with re-landed urls and a cap that binds."""
+    from levsim.pipeline import ERConfig, ERPipeline
+
+    pdf = _layout_corpus(spark)
 
     def run(name, n_files, width):
         path = str(tmp_path / name)
@@ -84,10 +104,8 @@ def test_pipeline_layout_invariant(spark, tmp_path):
         spark.conf.set("spark.sql.shuffle.partitions", str(width))
         try:
             wd = str(tmp_path / f"{name}_er")
-            ERPipeline(spark, wd, ERConfig(max_block_size=cap)).run(spark.read.parquet(path))
-            return {t: sorted(tuple(r) for r in
-                              tables.SnapshotTable(wd, t).read(spark).collect())
-                    for t in ("pairs", "scores", "clusters", "representatives")}
+            ERPipeline(spark, wd, ERConfig(max_block_size=CAP)).run(spark.read.parquet(path))
+            return _er_snapshots(spark, wd)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", old)
 
@@ -95,3 +113,53 @@ def test_pipeline_layout_invariant(spark, tmp_path):
     for t in one:
         assert one[t], t
         assert one[t] == five[t], f"{t} depends on the input layout"
+
+
+# argv: master, pages parquet, workdir, cap
+RUN_AT_CORES = """
+import sys
+from levsim.pipeline import ERConfig, ERPipeline
+from levsim.session import get_spark
+master, inp, wd, cap = sys.argv[1:]
+spark = get_spark(master=master, shuffle_partitions=5)
+print("cores", spark.sparkContext.defaultParallelism)
+ERPipeline(spark, wd, ERConfig(max_block_size=int(cap))).run(spark.read.parquet(inp))
+spark.stop()
+"""
+
+
+def test_pipeline_core_count_invariant(spark, tmp_path):
+    """The core-count leg: the layout corpus through ``ERPipeline.run`` in
+    a ``local[1]`` and a ``local[3]`` session (a subprocess each, run side
+    by side; a session's core count is fixed when it starts), both at
+    shuffle width 5, gives identical pairs, scores, clusters and
+    representatives."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    inp = str(tmp_path / "pages")
+    pdf = _layout_corpus(spark)
+    spark.createDataFrame(pdf.sample(frac=1.0, random_state=5)).repartition(3) \
+        .write.parquet(inp)
+    env = {**os.environ, "LEVSIM_DRIVER_MEM": "1g",
+           "PYTHONPATH": os.pathsep.join(p for p in (root, os.environ.get("PYTHONPATH")) if p)}
+    procs = {n: subprocess.Popen(
+        [sys.executable, "-c", RUN_AT_CORES, f"local[{n}]", inp,
+         str(tmp_path / f"cores{n}_er"), str(CAP)],
+        env=env, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
+        for n in (1, 3)}
+    try:
+        for n, p in procs.items():
+            out, err = p.communicate(timeout=900)
+            assert p.returncode == 0, err[-3000:]
+            assert f"cores {n}" in out.splitlines(), out
+    finally:
+        for p in procs.values():
+            if p.poll() is None:
+                p.kill()
+                p.wait()
+    one, three = (_er_snapshots(spark, str(tmp_path / f"cores{n}_er")) for n in (1, 3))
+    for t in one:
+        assert one[t], t
+        assert one[t] == three[t], f"{t} depends on the core count"
