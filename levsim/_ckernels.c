@@ -169,42 +169,14 @@ static int64_t myers_one(const uint32_t *a, int64_t m, const uint32_t *b, int64_
     return score;
 }
 
-void batch_lev(const uint32_t *ca, const int64_t *oa, const uint32_t *cb, const int64_t *ob,
-               int64_t npairs, int64_t cutoff, int64_t *out)
-{
-    int64_t maxn = 0;
-    for (int64_t i = 0; i < npairs; i++) {
-        int64_t ln = ob[i + 1] - ob[i];
-        if (ln > maxn) maxn = ln;
-        ln = oa[i + 1] - oa[i];
-        if (ln > maxn) maxn = ln;
-    }
-    int64_t *row = (int64_t *)malloc((size_t)(maxn + 2) * sizeof(int64_t));
-    int64_t W = maxn / 64 + 2;
-    uint64_t *bufs = (uint64_t *)malloc((size_t)(5 * W) * sizeof(uint64_t));
-    for (int64_t i = 0; i < npairs; i++) {
-        const uint32_t *a = ca + oa[i];
-        const uint32_t *b = cb + ob[i];
-        int64_t m = oa[i + 1] - oa[i], n = ob[i + 1] - ob[i];
-        int64_t diff = m > n ? m - n : n - m;
-        if (cutoff >= 0 && diff > cutoff) { out[i] = cutoff + 1; continue; }
-        /* banded DP wins for tight cutoffs; Myers for wide/no cutoff */
-        if (cutoff >= 0 && cutoff < 64)
-            out[i] = lev_one(a, m, b, n, cutoff, row);
-        else
-            out[i] = myers_one(a, m, b, n, cutoff,
-                               bufs, bufs + W, bufs + 2 * W, bufs + 3 * W, bufs + 4 * W);
-    }
-    free(row);
-    free(bufs);
-}
-
-/* score_hint adaptive banding (reference __init__.py:89-91,110-115): run
- * the banded DP with band = hint, doubling on failure until the result fits
+/* Unit-cost Levenshtein per pair.  hint < 0 (no hint): one exact pass, the
+ * banded DP for a tight cutoff (0 <= cutoff < 64) and Myers otherwise.
+ * hint >= 0: score_hint adaptive banding (reference __init__.py:89-91,
+ * 110-115): run with band = hint, doubling on failure until the result fits
  * the band or the band reaches the cutoff / full matrix width.  Returns are
- * IDENTICAL to batch_lev (property-tested); near-match long pairs with a
- * good hint stay in the O(band*len) banded DP instead of the wide Myers
- * pass. */
+ * identical with and without a hint (property-tested); near-match long pairs
+ * with a good hint stay in the O(band*len) banded DP instead of the wide
+ * Myers pass. */
 void batch_lev_hint(const uint32_t *ca, const int64_t *oa, const uint32_t *cb, const int64_t *ob,
                     int64_t npairs, int64_t cutoff, int64_t hint, int64_t *out)
 {
@@ -224,6 +196,13 @@ void batch_lev_hint(const uint32_t *ca, const int64_t *oa, const uint32_t *cb, c
         int64_t m = oa[i + 1] - oa[i], n = ob[i + 1] - ob[i];
         int64_t diff = m > n ? m - n : n - m;
         if (cutoff >= 0 && diff > cutoff) { out[i] = cutoff + 1; continue; }
+        if (hint < 0) {
+            out[i] = (cutoff >= 0 && cutoff < 64)
+                ? lev_one(a, m, b, n, cutoff, row)
+                : myers_one(a, m, b, n, cutoff,
+                            bufs, bufs + W, bufs + 2 * W, bufs + 3 * W, bufs + 4 * W);
+            continue;
+        }
         int64_t full = m > n ? m : n; /* unit-cost distance upper bound */
         int64_t band = hint > diff ? hint : diff; /* band < |m-n| is useless */
         if (band < 1) band = 1;

@@ -124,13 +124,9 @@ def batch_distance(
     if min(weights) < 0:
         raise ValueError("weights have to be non-negative")
     if weights == (1, 1, 1):
-        if score_hint is not None:
-            res = _call_c("batch_lev_hint", a, b,
-                          extra=(ctypes.c_int64(-1 if score_cutoff is None else score_cutoff),
-                                 ctypes.c_int64(max(int(score_hint), 0))))
-        else:
-            res = _call_c("batch_lev", a, b,
-                          extra=(ctypes.c_int64(-1 if score_cutoff is None else score_cutoff),))
+        res = _call_c("batch_lev_hint", a, b,
+                      extra=(ctypes.c_int64(-1 if score_cutoff is None else score_cutoff),
+                             ctypes.c_int64(-1 if score_hint is None else max(int(score_hint), 0))))
         if res is not None:
             return res
     else:

@@ -32,8 +32,7 @@ _PAIRS = [_P(ctypes.c_uint32), _P(_I64), _P(ctypes.c_uint32), _P(_I64), _I64]
 _DOCS = [_P(ctypes.c_uint32), _P(_I64), _I64]
 # every non-static function of _ckernels.c -> (argtypes, restype)
 SIGNATURES = {
-    "batch_lev": (_PAIRS + [_I64, _P(_I64)], None),  # cutoff (-1: none)
-    "batch_lev_hint": (_PAIRS + [_I64, _I64, _P(_I64)], None),  # cutoff, band hint
+    "batch_lev_hint": (_PAIRS + [_I64, _I64, _P(_I64)], None),  # cutoff, band hint (-1: none)
     "batch_lev_weighted": (_PAIRS + [_I64, _I64, _I64, _P(_I64)], None),  # ins, del, sub
     "batch_indel": (_PAIRS + [_P(_I64)], None),
     "batch_jaro": (_PAIRS + [_P(ctypes.c_double)], None),

@@ -1,8 +1,8 @@
 """Pairwise F1 evaluation against labeled pairs (BASELINE.json metric:
 "pairwise F1 >= 0.99 on labeled pairs at fixed blocking key").
 
-All set algebra is done with joins (inner = TP, left_anti = FP/FN) — no
-collect of pair sets.
+All set algebra is done with joins (one full outer join gives TP, FP and
+FN) — no collect of pair sets.
 """
 
 from __future__ import annotations
@@ -28,16 +28,20 @@ def pairs_from_clusters(clustered: DataFrame, id_col: str = "url",
 
 
 def pair_f1(predicted: DataFrame, truth: DataFrame) -> dict:
-    p = predicted.select("id_a", "id_b").dropDuplicates(["id_a", "id_b"]).cache()
-    t = truth.select("id_a", "id_b").dropDuplicates(["id_a", "id_b"]).cache()
-    tp = p.join(t, ["id_a", "id_b"]).count()
-    fp = p.join(t, ["id_a", "id_b"], "left_anti").count()
-    fn = t.join(p, ["id_a", "id_b"], "left_anti").count()
+    """Pairwise precision, recall and F1 of predicted (id_a, id_b) pairs
+    against truth pairs, duplicates ignored: one full outer join of the two
+    pair sets and one aggregate (tp in both, fp only predicted, fn only
+    truth)."""
+    p = predicted.select("id_a", "id_b").dropDuplicates(["id_a", "id_b"]).withColumn("_p", F.lit(True))
+    t = truth.select("id_a", "id_b").dropDuplicates(["id_a", "id_b"]).withColumn("_t", F.lit(True))
+    tp, fp, fn = p.join(t, ["id_a", "id_b"], "full").agg(
+        F.count_if(F.col("_p") & F.col("_t")),
+        F.count_if(F.col("_t").isNull()),
+        F.count_if(F.col("_p").isNull()),
+    ).first()
     precision = tp / (tp + fp) if tp + fp else 1.0
     recall = tp / (tp + fn) if tp + fn else 1.0
     f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
-    p.unpersist()
-    t.unpersist()
     return {"tp": tp, "fp": fp, "fn": fn, "precision": precision, "recall": recall, "f1": f1}
 
 

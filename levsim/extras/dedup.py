@@ -419,7 +419,6 @@ def winnow_fingerprints(
     k: int = 3,
     w: int = 4,
     hash_seed: str = "w",
-    use_xxhash: bool = False,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD
     2003 — the MOSS algorithm; public) as ONE pure-column expression chain.
@@ -435,11 +434,9 @@ def winnow_fingerprints(
     moot for set-level dedup.  Fewer than ``w`` gram hashes (but > 0)
     yield one fingerprint: the global min.
 
-    ``use_xxhash=True`` swaps the cross-engine md5 basis for JVM
-    ``xxhash64`` — the production choice at 100 TB (one hash instruction
-    vs an md5 per gram); the default stays md5 so the driver oracle can
-    recompute fingerprints EXACTLY in SQL (same rationale as
-    sampling.md5_long / kmv sketches).
+    Gram hashes are md5-based so the driver oracle can recompute
+    fingerprints EXACTLY in SQL (same rationale as sampling.md5_long / kmv
+    sketches).
 
     Returns (id, fp) distinct rows — ids-only downstream, the scale shape.
     """
@@ -455,16 +452,13 @@ def winnow_fingerprints(
             lambda i: F.array_join(F.slice(toks, i, k), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    if use_xxhash:
-        hashes = F.transform(grams, lambda g: F.xxhash64(g))
-    else:
-        hashes = F.transform(
-            grams,
-            lambda g: F.conv(
-                F.substring(F.md5(F.concat(F.lit(hash_seed + ":"), g)), 1, 15),
-                16, 10,
-            ).cast("long"),
-        )
+    hashes = F.transform(
+        grams,
+        lambda g: F.conv(
+            F.substring(F.md5(F.concat(F.lit(hash_seed + ":"), g)), 1, 15),
+            16, 10,
+        ).cast("long"),
+    )
     nh = F.size(hashes)
     fps = (
         F.when(
@@ -490,26 +484,16 @@ def winnow_dup_pairs(
     k: int = 3,
     w: int = 4,
     min_shared: int = 1,
-    max_fp_docs: int = 0,
-    use_xxhash: bool = False,
 ) -> DataFrame:
     """Cross-document duplicate-span candidates via winnowing: pairs of
     docs sharing >= ``min_shared`` winnowed fingerprints, with the shared
     count.  By the winnowing guarantee this has RECALL 1.0 for pairs
     sharing any token span of length >= w + k - 1 (at min_shared=1).
 
-    Scale shape: the self-join carries (fp, id) rows ONLY — never text —
-    and ``max_fp_docs`` (0 = off) drops fingerprints appearing in more
-    than that many docs before the join, the stop-key pattern of
-    candidates.py: a boilerplate span shared by 10^6 pages would otherwise
-    fan out quadratically; dropping it loses only pairs whose EVERY shared
-    span is that common (the judged-duplicate pairs share rarer spans
-    too).  Partial aggregation (map-side combine) applies to the final
-    groupBy since it is a plain count over the join output."""
-    fps = winnow_fingerprints(df, id_col, text_col, k, w, use_xxhash=use_xxhash)
-    if max_fp_docs > 0:
-        dfq = fps.groupBy("fp").agg(F.count("*").alias("_n"))
-        fps = fps.join(dfq.where(F.col("_n") <= max_fp_docs), "fp").drop("_n")
+    Scale shape: the self-join carries (fp, id) rows ONLY — never text.
+    Partial aggregation (map-side combine) applies to the final groupBy
+    since it is a plain count over the join output."""
+    fps = winnow_fingerprints(df, id_col, text_col, k, w)
     fps = fps.localCheckpoint(eager=False)  # both self-join branches
     a = fps.select(F.col("fp"), F.col("id").alias("id_a"))
     b = fps.select(F.col("fp"), F.col("id").alias("id_b"))
@@ -528,7 +512,6 @@ def remove_duplicate_spans(
     text_col: str = "text",
     span_tokens: int = 8,
     hash_seed: str = "s",
-    use_xxhash: bool = False,
 ) -> DataFrame:
     """Cross-document EXACT-substring deduplication (the ExactSubstr half
     of Lee et al. 2022, "Deduplicating Training Data Makes Language Models
@@ -556,8 +539,8 @@ def remove_duplicate_spans(
 
     Returns (id, n_tokens, n_removed, clean_text).  Docs shorter than
     ``span_tokens`` pass through untouched.  The md5 hash basis keeps the
-    whole pipeline SQL-replicable for the driver oracle; ``use_xxhash``
-    is the production swap (same rationale as winnow_fingerprints).
+    whole pipeline SQL-replicable for the driver oracle (same rationale as
+    winnow_fingerprints).
     Collision caveat (documented, shared with every hash-based dedup in
     this family): a 60-bit-hash collision removes a non-duplicated span.
     Birthday bound at 10^12 grams: ~(10^12)^2 / 2^61 ~= 4*10^5 spurious
@@ -573,13 +556,10 @@ def remove_duplicate_spans(
     base = df.select(F.col(id_col).alias("id"), toks.alias("tk"))
     base = base.localCheckpoint(eager=False)  # grams + final rejoin
     n = F.size("tk")
-    if use_xxhash:
-        hash_fn = lambda g: F.xxhash64(g)  # noqa: E731
-    else:
-        hash_fn = lambda g: F.conv(  # noqa: E731
-            F.substring(F.md5(F.concat(F.lit(hash_seed + ":"), g)), 1, 15),
-            16, 10,
-        ).cast("long")
+    hash_fn = lambda g: F.conv(  # noqa: E731
+        F.substring(F.md5(F.concat(F.lit(hash_seed + ":"), g)), 1, 15),
+        16, 10,
+    ).cast("long")
     grams = base.select(
         "id",
         F.posexplode(

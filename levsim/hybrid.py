@@ -168,18 +168,15 @@ def monge_elkan_pairs(
     text_a: str = "text_a",
     text_b: str = "text_b",
     max_tokens: int | None = 64,
-    symmetric: bool = False,
     quantize_ppm: bool = False,
 ) -> DataFrame:
     """Monge-Elkan similarity for every (id_a, id_b) pair.
 
     Returns (id_a, id_b, me_sim) with ``me_sim`` the occurrence-weighted
-    mean over a-tokens of the best jaro against b-tokens (plus the
-    b->a direction averaged in when ``symmetric=True`` — ME is
-    asymmetric by definition; the symmetric variant is the common
-    fieldwork compromise).  Pairs where either side has no tokens get
-    me_sim = 0.0 (disagreement, mirroring the NULL-gamma convention in
-    levsim.linkage).
+    mean over a-tokens of the best jaro against b-tokens (ME is
+    asymmetric by definition: swap the text columns for b -> a).  Pairs
+    where either side has no tokens get me_sim = 0.0 (disagreement,
+    mirroring the NULL-gamma convention in levsim.linkage).
 
     ``quantize_ppm=True`` returns (id_a, id_b, me_ppm BIGINT) instead:
     each per-token best jaro is quantized to round(best * 1e6) BIGINT
@@ -193,40 +190,20 @@ def monge_elkan_pairs(
 
     ta = _tok_counts(pairs, text_a, "a", max_tokens)
     tb = _tok_counts(pairs, text_b, "b", max_tokens)
-    cross = ta.join(tb, ["id_a", "id_b"])
-    sims = cross.withColumn(
-        "_sim", pair_udf("jaro")(F.col("tok_a"), F.col("tok_b"))
+    best = (
+        ta.join(tb, ["id_a", "id_b"])
+        .withColumn("_sim", pair_udf("jaro")(F.col("tok_a"), F.col("tok_b")))
+        .groupBy("id_a", "id_b", "tok_a", "cnt_a")
+        .agg(F.max("_sim").alias("_best"))
     )
-
-    def _direction(sims_df, tok, cnt):
-        best = sims_df.groupBy("id_a", "id_b", tok, cnt).agg(
-            F.max("_sim").alias("_best")
+    if quantize_ppm:
+        me = best.groupBy("id_a", "id_b").agg(
+            F.expr("sum(cnt_a * cast(round(_best * 1000000) as bigint)) div sum(cnt_a)")
+            .alias("_me")
         )
-        if quantize_ppm:
-            best = best.withColumn(
-                "_best", F.expr("cast(round(_best * 1000000) as bigint)")
-            )
-            return best.groupBy("id_a", "id_b").agg(
-                F.expr(
-                    f"sum({cnt} * _best) div sum({cnt})"
-                ).alias("_me")
-            )
-        return best.groupBy("id_a", "id_b").agg(
-            (F.sum(F.col(cnt) * F.col("_best")) / F.sum(cnt)).alias("_me")
-        )
-
-    me = _direction(sims, "tok_a", "cnt_a")
-    if symmetric:
-        me_ba = _direction(sims, "tok_b", "cnt_b").withColumnRenamed(
-            "_me", "_me_ba"
-        )
-        half = (
-            F.expr("(_me + _me_ba) div 2")
-            if quantize_ppm
-            else (F.col("_me") + F.col("_me_ba")) / F.lit(2.0)
-        )
-        me = me.join(me_ba, ["id_a", "id_b"]).select(
-            "id_a", "id_b", half.alias("_me")
+    else:
+        me = best.groupBy("id_a", "id_b").agg(
+            (F.sum(F.col("cnt_a") * F.col("_best")) / F.sum("cnt_a")).alias("_me")
         )
     # left join back so token-less sides surface as 0, not missing rows
     out_col = "me_ppm" if quantize_ppm else "me_sim"

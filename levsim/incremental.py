@@ -25,9 +25,10 @@ orchestration):
    union-find's: the log's distinct matched ids must fit in one Python
    worker.
 
-Both steps read the matches log with the schema from its first file's
-footer (``tables.read_parquet_log``), so neither runs a schema-inference
-job.
+The matches log has a declared schema (``tables.MATCHES_LOG_SCHEMA``), and
+both steps read it with ``tables.read_log``, the key table's reader: no
+schema-inference job, and a log that holds no data file yet (a first append
+that died leaves only ``_temporary/``) reads as empty.
 
 Equivalence guarantee (tested): after any sequence of catch-ups, clusters
 equal the batch pipeline's clusters on the union of all pages, because the
@@ -37,14 +38,13 @@ scoring/threshold/CC are the same code.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import scoring
 from .clustering import connected_components
-from .tables import read_parquet_log
+from .tables import MATCHES_LOG_SCHEMA, read_log
 
 
 def score_new_pairs(
@@ -61,16 +61,16 @@ def score_new_pairs(
     pair log holds each pair once by construction; nothing here dedups
     it).  ``docs``: (doc_id, norm_text), one row per doc (one page per url,
     ``normalize.one_page_per_url``).  ``matches_path``: parquet log of
-    (id_a, id_b, ratio, jaro_winkler); ratio is 0.0 below tau and
+    ``tables.MATCHES_LOG_SCHEMA`` rows; ratio is 0.0 below tau and
     jaro_winkler NULL there.  Returns the number of NEW pairs scored this
     round.  The anti-join keys on the pair identity, so re-running a
     catch-up is idempotent and no pair is scored twice."""
     pairs = pairs.select("id_a", "id_b")
-    if os.path.exists(matches_path):
-        seen = read_parquet_log(spark, matches_path).select("id_a", "id_b")
-        pairs = pairs.join(seen, ["id_a", "id_b"], "left_anti")
+    seen = read_log(spark, matches_path, MATCHES_LOG_SCHEMA)
+    if seen is not None:
+        pairs = pairs.join(seen.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
     scored = scoring.score_pairs_cascade(scoring.attach_texts(pairs, docs), tau=tau) \
-        .select("id_a", "id_b", "ratio", "jaro_winkler")
+        .select([F.col(f.name).cast(f.dataType) for f in StructType.fromDDL(MATCHES_LOG_SCHEMA)])
     # one write, counted by an observation instead of a second run of the plan
     counted = Observation("score_new_pairs")
     scored.observe(counted, F.count(F.lit(1)).alias("n")) \
@@ -79,6 +79,9 @@ def score_new_pairs(
 
 
 def refresh_clusters(spark: SparkSession, matches_path: str, tau: float = scoring.TAU) -> DataFrame:
-    """Connected components over the accepted matches in the log."""
-    log = read_parquet_log(spark, matches_path)
+    """Connected components over the accepted matches in the log; an
+    empty (doc_id, cluster_id) frame while the log holds no data file."""
+    log = read_log(spark, matches_path, MATCHES_LOG_SCHEMA)
+    if log is None:
+        return spark.createDataFrame([], "doc_id string, cluster_id string")
     return connected_components(log.where(F.col("ratio") >= tau).select("id_a", "id_b"))

@@ -56,8 +56,6 @@ agreements into match decisions) -- net-new engine surface.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -362,10 +360,8 @@ def greedy_one_to_one(
     iteration the pair was matched in (round 1 = the mutual-best set; a
     value-checkable convergence trace).  Rounds needed = the length of the
     longest preference chain — O(log E) expected on noisy-similarity
-    graphs, worst case a monotone score path.  If edges remain after
-    ``max_rounds`` the result is the greedy PREFIX (every returned pair is
-    final — later rounds can only add pairs, never change earlier ones) and
-    a RuntimeWarning names the leftover edge count.
+    graphs, worst case a monotone score path.  Edges left after
+    ``max_rounds`` raise RuntimeError rather than return a partial matching.
 
     Scale shape: the active edge set shrinks geometrically in practice;
     each round shuffles only (id, score)-width rows; localCheckpoint per
@@ -379,8 +375,6 @@ def greedy_one_to_one(
         s = s.where(F.col("score") >= min_score)
     s = s.localCheckpoint()
     matched = []
-    leftover = 0
-    exhausted = True
     for rnd in range(1, max_rounds + 1):
         m = _mutual_best(s).localCheckpoint()
         # one action per round: the matched count is both the convergence
@@ -388,7 +382,6 @@ def greedy_one_to_one(
         # yields >= 1 locally-dominant edge, so n_matched == 0 iff the
         # active set is empty)
         if m.count() == 0:
-            exhausted = False
             break
         matched.append(m.withColumn("round", F.lit(rnd)))
         s = (
@@ -396,17 +389,13 @@ def greedy_one_to_one(
             .join(m.select("id_b"), "id_b", "left_anti")
             .localCheckpoint()
         )
-    if exhausted and matched:
+    else:
         leftover = s.count()
-    if leftover:
-        warnings.warn(
-            f"greedy_one_to_one stopped at max_rounds={max_rounds} with "
-            f"{leftover} candidate edges unprocessed; the returned matching "
-            "is the greedy prefix (all returned pairs are final). Raise "
-            "max_rounds to run to the fixpoint.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+        if leftover:
+            raise RuntimeError(
+                f"greedy_one_to_one did not finish within max_rounds={max_rounds} "
+                f"rounds: {leftover} candidate edges left"
+            )
     if not matched:
         return s.select(
             "id_a", "id_b", F.col("score").alias(score_col),

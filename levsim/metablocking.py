@@ -48,7 +48,6 @@ def comparison_edges(
     id_col: str = "doc_id",
     key_col: str = "block_key",
     max_block_size: int | None = None,
-    share_blocks: bool = True,
 ) -> DataFrame:
     """(id_a, id_b, cbs, arcs_ppm) for every distinct co-blocked pair.
 
@@ -63,13 +62,10 @@ def comparison_edges(
     the dedup aggregate AND the size window both run exchange-free on
     top of it (HashPartitioning(_bk) satisfies both distributions); the
     old groupBy(sizes)+join round-trip recomputed the distinct twice and
-    added two more exchanges.  ``share_blocks`` then materializes the
-    table once (lazy localCheckpoint) for BOTH self-join branches: in the
-    broadcast regime the two sides otherwise recompute union+dedup+window
-    independently (measured 16.4s -> 2.2s on the round-7 q10 bench,
-    identical edges).
-    Set ``share_blocks=False`` on a real cluster to keep lineage-based
-    fault recovery and let ReuseExchange dedup the SMJ-regime plan.
+    added two more exchanges.  The table is then materialized once (lazy
+    localCheckpoint) for BOTH self-join branches: in the broadcast regime
+    the two sides otherwise recompute union+dedup+window independently
+    (measured 16.4s -> 2.2s on the round-7 q10 bench, identical edges).
     """
     b = (
         blocks.select(F.col(key_col).alias("_bk"), F.col(id_col).alias("_id"))
@@ -88,8 +84,7 @@ def comparison_edges(
         "_w_ppm",
         F.expr(f"cast({_PPM} as bigint) div (_bsz * (_bsz - 1) div 2)"),
     )
-    if share_blocks:
-        b = b.localCheckpoint(eager=False)
+    b = b.localCheckpoint(eager=False)
     lhs = b.select("_bk", F.col("_id").alias("id_a"), "_w_ppm")
     rhs = b.select("_bk", F.col("_id").alias("id_b"))
     return (

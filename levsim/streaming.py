@@ -27,9 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import blocking, candidates, normalize
-from .tables import PAGES_SCHEMA
-
-KEY_TABLE_SCHEMA = "doc_id string, block_pass string, block_key string, batch int"
+from .tables import KEY_TABLE_SCHEMA, PAGES_SCHEMA, read_log
 
 
 def _batch_of(name: str) -> int:
@@ -89,14 +87,6 @@ def _publish(df: DataFrame, directory: str, batch: int) -> None:
     shutil.rmtree(stage)
 
 
-def _read_batches(spark: SparkSession, directory: str) -> Optional[DataFrame]:
-    """The committed key rows of ``directory``, or None before the first (a
-    given schema spares the footer-reading job of schema inference)."""
-    if os.path.isdir(directory) and any(_batch_of(n) >= 0 for n in os.listdir(directory)):
-        return spark.read.schema(KEY_TABLE_SCHEMA).parquet(directory)
-    return None
-
-
 def _first_landings(spark: SparkSession, files: List[str],
                     keyed: Optional[DataFrame]) -> DataFrame:
     """The pages of ``files``, one per url (``normalize.one_page_per_url``),
@@ -119,7 +109,7 @@ def run_incremental_pairs(spark: SparkSession, input_dir: str, output_dir: str,
         return None
     key_dir = os.path.join(checkpoint_dir, "keys")
     pages = normalize.with_normalized(
-        _first_landings(spark, files, _read_batches(spark, key_dir)))
+        _first_landings(spark, files, read_log(spark, key_dir, KEY_TABLE_SCHEMA)))
     _publish(blocking.add_block_keys(pages, id_col="url").withColumn("batch", F.lit(batch)),
              key_dir, batch)
 

@@ -71,6 +71,11 @@ PAGES_SCHEMA = StructType(
     ]
 )
 
+# the catch-up's append-only logs (levsim.streaming, levsim.incremental); ids
+# are page urls, as in the pipeline's snapshots
+KEY_TABLE_SCHEMA = "doc_id string, block_pass string, block_key string, batch int"
+MATCHES_LOG_SCHEMA = "id_a string, id_b string, ratio double, jaro_winkler double"
+
 
 def _entity_text(rng: np.random.RandomState, n_words: int) -> str:
     return " ".join(_WORDS[i] for i in rng.randint(0, len(_WORDS), size=n_words))
@@ -180,21 +185,12 @@ def _parquet_files(path: str) -> List[str]:
     return sorted(out)
 
 
-# footer key under which Spark's parquet writer stores the Spark schema
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def read_parquet_log(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` for an append-only log that Spark wrote,
-    without a schema-inference job: the schema is the Spark schema in the
-    first data file's footer, read in the driver.  That is the footer Spark's
-    own inference reads; a log without one is read by inference."""
-    files = _parquet_files(path)
-    meta = pq.read_schema(files[0]).metadata if files else None
-    if not meta or _SPARK_SCHEMA_KEY not in meta:
-        return spark.read.parquet(path)
-    schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
-    return spark.read.schema(schema).parquet(path)
+def read_log(spark: SparkSession, path: str, schema: str) -> Optional[DataFrame]:
+    """An append-only parquet log read with its declared ``schema`` (no
+    schema-inference job), or None while ``path`` holds no visible data file:
+    absent, empty, or holding only what a crashed first append left
+    (``_temporary/``)."""
+    return spark.read.schema(schema).parquet(path) if _parquet_files(path) else None
 
 
 @dataclass

@@ -26,6 +26,28 @@ A = [p[0] for p in PAIRS]
 B = [p[1] for p in PAIRS]
 
 
+def _long_pairs(n=80, seed=20261020):
+    """Pairs of 1-140 characters, half of them near matches, so distances
+    fall on both sides of the banded-DP/Myers switch (cutoff 64) and the
+    strings on both sides of Myers' 64-character word boundary."""
+    r = random.Random(seed)
+    out = []
+    for i in range(n):
+        a = "".join(r.choice(ALPHA) for _ in range(r.randint(1, 140)))
+        if i % 2:
+            b = "".join(r.choice(ALPHA) for _ in range(r.randint(1, 140)))
+        else:
+            b = list(a)
+            for _ in range(r.randint(0, 70)):
+                b[r.randrange(len(b))] = r.choice("xyz")
+            b = "".join(b)[:r.randint(1, len(b))] or "x"
+        out.append((a, b))
+    return out
+
+
+LONG = _long_pairs()
+
+
 def test_c_kernels_available():
     import os
 
@@ -34,11 +56,13 @@ def test_c_kernels_available():
     assert cbuild.load() is not None, "C accelerator failed to build (gcc present)"
 
 
-@pytest.mark.parametrize("cutoff", [None, 0, 1, 5, 100])
+@pytest.mark.parametrize("cutoff", [None, 0, 1, 5, 63, 64, 100, 200])
 def test_batch_distance(cutoff):
-    got, nulls = batch.batch_distance(A, B, score_cutoff=cutoff)
+    pairs = PAIRS + LONG
+    got, nulls = batch.batch_distance([p[0] for p in pairs], [p[1] for p in pairs],
+                                      score_cutoff=cutoff)
     assert not nulls.any()
-    exp = [K.distance(a, b, score_cutoff=cutoff) for a, b in PAIRS]
+    exp = [K.distance(a, b, score_cutoff=cutoff) for a, b in pairs]
     np.testing.assert_array_equal(got, exp)
 
 
@@ -142,15 +166,16 @@ def test_python_fallback_identical(monkeypatch):
     np.testing.assert_allclose(gr, er, rtol=0, atol=0)
 
 
-@pytest.mark.parametrize("cutoff", [None, 0, 3, 64, 500])
-@pytest.mark.parametrize("hint", [0, 1, 2, 8, 63, 64, 1000])
+@pytest.mark.parametrize("cutoff", [None, 0, 3, 63, 64, 200, 500])
+@pytest.mark.parametrize("hint", [0, 1, 2, 4, 8, 63, 64, 200, 1000])
 def test_batch_distance_score_hint_identity(cutoff, hint):
     """score_hint is perf-only: band-doubling results must be IDENTICAL to
     the no-hint kernel for every (cutoff, hint) combination — including
     hints far below and far above the true distance."""
-    got, nulls = batch.batch_distance(A, B, score_cutoff=cutoff, score_hint=hint)
+    a, b = A + [p[0] for p in LONG], B + [p[1] for p in LONG]
+    got, nulls = batch.batch_distance(a, b, score_cutoff=cutoff, score_hint=hint)
     assert not nulls.any()
-    exp, _ = batch.batch_distance(A, B, score_cutoff=cutoff)
+    exp, _ = batch.batch_distance(a, b, score_cutoff=cutoff)
     np.testing.assert_array_equal(got, exp)
 
 

@@ -83,6 +83,41 @@ def test_incremental_er_equals_batch(spark, tmp_path):
     assert inc == {c for c in er if len(c) > 1}
 
 
+def test_catch_up_survives_crashed_first_scoring_append(spark, tmp_path):
+    """A driver killed during the first ``score_new_pairs`` append leaves
+    ``matches/_temporary/0/`` and no data file: the log reads as empty, so
+    the next catch-up scores and logs every pair once and its clusters are
+    the batch's."""
+    full = spark.createDataFrame(
+        tables.generate_pages_pdf(n_entities=20, seed=7).drop(columns=["entity_id"]))
+    in_dir, pairs_out = str(tmp_path / "in"), str(tmp_path / "pairs")
+    full.coalesce(1).write.parquet(in_dir)
+    assert streaming.run_incremental_pairs(spark, in_dir, pairs_out, str(tmp_path / "ck")) == 0
+    matches = tmp_path / "matches"
+    (matches / "_temporary" / "0").mkdir(parents=True)
+    matches = str(matches)
+    empty = incremental.refresh_clusters(spark, matches)
+    assert empty.columns == ["doc_id", "cluster_id"] and empty.count() == 0
+
+    norm = normalize.with_normalized(full)
+    docs = norm.select(F.col("url").alias("doc_id"), "norm_text")
+    pairs = spark.read.parquet(pairs_out)
+    n = incremental.score_new_pairs(spark, pairs, docs, matches)
+    logged = spark.read.parquet(matches).select("id_a", "id_b").collect()
+    assert n == len(logged) > 0
+    assert Counter(map(tuple, logged)) == Counter(
+        map(tuple, pairs.select("id_a", "id_b").collect()))
+    assert incremental.score_new_pairs(spark, pairs, docs, matches) == 0
+
+    cand = candidates.candidate_pairs(blocking.add_block_keys(norm, id_col="url"),
+                                      keep_pass_provenance=False)
+    scored = scoring.score_pairs(scoring.attach_texts(cand, docs), scorers=("ratio",))
+    batch = clustering.connected_components(
+        scored.where(F.col("ratio") >= scoring.TAU).select("id_a", "id_b"))
+    got = _clusters_as_partition(incremental.refresh_clusters(spark, matches).collect())
+    assert got and got == _clusters_as_partition(batch.collect())
+
+
 def test_relanded_url_is_one_page(spark, tmp_path):
     """A url that lands twice with different text is one page, its first
     landing, in the batch and in the catch-up: one ``clusters`` row per url,

@@ -307,15 +307,10 @@ def test_greedy_one_to_one_rounds_and_chain(spark):
     got = {(r.id_a, r.id_b): (r.score_ppm, r.round)
            for r in greedy_one_to_one(s).collect()}
     assert got == {(1, 101): (90, 1), (2, 102): (70, 2), (3, 103): (50, 3)}
-    # max_rounds prefix + warning
-    import warnings as W
-
-    with W.catch_warnings(record=True) as caught:
-        W.simplefilter("always")
-        prefix = {(r.id_a, r.id_b)
-                  for r in greedy_one_to_one(s, max_rounds=2).collect()}
-    assert prefix == {(1, 101), (2, 102)}
-    assert any("greedy prefix" in str(c.message) for c in caught)
+    # exactly enough rounds finish; one fewer fails loudly, no prefix
+    assert {(r.id_a, r.id_b) for r in greedy_one_to_one(s, max_rounds=3).collect()} == set(got)
+    with pytest.raises(RuntimeError, match="max_rounds=2 rounds: 1 candidate edges left"):
+        greedy_one_to_one(s, max_rounds=2)
 
 
 def test_greedy_one_to_one_empty(spark):

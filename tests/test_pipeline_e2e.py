@@ -38,6 +38,19 @@ def test_pipeline_f1(spark, pages, tmp_path):
     assert m["f1"] >= 0.99, m
 
 
+def test_pair_f1_counts(spark):
+    """tp/fp/fn are set counts: duplicates ignored, a NULL id matches nothing."""
+    schema = "id_a string, id_b string"
+    pred = spark.createDataFrame([("a", "b"), ("a", "b"), ("a", "c"), (None, "d")], schema)
+    truth = spark.createDataFrame([("a", "b"), ("b", "c"), ("b", "c"), (None, "d")], schema)
+    m = evaluate.pair_f1(pred, truth)
+    assert (m["tp"], m["fp"], m["fn"]) == (1, 2, 2)
+    assert m["precision"] == m["recall"] == pytest.approx(1 / 3)
+    empty = spark.createDataFrame([], schema)
+    assert evaluate.pair_f1(empty, empty) == {"tp": 0, "fp": 0, "fn": 0, "precision": 1.0,
+                                              "recall": 1.0, "f1": 1.0}
+
+
 def test_pipeline_resume(spark, pages, tmp_path):
     # resume keys on the input files, so the pages come from a parquet copy
     # (an in-memory DataFrame never resumes)

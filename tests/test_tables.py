@@ -196,26 +196,30 @@ def test_snapshot_old_manifest_reads_by_inference(spark, tmp_path):
     assert got.count() == 17 == t.write(df, "legacy").row_count
 
 
-def test_read_parquet_log_without_inference(spark, tmp_path):
-    """An append-only log Spark wrote reads with the schema of its first
-    file's footer and runs no job; a log without Spark's footer key (or an
-    empty directory's missing files) falls back to inference."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def test_read_log_declared_schema(spark, tmp_path):
+    """An append-only log reads with its declared schema and runs no job;
+    a directory with no visible data file reads as None: absent, empty, or
+    holding only what a crashed first append leaves."""
+    from pyspark.sql.types import StructType
 
-    from levsim.tables import read_parquet_log
+    from levsim.tables import MATCHES_LOG_SCHEMA, read_log
 
     log = str(tmp_path / "log")
     for k in range(2):
         spark.range(k * 10, k * 10 + 10).selectExpr(
-            "id AS id_a", "id + 1 AS id_b", "cast(id AS double) / 20 AS ratio",
-            "true AS scored").write.mode("append").parquet(log)
+            "cast(id AS string) AS id_a", "cast(id + 1 AS string) AS id_b",
+            "cast(id AS double) / 20 AS ratio", "cast(NULL AS double) AS jaro_winkler",
+        ).write.mode("append").parquet(log)
     df, jobs = _jobs_in(spark, "test_read_log_no_job",
-                        lambda: read_parquet_log(spark, log))
+                        lambda: read_log(spark, log, MATCHES_LOG_SCHEMA))
     assert jobs == [], jobs
-    assert df.schema == spark.read.parquet(log).schema
+    assert df.schema == StructType.fromDDL(MATCHES_LOG_SCHEMA)
     assert df.count() == 20
-    plain = str(tmp_path / "plain")
-    (tmp_path / "plain").mkdir()
-    pq.write_table(pa.table({"x": [1, 2, 3]}), f"{plain}/part-0.parquet")
-    assert read_parquet_log(spark, plain).schema == spark.read.parquet(plain).schema
+    assert read_log(spark, str(tmp_path / "absent"), MATCHES_LOG_SCHEMA) is None
+    (tmp_path / "empty").mkdir()
+    assert read_log(spark, str(tmp_path / "empty"), MATCHES_LOG_SCHEMA) is None
+    crashed = tmp_path / "crashed"
+    (crashed / "_temporary" / "0" / "task_0").mkdir(parents=True)
+    (crashed / "_temporary" / "0" / "task_0" / "part-00000.parquet").touch()
+    (crashed / "_SUCCESS").touch()
+    assert read_log(spark, str(crashed), MATCHES_LOG_SCHEMA) is None
